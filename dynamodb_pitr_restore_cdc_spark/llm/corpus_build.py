@@ -241,14 +241,22 @@ def q_llm_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = tempfile.mkdtemp(prefix="corpusbuild-")
     idx = LshIndex(spark, os.path.join(base, "t"))
-    # Scoped drill width — the _run_maintenance split: dedup/init and
-    # the manifest tail are partition-count-independent aggs/joins over
-    # ≤5000-doc frames (per-job scheduling dominates; width 4 wins),
-    # while the drop-set verify is the real compute and runs at session
-    # width.  r16 interleaved same-session A/B (median of 5, variants
-    # alternated per run): scoped 5.09 s / full pin 5.54 s / no pin
-    # 7.46 s — the full unpin this round briefly carried was measured
-    # worse and reverted to this scoped form.
+    # Scoped drill width. What executes where (every frame here is
+    # lazy, so a phase runs under the width of the ACTION that
+    # triggers it):
+    # - first pin: the exact dedup and the index init, whose bucket
+    #   write (table_files.repartition_by_bucket) also takes the pinned
+    #   width, min(32 buckets, pin) parallel write tasks;
+    # - session width: only drop_set's eager part, the folded index
+    #   read and the dropset_gate aggregate (the verify plan it returns
+    #   is lazy);
+    # - second pin: everything else at result.count() — the banded
+    #   candidate join, the exact-Jaccard verify, the anti-join and the
+    #   manifest tail, all aggs/joins over ≤5000-doc frames where
+    #   per-job scheduling dominates (width 4 wins).
+    # r16 interleaved same-session A/B (median of 5, variants
+    # alternated per run): this scoped form 5.09 s / full pin 5.54 s /
+    # no pin 7.46 s.
     with pinned_shuffle_width(spark):
         deduped = tracked_persist(quality_exact_dedup(docs))
         idx.init(deduped.select("doc_id", "text"))

@@ -880,13 +880,31 @@ _DRIVER_VERIFIED_R15: frozenset[str] = frozenset(
 # form by tests/test_split_files.py, so the streams consume unchanged
 # input; and q_cdc_dlq_redrive's RedriveStore.deliver concurrency,
 # whose commit protocol and outputs are unchanged (tests/test_redrive
-# + its R16 seed).  Window math: 28 seeds + the 2 remaining age-5 r10
-# tail entries (q_stream_static_join, q_stream_schema_evolution —
-# near_dedup and interval_join moved into the seed set) + the 20
-# oldest of the 42-query r11 cohort = 50; the displaced r11-cohort
-# entries stay guarded by the local parity suite.
+# + its R16 seed).
+#
+# The shared bucket write (table_files.repartition_by_bucket: an
+# explicit-width hash exchange replacing the AQE-coalesced
+# repartition on the bucket column in all four sinks) changes the
+# executed write lifecycle of every sink-path query: which task
+# writes which bucket file, never the rows.  Seeded: the sink-path
+# drills that exercise the write sites directly — the delta/iceberg
+# fold, MOR-fold and optimize family, q_stream_versioned_sink and
+# q_llm_corpus_build (already seeds above), plus q_cdc_bucketed_sink
+# and q_cdc_sink_compaction (BucketedCdcSink.apply_batch and
+# .compact, the two bucketed-sink sites).  Narrow full-window
+# exception for the other sink consumers (shared_sink time-travel/
+# changefeed readers, MOR ingest drills, index maintenance and
+# manifest drills), whose builder text is untouched: one file per
+# (bucket, commit) is pinned for all four sinks by
+# tests/test_bucket_write.py, and parity covers all at two SFs.
+# Window math: 30 seeds + the 2 remaining age-5 r10 tail entries
+# (q_stream_static_join, q_stream_schema_evolution — near_dedup and
+# interval_join moved into the seed set) + the 18 oldest of the
+# 42-query r11 cohort = 50; the displaced r11-cohort entries stay
+# guarded by the local parity suite.
 _REVERIFY_R16: frozenset[str] = frozenset(
     {
+        "q_cdc_bucketed_sink", "q_cdc_sink_compaction",
         "q_stream_alert_routing", "q_stream_anomaly",
         "q_cdc_dlq_redrive", "q_stream_versioned_sink",
         "q_cdc_delta_log_fold", "q_cdc_delta_schema_evolution",

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.cdc import cdc_merge_tombstone, visible
+from .table_files import repartition_by_bucket
 
 N_BUCKETS_DEFAULT = 32
 
@@ -76,12 +77,12 @@ class BucketedCdcSink:
         merged = cdc_merge_tombstone(
             current.drop("bucket"), batch.drop("bucket"), key=key
         ).withColumn("bucket", self._bucket(F.col(key)))
-        # one output file per bucket (hash-repartition on the partition
-        # column) — otherwise every task writes a sliver into every
-        # touched bucket and the sink accretes small files
-        merged = merged.repartition("bucket")
-        # break lineage before overwriting partitions we just read
-        merged = merged.localCheckpoint(eager=True)
+        # one output file per touched bucket, buckets spread over
+        # parallel tasks (table_files.repartition_by_bucket); lineage
+        # is broken before overwriting partitions we just read
+        merged = repartition_by_bucket(merged, self.n_buckets).localCheckpoint(
+            eager=True
+        )
         (
             merged.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -115,7 +116,7 @@ class BucketedCdcSink:
         if not dirty:
             return
         kept = snap.where(F.col("bucket").isin(dirty)).where(~expired)
-        kept = kept.repartition("bucket").localCheckpoint(eager=True)
+        kept = repartition_by_bucket(kept, self.n_buckets).localCheckpoint(eager=True)
         (
             kept.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

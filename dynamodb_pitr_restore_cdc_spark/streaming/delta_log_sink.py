@@ -332,7 +332,9 @@ class DeltaLogSink:
                     }
                 ),
             }
-            for i in write_bucketed_files(bucketed, self.path, rel_dir)
+            for i in write_bucketed_files(
+                bucketed, self.path, rel_dir, self._transform()[1]
+            )
         ]
 
     def _read_adds(self, adds: list[dict], schema_json: str) -> DataFrame:
@@ -584,10 +586,11 @@ class DeltaLogSink:
         ``mor``, in one commit with NO reads and NO removes — Delta's
         always-compatible append, O(batch) regardless of table size.
         Each add's stats carry ``numRemoves`` (one file per bucket per
-        commit — repartition("bucket") — so the batch's per-bucket
-        remove counts ARE per-file counts), which optimize_plan reads.
-        Append commits never conflict semantically, so a lost race
-        retries at the next version without recomputing anything.
+        commit — table_files.repartition_by_bucket — so the batch's
+        per-bucket remove counts ARE per-file counts), which
+        optimize_plan reads. Append commits never conflict
+        semantically, so a lost race retries at the next version
+        without recomputing anything.
         ``key`` defaults to the table's persisted mergeKey — the
         hardcoded-default defect class the round-8 review flagged."""
         last: Exception | None = None

@@ -638,7 +638,9 @@ class IcebergLogSink:
                     "upper_bounds": i.maxs,
                 },
             }
-            for i in write_bucketed_files(bucketed, self.path, rel_dir)
+            for i in write_bucketed_files(
+                bucketed, self.path, rel_dir, self._transform()[1]
+            )
         ]
 
     def _read_entries(self, entries: list[dict], schema_json: str) -> DataFrame:

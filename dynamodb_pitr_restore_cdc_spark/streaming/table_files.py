@@ -33,20 +33,41 @@ class DataFileInfo:
     maxs: dict
 
 
+def repartition_by_bucket(bucketed: DataFrame, n_buckets: int) -> DataFrame:
+    """The one bucket-write exchange every sink uses before its
+    partitionBy("bucket") write: a hash exchange on ``bucket``, so each
+    bucket lands in exactly one task and every (bucket, commit) pair
+    yields exactly one file, with no small-file slivers.
+
+    The partition count is EXPLICIT, min(n_buckets, the frame's own
+    session spark.sql.shuffle.partitions): AQE coalesces a by-column
+    exchange (a repartition on the column alone) into one partition at
+    these sizes, so one task would write every bucket file of the
+    commit serially; a by-number exchange is never coalesced. A width
+    pin around the write (util.pinned_shuffle_width) governs it like
+    any shuffle.
+
+    Apply it LAST: CollapseRepartition lets an outer repartition
+    replace this one silently."""
+    width = int(bucketed.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return bucketed.repartition(min(n_buckets, width), "bucket")
+
+
 def write_bucketed_files(
-    bucketed: DataFrame, table_path: str, rel_dir: str
+    bucketed: DataFrame, table_path: str, rel_dir: str, n_buckets: int
 ) -> list[DataFileInfo]:
     """Write one commit ATTEMPT's data files (immutable, attempt-scoped
     dir — the caller embeds a uuid so a crashed or race-losing attempt
     can never collide with a retry) and collect their footer-derived
     stats: a driver-side parquet-metadata peek, not a data scan.
-    repartition("bucket") puts each bucket in one task, so every
-    (bucket, commit) pair yields exactly one file."""
+    repartition_by_bucket puts each bucket in one task (buckets spread
+    over parallel tasks), so every (bucket, commit) pair yields exactly
+    one file."""
     import pyarrow.parquet as pq
 
     out = os.path.join(table_path, rel_dir)
     (
-        bucketed.repartition("bucket")
+        repartition_by_bucket(bucketed, n_buckets)
         .write.mode("error")
         .partitionBy("bucket")
         .parquet(out)

@@ -40,25 +40,6 @@ def drill_width(spark) -> int:
 
 
 @contextlib.contextmanager
-def scoped_conf(spark, pairs: dict[str, str]):
-    """Set session confs for a drill's stream start, RESTORED in a
-    finally (same invariant as pinned_shuffle_width: micro-batch
-    execution clones the session conf at stream start, so the scope
-    only needs to cover .start())."""
-    prev = {k: spark.conf.get(k, None) for k in pairs}
-    for k, v in pairs.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
-@contextlib.contextmanager
 def pinned_shuffle_width(spark, n: int | None = None):
     """Pin spark.sql.shuffle.partitions for a streaming drill, RESTORED
     in a finally (the streaming invariant in CLAUDE.md). Streams started

@@ -73,6 +73,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.cdc import cdc_merge_tombstone, visible
+from .table_files import repartition_by_bucket
 
 N_BUCKETS_DEFAULT = 32
 SHARD_SIZE_DEFAULT = 1024  # buckets per manifest shard file
@@ -499,16 +500,16 @@ class VersionedCdcSink:
 
     def _write_buckets(self, df: DataFrame, token: str, key: str) -> list[int]:
         """Write df (tombstoned rows) into per-bucket dirs under
-        data/<token>; returns the bucket ids actually written. Token
-        dirs are unique per commit ATTEMPT, so concurrent writers can
-        never scribble on each other's (or committed) data."""
+        data/<token>, one file per bucket (the shared
+        table_files.repartition_by_bucket exchange); returns the bucket
+        ids actually written. Token dirs are unique per commit ATTEMPT,
+        so concurrent writers can never scribble on each other's (or
+        committed) data."""
         bucketed = df.withColumn("bucket", self._bucket(F.col(key)))
         self._schema = df.schema
         out = os.path.join(self.path, "data", token)
-        # one file per bucket: repartition on the partition column so the
-        # write doesn't scatter slivers of every bucket across every task
         (
-            bucketed.repartition("bucket")
+            repartition_by_bucket(bucketed, self.n_buckets)
             .write.mode("overwrite")
             .partitionBy("bucket")
             .parquet(out)

@@ -897,9 +897,21 @@ _DRIVER_VERIFIED_R15: frozenset[str] = frozenset(
 # manifest drills), whose builder text is untouched: one file per
 # (bucket, commit) is pinned for all four sinks by
 # tests/test_bucket_write.py, and parity covers all at two SFs.
-# Window math: 30 seeds + the 2 remaining age-5 r10 tail entries
+#
+# The shared commit core (streaming/log_table.LogTable: one optimistic
+# commit loop plus apply_batch/compact/compact_mor/append/snapshot/
+# changes_between for both the Delta- and Iceberg-shaped sinks)
+# re-implements every sink path those sinks execute; its Spark actions
+# run in the same order, except that a blind append now detects an
+# empty batch from its per-bucket count job and commits nothing.
+# The seven fold/evo/optimize/MOR sink drills (whose fold and
+# optimize-plan builders now share log_table's drill bodies) and the
+# index-maintenance drills are seeds above; added: q_stream_mor_ingest
+# and q_stream_mor_ingest_iceberg (append / optimize_plan /
+# compact_mor through the core, builder text untouched).
+# Window math: 32 seeds + the 2 remaining age-5 r10 tail entries
 # (q_stream_static_join, q_stream_schema_evolution — near_dedup and
-# interval_join moved into the seed set) + the 18 oldest of the
+# interval_join moved into the seed set) + the 16 oldest of the
 # 42-query r11 cohort = 50; the displaced r11-cohort entries stay
 # guarded by the local parity suite.
 _REVERIFY_R16: frozenset[str] = frozenset(
@@ -919,6 +931,7 @@ _REVERIFY_R16: frozenset[str] = frozenset(
         "q_stream_watermark_late", "q_stream_complete_mode",
         "q_stream_interval_join", "q_stream_anomaly_zscore",
         "q_stream_stateful_sessions", "q_stream_stateful_totals",
+        "q_stream_mor_ingest", "q_stream_mor_ingest_iceberg",
     }
 )
 

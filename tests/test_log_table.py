@@ -1,0 +1,148 @@
+"""The shared commit core (streaming/log_table.py) under both formats:
+its error contract and its empty-batch rules.
+
+The first two groups need no Spark: every path they drive fails at
+its pin, before any data is touched, so the sinks run with
+``spark=None`` on hand-written metadata."""
+
+import json
+import os
+
+import pandas as pd
+import pytest
+
+from dynamodb_pitr_restore_cdc_spark.streaming.delta_log_sink import DeltaLogSink
+from dynamodb_pitr_restore_cdc_spark.streaming.iceberg_log_sink import (
+    IcebergLogSink,
+)
+
+FORMATS = {"delta": DeltaLogSink, "iceberg": IcebergLogSink}
+SCHEMA = json.dumps(
+    {
+        "type": "struct",
+        "fields": [
+            {"name": n, "type": t, "nullable": True, "metadata": {}}
+            for n, t in (
+                ("key", "long"),
+                ("last_seq", "long"),
+                ("payload_value", "double"),
+                ("op", "string"),
+            )
+        ],
+    }
+)
+
+CALLS = {
+    "optimize_plan": lambda s: s.optimize_plan(100, 3, 15),
+    "append": lambda s: s.append(None),
+    "snapshot": lambda s: s.snapshot(),
+    "latest_version": lambda s: s.latest_version(),
+}
+
+
+@pytest.mark.parametrize("call", sorted(CALLS))
+@pytest.mark.parametrize("fmt", sorted(FORMATS))
+def test_never_initialised_table_is_a_value_error(tmp_path, fmt, call):
+    # a table nobody init-ed is a user error: it must surface as the
+    # ValueError itself, never as a RuntimeError from retries burnt on
+    # a "race" that cannot resolve
+    sink = FORMATS[fmt](None, str(tmp_path / "t"), n_buckets=4)
+    with pytest.raises(ValueError):  # a RuntimeError would escape this
+        CALLS[call](sink)
+
+
+def _delta_without_commit_1(path: str) -> DeltaLogSink:
+    sink = DeltaLogSink(None, path, n_buckets=4)
+    sink._commit(
+        1,
+        [
+            {"commitInfo": {"operation": "CREATE TABLE AS SELECT"}},
+            {
+                "metaData": {
+                    "schemaString": SCHEMA,
+                    "partitionColumns": ["bucket"],
+                    "configuration": {
+                        "mergeKey": "key",
+                        "bucketTransform": "bucket[4]",
+                    },
+                }
+            },
+        ],
+    )
+    sink._commit(2, [{"commitInfo": {"operation": "WRITE"}}])
+    os.remove(sink._log_path(1))  # no checkpoint covers it
+    return sink
+
+
+def _iceberg_without_manifest_list(path: str) -> IcebergLogSink:
+    sink = IcebergLogSink(None, path, n_buckets=4)
+    meta = {
+        "format-version": 2,
+        "table-uuid": "0" * 32,
+        "schema": SCHEMA,
+        "schemas": [{"schema-id": 0, "schema": SCHEMA}],
+        "current-schema-id": 0,
+        "partition-spec": [
+            {"name": "bucket", "transform": "bucket[4]", "source": "key"}
+        ],
+        "snapshots": [],
+        "current-snapshot-id": None,
+    }
+    snap = sink._snapshot_shell(None, [], "append")
+    sink._commit_snapshot(1, meta, snap)
+    os.remove(os.path.join(sink.path, snap["manifest-list"]))
+    return sink
+
+
+BROKEN = {
+    "delta": _delta_without_commit_1,
+    "iceberg": _iceberg_without_manifest_list,
+}
+WRITES = {
+    "compact": lambda s: s.compact(reorder_horizon_seq=10),
+    "compact_mor": lambda s: s.compact_mor({0, 1, 2, 3}),
+    "optimize_plan": lambda s: s.optimize_plan(100, 3, 15),
+}
+
+
+@pytest.mark.parametrize("call", sorted(WRITES))
+@pytest.mark.parametrize("fmt", sorted(BROKEN))
+def test_exhausted_retries_chain_the_pin_error(tmp_path, fmt, call):
+    # a state that can never be pinned again (Delta: a commit gone
+    # with no checkpoint; Iceberg: the current manifest list gone)
+    # exhausts the retries; the RuntimeError must carry the real cause
+    sink = BROKEN[fmt](str(tmp_path / "t"))
+    with pytest.raises(RuntimeError) as info:
+        WRITES[call](sink)
+    assert info.value.__cause__ is not None
+    assert isinstance(info.value.__cause__, (ValueError, FileNotFoundError))
+
+
+def _batch(spark, rows):
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=["key", "seq_no", "op", "payload_value"]),
+        schema="key long, seq_no long, op string, payload_value double",
+    )
+
+
+@pytest.mark.parametrize("fmt", sorted(FORMATS))
+def test_empty_append_commits_nothing_empty_merge_commits_once(
+    spark, tmp_path, fmt
+):
+    sink = FORMATS[fmt](spark, str(tmp_path / "t"), n_buckets=4)
+    sink.init(
+        spark.createDataFrame(
+            pd.DataFrame(
+                [(k, 0, float(k)) for k in range(4)],
+                columns=["key", "last_seq", "payload_value"],
+            ),
+            schema="key long, last_seq long, payload_value double",
+        )
+    )
+    v = sink.latest_version()
+    sink.append(_batch(spark, []))  # blind append: no no-op commit
+    assert sink.latest_version() == v
+    # a MERGE commits even when empty: one version per micro-batch
+    sink.apply_batch(_batch(spark, []))
+    assert sink.latest_version() == v + 1
+    assert sorted(r.key for r in sink.visible().collect()) == [0, 1, 2, 3]

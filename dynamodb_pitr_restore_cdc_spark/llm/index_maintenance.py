@@ -38,7 +38,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..registry import register, tracked_persist
+from ..registry import register, release_checkpoint, tracked_checkpoint, tracked_persist
 from ..sources import table
 from ..streaming.delta_log_sink import DeltaLogSink
 from .dedup import (
@@ -192,41 +192,47 @@ class IvfIndex:
     def __init__(self, spark: SparkSession, path: str, n_buckets: int = 32):
         self.spark = spark
         self.sink = DeltaLogSink(spark, path, n_buckets=n_buckets)
-        self._cents: DataFrame | None = None
+        self._cells: list | None = None
 
     def _quantizer_path(self) -> str:
         return os.path.join(self.sink.path, "quantizer")
 
-    def _centroids(self) -> DataFrame:
-        """The frozen centroids — persisted at init next to the log so
-        a FRESH handle (or a later session) can still maintain and
-        search the durable index; a never-trained index fails loudly
-        instead of broadcasting None."""
-        if self._cents is None:
+    def _centroids(self) -> list:
+        """The frozen centroids, on the driver (kmeans.Cells) — persisted
+        at init next to the log so a FRESH handle (or a later session)
+        can still maintain and search the durable index; a never-trained
+        index fails loudly instead of assigning against nothing."""
+        if self._cells is None:
+            from .kmeans import centroid_cells
+
             p = self._quantizer_path()
             if not os.path.isdir(p):
                 raise ValueError(
                     f"no trained quantizer at {p}: init() trains it; "
                     f"retraining is an index REBUILD by design"
                 )
-            self._cents = self.spark.read.parquet(p)
-        return self._cents
+            self._cells = centroid_cells(self.spark.read.parquet(p))
+        return self._cells
 
     def init(self, vectors: DataFrame, seq: int = 1) -> None:
         """Train the quantizer on `vectors` (vec_id, qv — must contain
         vec_id 1..K, the deterministic seeds), persist it beside the
-        log, and fold the cell assignments as the starting state."""
-        from .kmeans import _assign, kmeans_centroids
+        log, and fold the cell assignments as the starting state. The
+        vectors are checkpointed once for the seed read, every update
+        and the assignment, and released after the fold."""
+        from .kmeans import _assign, centroid_cells, kmeans_centroids
 
+        vectors = tracked_checkpoint(vectors)
         cents = kmeans_centroids(vectors, k=self.K, iters=self.ITERS)
         cents.write.mode("overwrite").parquet(self._quantizer_path())
-        self._cents = cents
+        self._cells = centroid_cells(cents)
         self.sink.init(
-            _assign(vectors, cents)
+            _assign(vectors, self._cells)
             .select("vec_id", "cid")
             .withColumn("last_seq", F.lit(seq).cast("long")),
             key="vec_id",
         )
+        release_checkpoint(vectors)
 
     def upsert(self, vectors: DataFrame, seq: int) -> None:
         """Assign a batch with the FROZEN centroids and blind-append —
@@ -251,25 +257,22 @@ class IvfIndex:
         )
 
     def search(self, probe_q: DataFrame, floats: DataFrame, probe_id: int) -> DataFrame:
-        """Top-5 cosine ANN over the CURRENT index state: rank the
-        probe against the frozen centroids (K rows), read only the
-        NPROBE nearest cells' members from the folded index, score
+        """Top-5 cosine ANN over the CURRENT index state: the probe's
+        NPROBE nearest frozen cells (the map-side kernel, in its row),
+        read only those cells' members from the folded index, score
         candidates exactly against the float embeddings — the shared
         probe tail (similarity.ivf_probe_topk, one implementation with
         q_llm_ann_ivf)."""
-        from .kmeans import assignment_ranking
+        from .kmeans import nearest_cells
         from .similarity import ivf_probe_topk
 
-        probe_cells = (
-            assignment_ranking(probe_q, self._centroids())
-            .where(F.col("rn") <= self.NPROBE)
-            .select("cid")
-        )
-        probe = floats.where(F.col("vec_id") == probe_id).select(
-            F.col("v").alias("pv")
+        probe = probe_q.select(
+            F.explode(nearest_cells(self._centroids(), self.NPROBE)).alias("cid")
+        ).crossJoin(
+            floats.where(F.col("vec_id") == probe_id).select(F.col("v").alias("pv"))
         )
         members = self.sink.visible().select("vec_id", "cid").join(floats, "vec_id")
-        return ivf_probe_topk(members, probe_cells, probe)
+        return ivf_probe_topk(members, probe)
 
 
 # ---------------------------------------------------------------------------

@@ -10,19 +10,34 @@ assignment distance and centroid mean is EXACT integer arithmetic —
 bit-identical results under any partitioning, the same discipline as
 functions/rounding.py.
 
-Shape per iteration: broadcast K centroids → map-only argmin
-assignment → one shuffle keyed (cluster, dim) for the exact integer
-means → rebuild centroid arrays (sorted structs, so collect order is
-canonical). The driver holds only K×64 ints between iterations —
-orchestration, not data.
+One map-side nearest-cell kernel serves training, list build and
+probe. The K centroids travel as ONE row value (`cell_row`: an array
+of struct(cid, cv) sorted by cid), and each vector meets every cell
+inside its own row: the assignment is
+array_min(transform(cells, c -> struct(d2, cid))).cid (`nearest_cell`,
+the (d2, cid) tie-break), the ranking is the posexplode of the
+array_sort of the same structs (`assignment_ranking`, rn = pos + 1).
+No n×K row is ever materialised, sorted or shuffled — the argmin is
+NOT min(struct(d2, cid)) over a broadcast cross join, whose struct
+aggregation buffer is not hash-aggregable: both its partial and final
+aggregates plan as SortAggregate and sort the n×K cross product.
+
+Shape per Lloyd update: the kernel → one hash-aggregated groupBy(cid)
+of count(*) and the per-dimension sums (only K rows per map task leave
+the partial aggregate) → `div` → collect. The driver holds the K×64
+longs between updates — orchestration, not data — so an update is one
+aggregation job with one hash exchange.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+import json
+
+import pandas as pd
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..registry import register
+from ..registry import register, tracked_checkpoint
 from ..sources import table
 
 K = 8
@@ -40,98 +55,161 @@ def quantize_expr(col):
     )
 
 
-def int_sq_dist():
-    """Exact integer squared-L2 between the `qv` and `cv` array columns."""
+def int_sq_dist(a="qv", b="cv") -> Column:
+    """Exact integer squared-L2 between two array<bigint> columns."""
     return F.aggregate(
-        F.zip_with("qv", "cv", lambda x, y: (x - y) * (x - y)),
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
 
 
-def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # rebalance off the one-split scan: every trainer/encoder stage
-    # downstream (Lloyd assigns, PQ codebooks, residual encode) inherits
-    # this partitioning through its localCheckpoints, so without the
-    # exchange the whole ANN family's integer vector math runs on a
-    # single core (r15 profile: 0.9-1.4 s one-task stages per iteration)
+def _quantized(spark: SparkSession, sf_dir: str, floats: bool = False) -> DataFrame:
+    """(vec_id, qv) — plus the double vector `v` with `floats` — spread
+    off the one-split scan: every trainer/encoder stage downstream
+    (Lloyd updates, PQ codebooks, residual encode, the IVF list build)
+    inherits this partitioning through its checkpoints, so without the
+    exchange the whole ANN family's integer vector math runs on a
+    single core (r15 profile: 0.9-1.4 s one-task stages per iteration)."""
     e = table(spark, sf_dir, "embeddings").repartition(
         spark.sparkContext.defaultParallelism
     )
-    return e.select("vec_id", quantize_expr(F.col("embedding")).alias("qv"))
+    cols = [F.col("vec_id"), quantize_expr(F.col("embedding")).alias("qv")]
+    if floats:
+        cols.append(
+            F.transform("embedding", lambda x: x.cast("double")).alias("v")
+        )
+    return e.select(*cols)
 
 
-def assignment_ranking(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Every (vector, centroid) pair ranked by exact integer squared-L2
-    (ties broken by cid): rn=1 is the cluster assignment; rn<=nprobe is
-    the IVF probe set. K centroids broadcast. Window-based — use only
-    on SMALL vector sets (the probe's cell ranking, tests); full-corpus
-    assignment goes through _assign's partial-aggregating argmin."""
-    w = W.partitionBy("vec_id").orderBy("d2", "cid")
-    return (
-        vectors.crossJoin(F.broadcast(centroids))
-        .withColumn("d2", int_sq_dist())
-        .withColumn("rn", F.row_number().over(w))
+# Cells = driver-held [(cid, cv), ...] sorted by cid: K×dim longs.
+Cells = list[tuple[int, list[int]]]
+_CELL_TYPE = "array<struct<cid:bigint,cv:array<bigint>>>"
+
+
+def centroid_cells(centroids: DataFrame | Cells) -> Cells:
+    """The centroids on the driver, sorted by cid. Collecting a frame
+    this module returns (`centroids_frame`, a local relation) runs no
+    Spark job; a parquet-backed one (IvfIndex) costs one small job."""
+    if isinstance(centroids, list):
+        return centroids
+    return sorted((int(r.cid), [int(x) for x in r.cv]) for r in centroids.collect())
+
+
+def centroids_frame(spark: SparkSession, cells: Cells) -> DataFrame:
+    """The public (cid, cv) frame of driver-held cells. Built from
+    pandas, so with Arrow on (session.py / tune_session) it is a local
+    relation: collecting it back runs no job."""
+    pdf = pd.DataFrame(
+        {"cid": [c for c, _ in cells], "cv": [cv for _, cv in cells]}
+    )
+    return spark.createDataFrame(pdf, "cid bigint, cv array<bigint>")
+
+
+def cell_row(centroids: DataFrame | Cells) -> Column:
+    """The centroids as ONE row value: array<struct<cid, cv>> sorted by
+    cid. The carrier is a single JSON string literal read by from_json,
+    which constant folding evaluates once per plan, so the analyzer
+    sees one node and executors one folded literal. A literal built
+    from F.lit objects makes one py4j call per component, and
+    array(named_struct(...)) SQL text costs planning time linear in
+    K×64 (measured on a 4-core VM: 0.05 s at K=142, 0.3 s at K=1000,
+    against a flat ~0.03 s here). The folded literal ships with every
+    task (K×64×8 bytes: 0.5 MB at K=1000), so the carrier stays
+    sensible up to K of about a thousand (n ≈ 10^6 under
+    ivf_cell_count); past that, carry the cells as a broadcast
+    one-row frame instead."""
+    cells = centroid_cells(centroids)
+    text = json.dumps([{"cid": c, "cv": cv} for c, cv in cells])
+    return F.from_json(F.lit(text), _CELL_TYPE)
+
+
+def _cell_distances(centroids: DataFrame | Cells, qv: str | Column = "qv") -> Column:
+    """Per row: array<struct<d2, cid>> over every cell — the kernel."""
+    return F.transform(
+        cell_row(centroids),
+        lambda c: F.struct(
+            int_sq_dist(qv, c["cv"]).alias("d2"), c["cid"].alias("cid")
+        ),
     )
 
 
-def _assign(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Broadcast-argmin cluster assignment (exact integer distances).
+def nearest_cell(centroids: DataFrame | Cells, qv: str | Column = "qv") -> Column:
+    """The assigned cid: argmin of (d2, cid), computed in the row."""
+    return F.array_min(_cell_distances(centroids, qv))["cid"]
 
-    min(struct(d2, cid, qv)) instead of a row_number window: the argmin
-    is a partial-aggregatable min, so each map partition pre-reduces
-    its n×K candidate rows to one row per vector BEFORE the shuffle —
-    the exchange carries O(n) small rows, not the n×K cross product
-    with both 64-dim arrays attached (measured 2.6x on q_llm_ann_ivf at
-    sf0.1, and the gap widens with K = sqrt(n)). Tie-break (d2, cid)
-    is identical to assignment_ranking's ORDER BY; qv rides along via
-    first() (one value per vec_id), keeping the min-struct comparisons
-    two scalar longs inside codegen."""
+
+def nearest_cells(
+    centroids: DataFrame | Cells, n: int, qv: str | Column = "qv"
+) -> Column:
+    """The n nearest cids in rank order — an IVF probe set, in the row."""
+    return F.transform(
+        F.slice(F.array_sort(_cell_distances(centroids, qv)), 1, n),
+        lambda c: c["cid"],
+    )
+
+
+def assignment_ranking(vectors: DataFrame, centroids: DataFrame | Cells) -> DataFrame:
+    """(vec_id, cid, d2, rn): every (vector, cell) pair ranked by exact
+    integer squared-L2, ties broken by cid — rn=1 is the assignment,
+    rn<=nprobe the IVF probe set. Map-side: the posexplode of each
+    row's sorted cell distances (no window, no shuffle)."""
+    ranked = F.array_sort(_cell_distances(centroids))
+    return vectors.select("vec_id", F.posexplode(ranked).alias("pos", "c")).select(
+        "vec_id",
+        F.col("c.cid").alias("cid"),
+        F.col("c.d2").alias("d2"),
+        (F.col("pos") + 1).alias("rn"),
+    )
+
+
+def _assign(vectors: DataFrame, centroids: DataFrame | Cells) -> DataFrame:
+    """`vectors` plus its nearest `cid` — map-only."""
+    return vectors.withColumn("cid", nearest_cell(centroids))
+
+
+def lloyd_means(vectors: DataFrame, cells: Cells) -> DataFrame:
+    """(cid, cv): one Lloyd update with exact integer means — the
+    kernel, then hash-aggregated count(*) and per-dimension sums per
+    assigned cell, then `div` (truncating, as DuckDB `//` in the
+    oracle). A cell left without members vanishes, so K can shrink."""
+    dim = len(cells[0][1])
+    qv = F.col("qv")
     return (
-        vectors.crossJoin(F.broadcast(centroids))
-        .withColumn("d2", int_sq_dist())
-        .groupBy("vec_id")
+        _assign(vectors.select("qv"), cells)
+        .groupBy("cid")
         .agg(
-            F.min(F.struct("d2", "cid")).alias("best"),
-            F.first("qv").alias("qv"),
+            F.count("*").alias("n"),
+            F.array(*(F.sum(qv[i]) for i in range(dim))).alias("s"),
         )
-        .select("vec_id", "qv", F.col("best.cid").alias("cid"))
+        .select("cid", F.expr("transform(s, x -> x div n)").alias("cv"))
     )
 
 
 def kmeans_centroids(vectors: DataFrame, k: int = K, iters: int = ITERS) -> DataFrame:
-    """The trained quantizer: initial centroids are the vectors with
-    vec_id 1..k; `iters` Lloyd updates with exact integer means. The
-    returned (cid, cv) DataFrame is localCheckpointed (k tiny rows), so
-    downstream plans can reference it from multiple branches without
-    re-running the iterative job (no cross-branch CSE in Catalyst)."""
-    centroids = (
-        vectors.where(F.col("vec_id").between(1, k))
-        .select(F.col("vec_id").alias("cid"), F.col("qv").alias("cv"))
+    """The trained quantizer as a (cid, cv) frame: initial centroids are
+    the vectors with vec_id 1..k, then `iters` Lloyd updates with the
+    centroids on the driver in between. Each update reads `vectors`
+    once — pass a checkpointed frame. The result is a local relation,
+    so multi-branch consumers never re-run the iterative job."""
+    seeds = vectors.where(F.col("vec_id").between(1, k)).select(
+        F.col("vec_id").alias("cid"), F.col("qv").alias("cv")
     )
+    cells = centroid_cells(seeds)
     for _ in range(iters):
-        assigned = _assign(vectors, centroids)
-        dims = assigned.select(
-            "cid", F.posexplode("qv").alias("pos", "val")
-        )
-        means = dims.groupBy("cid", "pos").agg(
-            F.expr("sum(val) div count(*)").alias("m")  # exact integer mean
-        )
-        centroids = means.groupBy("cid").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s["m"]
-            ).alias("cv")
-        )
-        centroids = centroids.localCheckpoint(eager=True)  # cut the iterative lineage
-    return centroids
+        cells = centroid_cells(lloyd_means(vectors, cells))
+    return centroids_frame(vectors.sparkSession, cells)
 
 
 def kmeans_fit(vectors: DataFrame, k: int = K, iters: int = ITERS) -> DataFrame:
     """Lloyd iterations with exact integer means; returns the final
     assignment (computed against the centroids after iters-1 updates —
-    the classic fit loop's last argmin pass)."""
-    centroids = kmeans_centroids(vectors, k=k, iters=iters - 1)
-    return _assign(vectors, centroids).select("vec_id", "cid")
+    the classic fit loop's last argmin pass). `vectors` is checkpointed
+    once for every update and the assignment; consume the result
+    before release_persisted()."""
+    vectors = tracked_checkpoint(vectors)
+    cents = kmeans_centroids(vectors, k=k, iters=iters - 1)
+    return _assign(vectors, cents).select("vec_id", "cid")
 
 
 EMBED_DIM = 64  # fixture contract (embeddings.embedding: array<float>[64])

@@ -74,10 +74,12 @@ def _subvectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _pq_assign(sub: DataFrame, centroids: DataFrame) -> DataFrame:
     """Per (vec_id, m) argmin over that subspace's codewords: join on m
-    (the codebook rows for one subspace broadcast), then the same
-    partial-aggregating min(struct(d2, cid)) as kmeans._assign — the
-    exchange carries one row per (vector, subspace), never the xK
-    candidate fan-out."""
+    (the codebook rows for one subspace broadcast), then
+    min(struct(d2, cid)) per (vec_id, m). A struct aggregation buffer
+    is not hash-aggregable, so the partial and final aggregates plan as
+    SortAggregate and sort the ×K candidate fan-out — the shape
+    kmeans.py replaced with its map-side nearest-cell kernel (not yet
+    ported here)."""
     cent = centroids.select(
         F.col("m").alias("cm"), "cid", "cv"
     )

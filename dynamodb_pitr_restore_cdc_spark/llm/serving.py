@@ -59,32 +59,22 @@ _FILTERED_INDEX_ROOT = pid_scoped_root("fivf")
 def filtered_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, v, cid, label): the IVF inverted lists with the
     filterable payload column, laid out partitionBy(cid, label) — one
-    corpus scan to build (same fused assignment as
-    similarity._cell_members), materialized once per (session, corpus).
-    Reading it with a label predicate must skip whole directories: the
-    serving filter prunes the scan, not the scored rows."""
+    corpus scan to build (the map-side nearest-cell kernel of
+    llm/kmeans.py, as in similarity._cell_members; no shuffle),
+    materialized once per (session, corpus). Reading it with a label
+    predicate must skip whole directories: the serving filter prunes
+    the scan, not the scored rows."""
     key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
     path = _FILTERED_INDEX_CACHE.get(key)
     if path is None or not os.path.isdir(path):
-        from .kmeans import int_sq_dist, quantize_expr
+        from .kmeans import nearest_cell, quantize_expr
 
         _, cents = trained_quantizer(spark, sf_dir)
-        e2 = table(spark, sf_dir, "embeddings").select(
+        members = table(spark, sf_dir, "embeddings").select(
             "vec_id",
-            "label",
             _as_double("embedding").alias("v"),
-            quantize_expr(F.col("embedding")).alias("qv"),
-        )
-        members = (
-            e2.crossJoin(F.broadcast(cents))
-            .withColumn("d2", int_sq_dist())
-            .groupBy("vec_id")
-            .agg(
-                F.min(F.struct("d2", "cid")).alias("best"),
-                F.first("v").alias("v"),
-                F.first("label").alias("label"),
-            )
-            .select("vec_id", "v", F.col("best.cid").alias("cid"), "label")
+            nearest_cell(cents, quantize_expr(F.col("embedding"))).alias("cid"),
+            "label",
         )
         path = os.path.join(_FILTERED_INDEX_ROOT, f"index-{uuid.uuid4().hex[:8]}")
         members.write.mode("overwrite").partitionBy("cid", "label").parquet(path)
@@ -126,12 +116,11 @@ WHERE rn <= {MULTIPROBE_TOP_K}
 
 def multiprobe_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The batched-serving probe plan (qid, cid, pv) for the standard
-    MULTIPROBE slice — ONE construction shared by the filtered builder,
-    the serving benches and the equivalence tests, so a change to the
-    probe-slice rule or the nprobe cut cannot desynchronize which query
-    batch two lanes answer.  (q_llm_ann_ivf_multiprobe in similarity.py
-    keeps its driver-verified inline copy this round; unify onto this
-    helper when that query next enters a reverify window.)"""
+    MULTIPROBE slice — ONE construction shared by
+    q_llm_ann_ivf_multiprobe, the filtered builder, the serving benches
+    and the equivalence tests, so a change to the probe-slice rule or
+    the nprobe cut cannot desynchronize which query batch two lanes
+    answer."""
     from .kmeans import assignment_ranking
 
     vectors, cents = trained_quantizer(spark, sf_dir)

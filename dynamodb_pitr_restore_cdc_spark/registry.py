@@ -542,6 +542,11 @@ _REVERIFY_R11: frozenset[str] = frozenset(
         # provably unchanged (metadata-only commit), but the lifecycle
         # the queries execute changed, so the driver re-proves them
         "q_stream_mor_ingest", "q_stream_mor_ingest_iceberg",
+        "q_llm_ann_ivf", "q_llm_kmeans",
+        "q_llm_ann_ivf_multiprobe", "q_llm_ann_ivf_filtered",
+        "q_llm_embed_neardup", "q_llm_ann_recall",
+        "q_stream_semantic_neardup", "q_llm_ann_ivfadc",
+        "q_llm_ann_ivfpq_residual",
     }
 )
 
@@ -909,9 +914,26 @@ _DRIVER_VERIFIED_R15: frozenset[str] = frozenset(
 # index-maintenance drills are seeds above; added: q_stream_mor_ingest
 # and q_stream_mor_ingest_iceberg (append / optimize_plan /
 # compact_mor through the core, builder text untouched).
-# Window math: 32 seeds + the 2 remaining age-5 r10 tail entries
+#
+# The map-side nearest-cell kernel (llm/kmeans.py: centroids as one
+# row value, array_min/array_sort argmin and ranking, hash-aggregated
+# Lloyd means with driver-held centroids; similarity._ivf_artifact:
+# one checkpointed scan for training and the list build) re-implements
+# every IVF quantizer path.  Builder text changed: q_llm_ann_ivf (one
+# (cid, pv) probe broadcast from the kernel), q_llm_ann_ivf_multiprobe
+# (its inline probe plan and top-k now ARE serving.multiprobe_plan and
+# probe_topk) and q_cdc_dlq_redrive (RedriveStore.kept_snapshot;
+# already a seed above).  Added as well: q_llm_kmeans (kmeans_fit now
+# checkpoints and trains through the kernel) and every other query
+# that executes the kernel with its builder text untouched —
+# q_llm_ann_ivf_filtered, q_llm_embed_neardup, q_llm_ann_recall,
+# q_stream_semantic_neardup, q_llm_ann_ivfadc, q_llm_ann_ivfpq_residual
+# — because none has an age-0 driver row, so the narrow full-window
+# exception does not apply to any of them (the IVF index drills, whose
+# IvfIndex changed, are seeds above).
+# Window math: 41 seeds + the 2 remaining age-5 r10 tail entries
 # (q_stream_static_join, q_stream_schema_evolution — near_dedup and
-# interval_join moved into the seed set) + the 16 oldest of the
+# interval_join moved into the seed set) + the 7 oldest of the
 # 42-query r11 cohort = 50; the displaced r11-cohort entries stay
 # guarded by the local parity suite.
 _REVERIFY_R16: frozenset[str] = frozenset(
@@ -932,6 +954,11 @@ _REVERIFY_R16: frozenset[str] = frozenset(
         "q_stream_interval_join", "q_stream_anomaly_zscore",
         "q_stream_stateful_sessions", "q_stream_stateful_totals",
         "q_stream_mor_ingest", "q_stream_mor_ingest_iceberg",
+        "q_llm_ann_ivf", "q_llm_kmeans",
+        "q_llm_ann_ivf_multiprobe", "q_llm_ann_ivf_filtered",
+        "q_llm_embed_neardup", "q_llm_ann_recall",
+        "q_stream_semantic_neardup", "q_llm_ann_ivfadc",
+        "q_llm_ann_ivfpq_residual",
     }
 )
 

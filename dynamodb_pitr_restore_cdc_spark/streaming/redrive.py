@@ -213,6 +213,22 @@ class RedriveStore:
             shutil.rmtree(os.path.join(self.root, stale), ignore_errors=True)
         return self.spark.read.schema(self._schema).parquet(accepted_path)
 
+    def kept_snapshot(self, dst: str) -> DataFrame:
+        """The last committed cycle's accepted rows, kept past the next
+        deliver(): its immutable files are HARDLINK-cloned into the new
+        dir `dst` (the versioned_sink expired_shared_sink pattern) and
+        read from there with the store's schema. No Spark job, and the
+        clone survives the store reclaiming accepted_v{n} on the next
+        commit."""
+        if self._version == 0:
+            raise ValueError(f"no committed cycle under {self.root}")
+        src = os.path.join(self.root, f"accepted_v{self._version}")
+        os.makedirs(dst)
+        for f in os.listdir(src):
+            if f.endswith(".parquet"):
+                os.link(os.path.join(src, f), os.path.join(dst, f))
+        return self.spark.read.schema(self._schema).parquet(dst)
+
     def has_pending(self) -> bool:
         p = self.pending()
         return p is not None and bool(p.take(1))
@@ -321,23 +337,14 @@ def q_cdc_dlq_redrive(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = cl
     for i in range(MAX_RECEIVES):  # cycle 1 delivers; 2-5 are redelivery ticks
         store.deliver(batch, try_reject)
-        # consume the cycle's accepted snapshot by HARDLINK-CLONING its
-        # immutable files into a query-private dir (the versioned_sink
-        # expired_shared_sink pattern) instead of an eager
-        # localCheckpoint: zero Spark jobs per cycle, the clone
-        # survives the store reclaiming accepted_v{n} on the next
-        # commit, and the rows are read ONCE by the final union+agg
-        # (r16: removes 5 sequential checkpoint jobs + their gaps)
-        src = os.path.join(root, f"accepted_v{store._version}")
-        dst = os.path.join(root, f"kept_c{i}")
-        os.makedirs(dst)
-        for f in os.listdir(src):
-            if f.endswith(".parquet"):
-                os.link(os.path.join(src, f), os.path.join(dst, f))
+        # consume the cycle's accepted rows as a kept snapshot (a
+        # hardlink clone, not an eager localCheckpoint: zero Spark jobs
+        # per cycle, and the rows are read ONCE by the final union+agg
+        # — r16: removes 5 sequential checkpoint jobs + their gaps)
         accepted_cycles.append(
-            spark.read.schema(store._schema)
-            .parquet(dst)
-            .select(F.lit("applied").alias("route"), F.col(RECEIVE_COUNT_COL))
+            store.kept_snapshot(os.path.join(root, f"kept_c{i}")).select(
+                F.lit("applied").alias("route"), F.col(RECEIVE_COUNT_COL)
+            )
         )
         batch = empty
 

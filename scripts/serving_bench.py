@@ -86,7 +86,7 @@ def main() -> None:
                 .select("cid")
             )
             probe = e.where(F.col("vec_id") == pid).select(F.col("v").alias("pv"))
-            ivf_probe_topk(members, probe_cells, probe).write.format(
+            ivf_probe_topk(members, probe_cells.crossJoin(probe)).write.format(
                 "noop"
             ).mode("overwrite").save()
         return time.perf_counter() - t0

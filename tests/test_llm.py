@@ -2,6 +2,8 @@
 quality (minhash estimate accuracy, simhash Hamming separation) and
 ANN consistency with the brute-force baseline."""
 
+import os
+
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -734,3 +736,77 @@ def test_simhash_oracle_ascii_precondition():
             "ord()-based crc32 fold in _SIMHASH_SKETCH_CTES no longer "
             "matches zlib.crc32 over UTF-8 bytes"
         )
+
+
+def _tie_corpus(src_dir: str, dst) -> str:
+    """The fixture embeddings with planted exact ties: vec 2 := vec 1
+    and vec 5 := vec 3 (two pairs of identical SEEDS, so cells 2 and 5
+    tie cells 1 and 3 on every distance and lose on cid), and vecs
+    100-149 := vec 1 (a block of identical members)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{src_dir}/embeddings.parquet")
+    emb = dict(zip(t.column("vec_id").to_pylist(), t.column("embedding").to_pylist()))
+    copy_of = {2: 1, 5: 3, **{i: 1 for i in range(100, 150)}}
+    col = [emb[copy_of.get(v, v)] for v in t.column("vec_id").to_pylist()]
+    i = t.schema.get_field_index("embedding")
+    t = t.set_column(i, t.schema.field(i), pa.array(col, type=t.schema.field(i).type))
+    dst.mkdir()
+    pq.write_table(t, str(dst / "embeddings.parquet"))
+    return str(dst)
+
+
+def test_quantizer_is_exact_under_planted_ties(spark, tmp_path):
+    """Exact-tie property of the nearest-cell kernel: with identical
+    seeds and identical members the (d2, cid) tie-break must pick the
+    same cells as the DuckDB Lloyd unroll, so the trained centroids
+    equal the oracle's c{IVF_TRAIN_ITERS} rows exactly — cells 2 and 5
+    lose every tie and vanish (K 23 -> 21 at sf0.01) — and
+    q_llm_ann_ivf still matches its oracle. Same at sf0.001 for the
+    K-sweep values k=4 (cell 5 is no seed) and k=12."""
+    import duckdb
+
+    from dynamodb_pitr_restore_cdc_spark.llm.kmeans import (
+        assignment_ranking,
+        lloyd_oracle_ctes,
+    )
+    from dynamodb_pitr_restore_cdc_spark.llm.similarity import (
+        IVF_TRAIN_ITERS,
+        _ivf_oracle_prefix,
+        trained_quantizer,
+    )
+    from dynamodb_pitr_restore_cdc_spark.registry import release_persisted
+
+    from .conftest import SF_SMOKE
+    from .parity import assert_parity
+
+    def oracle(d, sql):
+        con = duckdb.connect()
+        con.execute(
+            f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{d}/embeddings.parquet')"
+        )
+        return con.execute(sql).fetchdf()
+
+    def check(d, k, prefix, want_k):
+        vectors, cents = trained_quantizer(spark, d, k=k)
+        got = sorted((r.cid, list(r.cv)) for r in cents.collect())
+        want = oracle(d, f"WITH {prefix} SELECT cid, cv FROM c{IVF_TRAIN_ITERS}")
+        assert got == sorted((int(c), [int(x) for x in v]) for c, v in want.values)
+        assert len(got) == want_k and {2, 5}.isdisjoint(c for c, _ in got)
+        asg = {
+            (r.vec_id, r.cid)
+            for r in assignment_ranking(vectors, cents).where("rn = 1").collect()
+        }
+        want_asg = oracle(d, f"WITH {prefix} SELECT vec_id, cid FROM asg")
+        assert asg == {(int(v), int(c)) for v, c in want_asg.values}
+        release_persisted()
+
+    d01 = _tie_corpus(os.path.join(os.path.dirname(SF_SMOKE), "sf0.01"), tmp_path / "sf01")
+    check(d01, None, _ivf_oracle_prefix(), 21)
+    spec = SPECS["q_llm_ann_ivf"]
+    assert_parity(spec.builder(spark, d01), oracle(d01, spec.oracle), "q_llm_ann_ivf")
+
+    d001 = _tie_corpus(SF_SMOKE, tmp_path / "sf001")
+    for k, want_k in ((4, 3), (12, 10)):
+        check(d001, k, lloyd_oracle_ctes(str(k), IVF_TRAIN_ITERS), want_k)

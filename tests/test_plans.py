@@ -827,3 +827,66 @@ def test_dedup_dropset_twophase_plan_runs_both_phases(plans):
     assert p.count("LeftAnti") >= 2
     # both phases' drop sets union before the final distinct
     assert "Union" in p
+
+
+def test_ivf_quantizer_is_one_map_side_kernel(spark, sf_dir, plans):
+    """The IVF quantizer's three plans (a Lloyd update, the inverted-list
+    build, q_llm_ann_ivf's result) run the map-side nearest-cell kernel:
+    no SortAggregate (a min(struct(d2, cid)) argmin over the n×K cross
+    product plans as one) and no Window anywhere. The update's only
+    exchange is its one hash exchange on cid; the list build over the
+    training checkpoint has none."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from dynamodb_pitr_restore_cdc_spark.llm.kmeans import (
+        _quantized,
+        centroid_cells,
+        lloyd_means,
+    )
+    from dynamodb_pitr_restore_cdc_spark.llm.similarity import _ivf_lists
+    from dynamodb_pitr_restore_cdc_spark.registry import (
+        release_checkpoint,
+        tracked_checkpoint,
+    )
+
+    corpus = tracked_checkpoint(_quantized(spark, sf_dir, floats=True))
+    cells = centroid_cells(
+        corpus.where(F.col("vec_id").between(1, 8)).select(
+            F.col("vec_id").alias("cid"), F.col("qv").alias("cv")
+        )
+    )
+    update = plan_string(lloyd_means(corpus, cells))
+    lists = plan_string(_ivf_lists(corpus, cells))
+    release_checkpoint(corpus)
+    for name, p in (
+        ("update", update),
+        ("list build", lists),
+        ("q_llm_ann_ivf", plans("q_llm_ann_ivf")),
+    ):
+        assert "SortAggregate" not in p, name
+        assert not re.search(r"\bWindow\b", p), name
+    exchanges = re.findall(
+        r"^\(\d+\) Exchange\nInput.*\nArguments: (\w+)", update, re.M
+    )
+    assert exchanges == ["hashpartitioning"], exchanges
+    assert "Exchange" not in lists
+
+
+def test_cold_ann_ivf_job_count(spark, sf_dir, tmp_path):
+    """One cold q_llm_ann_ivf (a corpus the session has never indexed:
+    training, list build and probe) runs at most 20 Spark jobs — a
+    structural count that host noise cannot move (38 with the
+    sort-aggregate argmin, per-update re-scans and a windowed probe)."""
+    import shutil
+
+    from dynamodb_pitr_restore_cdc_spark.registry import release_persisted
+
+    shutil.copy(f"{sf_dir}/embeddings.parquet", tmp_path / "embeddings.parquet")
+    st = spark.sparkContext.statusTracker()
+    before = set(st.getJobIdsForGroup(None))
+    SPECS["q_llm_ann_ivf"].builder(spark, str(tmp_path)).collect()
+    n_jobs = len(set(st.getJobIdsForGroup(None)) - before)
+    release_persisted()
+    assert n_jobs <= 20, n_jobs

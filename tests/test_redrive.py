@@ -108,3 +108,20 @@ def test_epoch_replay_does_not_duplicate_dlq(spark, root):
     for s in (store, RedriveStore(spark, root, max_receives=1)):
         s.deliver(_batch(spark, n=4), reject_all, epoch_id=7)
         assert sorted(r.seq_no for r in s.dlq().collect()) == dlq_once
+
+
+def test_kept_snapshot_survives_the_next_deliver(spark, root):
+    """kept_snapshot(dst) clones the committed cycle's accepted rows:
+    the next deliver() reclaims accepted_v{n}, the kept copy still
+    reads the same rows (the q_cdc_dlq_redrive consumption shape)."""
+    store = RedriveStore(spark, root)
+    with pytest.raises(ValueError, match="no committed cycle"):
+        store.kept_snapshot(os.path.join(root, "kept_none"))
+    store.deliver(_batch(spark), _reject_odd)
+    kept = store.kept_snapshot(os.path.join(root, "kept_c0"))
+    want = {(0, 1), (2, 1), (4, 1), (6, 1), (8, 1)}
+    assert {(r.seq_no, r[RECEIVE_COUNT_COL]) for r in kept.collect()} == want
+
+    store.deliver(_batch(spark).where(F.lit(False)), _reject_odd)
+    assert not os.path.exists(os.path.join(root, "accepted_v1"))  # reclaimed
+    assert {(r.seq_no, r[RECEIVE_COUNT_COL]) for r in kept.collect()} == want

@@ -70,8 +70,20 @@ def test_filtered_serving_prunes_the_index_scan(spark, sf_dir):
         .count()
     )
     assert idx_scan["numPartitions"] < n_dirs / 3, (idx_scan, n_dirs)
-    # ...and emitted exactly the label slice, never the full lists
-    assert idx_scan["numOutputRows"] == n_label, (idx_scan, n_label)
+    # ...and emitted exactly the label slice of the probed cells, never
+    # the full lists: dynamic partition pruning on cid (the broadcast
+    # probe plan's cells) skips the unprobed cells' label directories
+    probed = [
+        r.cid
+        for r in serving.multiprobe_plan(spark, sf_dir).select("cid").distinct().collect()
+    ]
+    n_probed = (
+        serving.filtered_index(spark, sf_dir)
+        .where((F.col("label") == serving.SERVE_LABEL) & F.col("cid").isin(probed))
+        .count()
+    )
+    assert 0 < n_probed <= n_label
+    assert idx_scan["numOutputRows"] == n_probed, (idx_scan, n_probed)
 
 
 def test_filtered_equals_post_filtered(spark, sf_dir):

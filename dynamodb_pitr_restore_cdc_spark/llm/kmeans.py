@@ -1,6 +1,6 @@
 """Distributed k-means over the embedding corpus — the iterative-
 algorithm workload (and the offline trainer for the IVF quantizer in
-similarity.py).
+similarity.py and the PQ codebooks in pq.py).
 
 Determinism at cluster scale: floating-point centroid updates are
 schedule-dependent (summation order), which makes k-means results
@@ -10,32 +10,39 @@ assignment distance and centroid mean is EXACT integer arithmetic —
 bit-identical results under any partitioning, the same discipline as
 functions/rounding.py.
 
-One map-side nearest-cell kernel serves training, list build and
-probe. The K centroids travel as ONE row value (`cell_row`: an array
-of struct(cid, cv) sorted by cid), and each vector meets every cell
-inside its own row: the assignment is
-array_min(transform(cells, c -> struct(d2, cid))).cid (`nearest_cell`,
-the (d2, cid) tie-break), the ranking is the posexplode of the
-array_sort of the same structs (`assignment_ranking`, rn = pos + 1).
-No n×K row is ever materialised, sorted or shuffled — the argmin is
-NOT min(struct(d2, cid)) over a broadcast cross join, whose struct
-aggregation buffer is not hash-aggregable: both its partial and final
-aggregates plan as SortAggregate and sort the n×K cross product.
+One nearest-cell kernel serves every quantizer: IVF training, list
+build and probes, IvfIndex, the serving index, kmeans_fit, and the PQ
+assign and codebook update (one cell set per subspace). It is one
+Arrow-batched numpy pass: per Arrow batch the vectors become an n×d
+int64 matrix and d2 = |x|² − 2·x·Cᵀ + |c|² is computed exactly in
+int64 against the K×d centroid matrix, which travels in the function
+closure. The cells are sorted by cid, so argmin (first minimum) and a
+stable argsort keep the oracle's (d2, cid) tie-break. numpy wraps on
+overflow where Spark's ANSI arithmetic raises, so the kernel first
+checks d·(max|x| + max|c|)² < 2⁶³, which bounds every intermediate,
+and raises ArithmeticError when it does not hold.
 
-Shape per Lloyd update: the kernel → one hash-aggregated groupBy(cid)
-of count(*) and the per-dimension sums (only K rows per map task leave
-the partial aggregate) → `div` → collect. The driver holds the K×64
-longs between updates — orchestration, not data — so an update is one
-aggregation job with one hash exchange.
+Spark meets the kernel in two shapes: a scalar Arrow UDF for the
+column functions (`nearest_cell`, `nearest_cells`), and mapInArrow for
+the frame functions (`assignment_ranking`, the keyed PQ assign, the
+Lloyd partials). No n×K row is materialised, sorted or shuffled.
+
+A Lloyd update (`lloyd_means`) is the kernel emitting per-task
+partials (cid, n, s): at most K rows per task. One hash aggregation on
+cid combines them with sum(n) and collect_list(s), folded element-wise,
+then the truncating `div`. The partials never reach the driver (P×K
+rows do not scale); the driver holds only the K×d means between
+updates — orchestration, not data.
 """
 
 from __future__ import annotations
 
-import json
-
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..registry import register, tracked_checkpoint
 from ..sources import table
@@ -56,7 +63,9 @@ def quantize_expr(col):
 
 
 def int_sq_dist(a="qv", b="cv") -> Column:
-    """Exact integer squared-L2 between two array<bigint> columns."""
+    """Exact integer squared-L2 between two array<bigint> columns — for
+    a handful of rows (the ADC distance tables); a vector against every
+    cell goes through the kernel."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
         F.lit(0).cast("long"),
@@ -74,17 +83,24 @@ def _quantized(spark: SparkSession, sf_dir: str, floats: bool = False) -> DataFr
     e = table(spark, sf_dir, "embeddings").repartition(
         spark.sparkContext.defaultParallelism
     )
+    return quantized_rows(e, floats)
+
+
+def quantized_rows(rows: DataFrame, floats: bool = False) -> DataFrame:
+    """(vec_id, qv) — plus `v` with `floats` — of embeddings rows as
+    they come. Probes quantize their rows straight off their own scan
+    this way: a probe set is a few rows, so the spread exchange of
+    `_quantized` (a map-stage job) would buy nothing."""
     cols = [F.col("vec_id"), quantize_expr(F.col("embedding")).alias("qv")]
     if floats:
         cols.append(
             F.transform("embedding", lambda x: x.cast("double")).alias("v")
         )
-    return e.select(*cols)
+    return rows.select(*cols)
 
 
 # Cells = driver-held [(cid, cv), ...] sorted by cid: K×dim longs.
 Cells = list[tuple[int, list[int]]]
-_CELL_TYPE = "array<struct<cid:bigint,cv:array<bigint>>>"
 
 
 def centroid_cells(centroids: DataFrame | Cells) -> Cells:
@@ -106,60 +122,140 @@ def centroids_frame(spark: SparkSession, cells: Cells) -> DataFrame:
     return spark.createDataFrame(pdf, "cid bigint, cv array<bigint>")
 
 
-def cell_row(centroids: DataFrame | Cells) -> Column:
-    """The centroids as ONE row value: array<struct<cid, cv>> sorted by
-    cid. The carrier is a single JSON string literal read by from_json,
-    which constant folding evaluates once per plan, so the analyzer
-    sees one node and executors one folded literal. A literal built
-    from F.lit objects makes one py4j call per component, and
-    array(named_struct(...)) SQL text costs planning time linear in
-    K×64 (measured on a 4-core VM: 0.05 s at K=142, 0.3 s at K=1000,
-    against a flat ~0.03 s here). The folded literal ships with every
-    task (K×64×8 bytes: 0.5 MB at K=1000), so the carrier stays
-    sensible up to K of about a thousand (n ≈ 10^6 under
-    ivf_cell_count); past that, carry the cells as a broadcast
-    one-row frame instead."""
-    cells = centroid_cells(centroids)
-    text = json.dumps([{"cid": c, "cv": cv} for c, cv in cells])
-    return F.from_json(F.lit(text), _CELL_TYPE)
+# ---------------------------------------------------------------------------
+# the kernel (numpy; runs inside Arrow batches on the executors)
+# ---------------------------------------------------------------------------
 
 
-def _cell_distances(centroids: DataFrame | Cells, qv: str | Column = "qv") -> Column:
-    """Per row: array<struct<d2, cid>> over every cell — the kernel."""
-    return F.transform(
-        cell_row(centroids),
-        lambda c: F.struct(
-            int_sq_dist(qv, c["cv"]).alias("d2"), c["cid"].alias("cid")
-        ),
-    )
+class CellMatrix:
+    """One cell set as the kernel reads it: cids (K,) ascending, the
+    K×d centroid matrix, |c|² per cell and max|c| for the guard."""
+
+    def __init__(self, cells: Cells):
+        if not cells:
+            raise ValueError("no cells: the nearest-cell kernel needs K >= 1")
+        cells = sorted(cells)
+        self.cids = np.array([c for c, _ in cells], dtype=np.int64)
+        self.c = np.array([cv for _, cv in cells], dtype=np.int64)
+        self.dim = self.c.shape[1]
+        self.cmax = _abs_max(self.c)
+        # wraps only when the guard below would refuse every vector anyway
+        self.cc = np.einsum("ij,ij->i", self.c, self.c)
+
+    def sq_dists(self, x: np.ndarray) -> np.ndarray:
+        """n×K exact integer squared-L2, |x|² − 2·x·Cᵀ + |c|²."""
+        if len(x) == 0:
+            return np.empty((0, len(self.cids)), dtype=np.int64)
+        xmax = _abs_max(x)
+        if self.dim * (xmax + self.cmax) ** 2 >= 2**63:
+            raise ArithmeticError(
+                f"squared-L2 of {self.dim}-dim vectors with components up "
+                f"to {xmax} against cells up to {self.cmax} overflows int64"
+            )
+        return (np.einsum("ij,ij->i", x, x)[:, None] - 2 * (x @ self.c.T)) + self.cc
+
+    def nearest(self, x: np.ndarray) -> np.ndarray:
+        """Row index into the cells of each vector's (d2, cid) argmin."""
+        return np.argmin(self.sq_dists(x), axis=1)
+
+    def ranked(self, x: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """(order, d2): each vector's cell indexes in (d2, cid) order."""
+        d2 = self.sq_dists(x)
+        return np.argsort(d2, axis=1, kind="stable"), d2
+
+
+def _abs_max(a: np.ndarray) -> int:
+    return max(int(a.max()), -int(a.min())) if a.size else 0
+
+
+def _matrix(col: pa.Array, dim: int) -> np.ndarray:
+    """A list<bigint> Arrow column as an n×dim int64 matrix."""
+    flat = col.flatten()
+    if col.null_count or flat.null_count or len(flat) != len(col) * dim:
+        raise ValueError(f"the kernel takes non-null {dim}-long vectors")
+    return flat.to_numpy(zero_copy_only=False).reshape(len(col), dim)
+
+
+def _list_array(m: np.ndarray) -> pa.ListArray:
+    """An n×w int64 matrix as a list<bigint> Arrow column."""
+    n, w = m.shape
+    offsets = pa.array(np.arange(0, (n + 1) * w, w, dtype=np.int32))
+    return pa.ListArray.from_arrays(offsets, pa.array(m.ravel()))
+
+
+def _cell_sets(books: dict) -> dict:
+    return {k: CellMatrix(cells) for k, cells in books.items()}
+
+
+def _row_groups(batch: pa.RecordBatch, key: str | None, vec: str, mats: dict):
+    """(key, cells, rows, x) per cell set present in an Arrow batch:
+    `rows` indexes the batch (None = all of it), `x` is their vectors.
+    Rows whose key has no cell set are skipped, as an inner join on
+    the key would drop them."""
+    dim = next(iter(mats.values())).dim
+    x = _matrix(batch.column(vec), dim)
+    if key is None:
+        yield None, mats[None], None, x
+        return
+    keys = batch.column(key).to_numpy(zero_copy_only=False)
+    for k in np.unique(keys):
+        cm = mats.get(int(k))
+        if cm is not None:
+            rows = np.flatnonzero(keys == k)
+            yield int(k), cm, rows, x[rows]
+
+
+# ---------------------------------------------------------------------------
+# the kernel in Spark
+# ---------------------------------------------------------------------------
 
 
 def nearest_cell(centroids: DataFrame | Cells, qv: str | Column = "qv") -> Column:
     """The assigned cid: argmin of (d2, cid), computed in the row."""
-    return F.array_min(_cell_distances(centroids, qv))["cid"]
+    cm = CellMatrix(centroid_cells(centroids))
+
+    def cell(col: pa.Array) -> pa.Array:
+        return pa.array(cm.cids[cm.nearest(_matrix(col, cm.dim))])
+
+    return F.arrow_udf(cell, "bigint")(qv)
 
 
 def nearest_cells(
     centroids: DataFrame | Cells, n: int, qv: str | Column = "qv"
 ) -> Column:
     """The n nearest cids in rank order — an IVF probe set, in the row."""
-    return F.transform(
-        F.slice(F.array_sort(_cell_distances(centroids, qv)), 1, n),
-        lambda c: c["cid"],
-    )
+    cm = CellMatrix(centroid_cells(centroids))
+
+    def cells(col: pa.Array) -> pa.Array:
+        order, _ = cm.ranked(_matrix(col, cm.dim))
+        return _list_array(cm.cids[order[:, :n]])
+
+    return F.arrow_udf(cells, "array<bigint>")(qv)
 
 
 def assignment_ranking(vectors: DataFrame, centroids: DataFrame | Cells) -> DataFrame:
     """(vec_id, cid, d2, rn): every (vector, cell) pair ranked by exact
     integer squared-L2, ties broken by cid — rn=1 is the assignment,
-    rn<=nprobe the IVF probe set. Map-side: the posexplode of each
-    row's sorted cell distances (no window, no shuffle)."""
-    ranked = F.array_sort(_cell_distances(centroids))
-    return vectors.select("vec_id", F.posexplode(ranked).alias("pos", "c")).select(
-        "vec_id",
-        F.col("c.cid").alias("cid"),
-        F.col("c.d2").alias("d2"),
-        (F.col("pos") + 1).alias("rn"),
+    rn<=nprobe the IVF probe set. Map-side: each vector's K cells in
+    (d2, cid) order, exploded to rn = pos + 1 (no window, no shuffle)."""
+    cm = CellMatrix(centroid_cells(centroids))
+
+    def rank(batches):
+        for b in batches:
+            order, d2 = cm.ranked(_matrix(b.column("qv"), cm.dim))
+            n, k = order.shape
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.repeat(b.column("vec_id").to_numpy(), k)),
+                    pa.array(cm.cids[order].ravel()),
+                    pa.array(np.take_along_axis(d2, order, axis=1).ravel()),
+                    pa.array(np.tile(np.arange(1, k + 1, dtype=np.int32), n)),
+                ],
+                names=["vec_id", "cid", "d2", "rn"],
+            )
+
+    return vectors.select("vec_id", "qv").mapInArrow(
+        rank, "vec_id bigint, cid bigint, d2 bigint, rn int"
     )
 
 
@@ -168,22 +264,87 @@ def _assign(vectors: DataFrame, centroids: DataFrame | Cells) -> DataFrame:
     return vectors.withColumn("cid", nearest_cell(centroids))
 
 
-def lloyd_means(vectors: DataFrame, cells: Cells) -> DataFrame:
-    """(cid, cv): one Lloyd update with exact integer means — the
-    kernel, then hash-aggregated count(*) and per-dimension sums per
-    assigned cell, then `div` (truncating, as DuckDB `//` in the
+def keyed_assign(frame: DataFrame, books: dict, key: str, vec: str) -> DataFrame:
+    """`frame` plus the `cid` nearest to its `vec` among the cells of
+    its `key` (`books`: key -> Cells; PQ: one codebook per subspace m).
+    Map-side; rows whose key has no cells are dropped."""
+    mats = _cell_sets(books)
+    schema = T.StructType([*frame.schema.fields, T.StructField("cid", T.LongType())])
+
+    def assign(batches):
+        for b in batches:
+            for _, cm, rows, x in _row_groups(b, key, vec, mats):
+                yield b.take(pa.array(rows)).append_column(
+                    "cid", pa.array(cm.cids[cm.nearest(x)])
+                )
+
+    return frame.mapInArrow(assign, schema)
+
+
+def lloyd_update(frame: DataFrame, books: dict, key: str | None, vec: str) -> DataFrame:
+    """One exact-integer Lloyd update of every cell set in `books`
+    ({key value: Cells}; key None = one set): the kernel emits per-task
+    partials ([key,] cid, n, s), at most K rows per set per task; one
+    hash aggregation on ([key,] cid) sums n and collects s, folded
+    element-wise, then `div` (truncating, as DuckDB `//` in the
     oracle). A cell left without members vanishes, so K can shrink."""
-    dim = len(cells[0][1])
-    qv = F.col("qv")
-    return (
-        _assign(vectors.select("qv"), cells)
-        .groupBy("cid")
-        .agg(
-            F.count("*").alias("n"),
-            F.array(*(F.sum(qv[i]) for i in range(dim))).alias("s"),
-        )
-        .select("cid", F.expr("transform(s, x -> x div n)").alias("cv"))
+    mats = _cell_sets(books)
+    dim = next(iter(mats.values())).dim
+    keys = [key] if key else []
+
+    def partials(batches):
+        acc = {
+            k: (np.zeros(len(cm.cids), np.int64), np.zeros((len(cm.cids), dim), np.int64))
+            for k, cm in mats.items()
+        }
+        seen, xmax = 0, 0
+        for b in batches:
+            for k, cm, _, x in _row_groups(b, key, vec, mats):
+                if not len(x):
+                    continue
+                seen, xmax = seen + len(x), max(xmax, _abs_max(x))
+                if seen * xmax >= 2**63:
+                    raise ArithmeticError("per-cell component sums overflow int64")
+                idx = cm.nearest(x)
+                order = np.argsort(idx, kind="stable")
+                sidx = idx[order]
+                starts = np.flatnonzero(np.r_[True, sidx[1:] != sidx[:-1]])
+                n, s = acc[k]
+                n += np.bincount(idx, minlength=len(n))
+                s[sidx[starts]] += np.add.reduceat(x[order], starts, axis=0)
+        for k, (n, s) in acc.items():
+            hit = np.flatnonzero(n)
+            if len(hit):
+                cols = [
+                    pa.array(mats[k].cids[hit]), pa.array(n[hit]), _list_array(s[hit])
+                ]
+                if key:
+                    cols.insert(0, pa.array(np.full(len(hit), k, dtype=np.int64)))
+                yield pa.RecordBatch.from_arrays(cols, names=[*keys, "cid", "n", "s"])
+
+    schema = ", ".join(
+        [*(f"{k} bigint" for k in keys), "cid bigint, n bigint, s array<bigint>"]
     )
+    return (
+        frame.select(*(F.col(k).cast("bigint").alias(k) for k in keys), vec)
+        .mapInArrow(partials, schema)
+        .groupBy(*keys, "cid")
+        .agg(F.sum("n").alias("n"), F.collect_list("s").alias("ss"))
+        .select(
+            *keys,
+            "cid",
+            F.expr(
+                f"transform(aggregate(ss, array_repeat(0L, {dim}),"
+                " (acc, s) -> zip_with(acc, s, (a, b) -> a + b)), x -> x div n)"
+            ).alias("cv"),
+        )
+    )
+
+
+def lloyd_means(vectors: DataFrame, cells: Cells) -> DataFrame:
+    """(cid, cv): one Lloyd update with exact integer means
+    (`lloyd_update` over the one cell set)."""
+    return lloyd_update(vectors, {None: cells}, None, "qv")
 
 
 def kmeans_centroids(vectors: DataFrame, k: int = K, iters: int = ITERS) -> DataFrame:

@@ -17,20 +17,34 @@ encoder, ADC scores — DuckDB-oracle-expressible: the oracle unrolls
 the identical Lloyd chain per subspace and must reproduce every code
 and every approximate distance bit-for-bit.
 
-All M subspaces train SIMULTANEOUSLY in one dataframe job: the corpus
-explodes to (vec_id, m, subvector) grain once, and the subspace id m
-simply joins every trainer shuffle key — M independent k-means for
-the price of one pipeline (no per-subspace driver loop).
+All M subspaces train SIMULTANEOUSLY: the corpus explodes to
+(vec_id, m, subvector) grain once, and every assignment runs
+kmeans.py's Arrow-batched nearest-cell kernel with one cell set per
+subspace m (`kmeans.keyed_assign`; no join, no aggregate). A codebook
+update is that kernel emitting per-task (m, cid, n, s) partials and
+one hash aggregation on (m, cid) (`kmeans.lloyd_update`) — M
+independent k-means for the price of one pass, with the M×K codebooks
+on the driver between updates (no per-subspace loop, no checkpoint).
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources import table
-from .kmeans import EMBED_DIM, QUANT, _quantized
+from .kmeans import (
+    EMBED_DIM,
+    QUANT,
+    Cells,
+    _quantized,
+    int_sq_dist,
+    keyed_assign,
+    lloyd_update,
+    quantized_rows,
+)
 
 M_SUBSPACES = 4
 SUB_DIM = EMBED_DIM // M_SUBSPACES  # 16
@@ -43,14 +57,6 @@ _D2_SQL = (
     "list_sum(list_transform(list_zip(s.sv, c.cv), "
     "z -> (z[1] - z[2]) * (z[1] - z[2])))"
 )
-
-
-def _int_sq_dist(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
 
 
 def subvectors_of(q: DataFrame) -> DataFrame:
@@ -72,52 +78,40 @@ def _subvectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return subvectors_of(_quantized(spark, sf_dir))
 
 
+def _books(centroids: DataFrame) -> dict[int, Cells]:
+    """The codebooks on the driver, {m: Cells}. Collecting a frame
+    `pq_codebooks` returned (a local relation) runs no job."""
+    books: dict[int, Cells] = {}
+    for r in centroids.collect():
+        books.setdefault(int(r.m), []).append((int(r.cid), [int(x) for x in r.cv]))
+    return {m: sorted(cells) for m, cells in books.items()}
+
+
 def _pq_assign(sub: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Per (vec_id, m) argmin over that subspace's codewords: join on m
-    (the codebook rows for one subspace broadcast), then
-    min(struct(d2, cid)) per (vec_id, m). A struct aggregation buffer
-    is not hash-aggregable, so the partial and final aggregates plan as
-    SortAggregate and sort the ×K candidate fan-out — the shape
-    kmeans.py replaced with its map-side nearest-cell kernel (not yet
-    ported here)."""
-    cent = centroids.select(
-        F.col("m").alias("cm"), "cid", "cv"
-    )
-    return (
-        sub.join(F.broadcast(cent), sub.m == cent.cm)
-        .withColumn("d2", _int_sq_dist(F.col("sv"), F.col("cv")))
-        .groupBy("vec_id", "m")
-        .agg(
-            F.min(F.struct("d2", "cid")).alias("best"),
-            F.first("sv").alias("sv"),
-        )
-        .select("vec_id", "m", "sv", F.col("best.cid").alias("cid"))
-    )
+    """(vec_id, m, sv, cid): each subvector's nearest codeword of its
+    own subspace — the nearest-cell kernel with one cell set per m,
+    map-side."""
+    return keyed_assign(sub, _books(centroids), "m", "sv")
 
 
 def pq_codebooks(sub: DataFrame, iters: int = PQ_ITERS) -> DataFrame:
     """M codebooks of PQ_K codewords each, trained by `iters` exact-
     integer Lloyd updates (init: the subvectors of vec_id 1..PQ_K,
-    per subspace). Returns (m, cid, cv); localCheckpointed — M x K
-    tiny rows — so encode + distance-table branches don't re-run the
-    iterative job."""
-    centroids = sub.where(F.col("vec_id").between(1, PQ_K)).select(
-        "m", F.col("vec_id").alias("cid"), F.col("sv").alias("cv")
+    per subspace). Returns (m, cid, cv) as a local relation — M x K
+    tiny rows held on the driver between updates — so encode and
+    distance-table branches never re-run the iterative job."""
+    books = _books(
+        sub.where(F.col("vec_id").between(1, PQ_K)).select(
+            "m", F.col("vec_id").alias("cid"), F.col("sv").alias("cv")
+        )
     )
     for _ in range(iters):
-        assigned = _pq_assign(sub, centroids)
-        dims = assigned.select("m", "cid", F.posexplode("sv").alias("pos", "val"))
-        means = dims.groupBy("m", "cid", "pos").agg(
-            F.expr("sum(val) div count(*)").alias("mean_val")
-        )
-        centroids = means.groupBy("m", "cid").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "mean_val"))),
-                lambda s: s["mean_val"],
-            ).alias("cv")
-        )
-        centroids = centroids.localCheckpoint(eager=True)
-    return centroids
+        books = _books(lloyd_update(sub, books, "m", "sv"))
+    pdf = pd.DataFrame(
+        [(m, cid, cv) for m in sorted(books) for cid, cv in books[m]],
+        columns=["m", "cid", "cv"],
+    )
+    return sub.sparkSession.createDataFrame(pdf, "m int, cid bigint, cv array<bigint>")
 
 
 def _pq_oracle_ctes(prefix: str = "", qv_cte: str | None = None) -> str:
@@ -207,10 +201,10 @@ def q_llm_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     + per-vector code lookups summed to an EXACT integer approximate
     distance; top-10 nearest by that score.
 
-    Plan: the trainer is PQ_ITERS bounded shuffles at (m, cid, pos)
-    grain; encode is one argmin pass (partial-aggregating min-struct);
-    ADC is codes ⋈ broadcast(dtable) -> groupBy(vec_id) sum -> top-k
-    TakeOrdered. 100 TB: the scored side carries only (vec_id, m,
+    Plan: the trainer is PQ_ITERS kernel passes, each one hash
+    aggregation of per-task (m, cid) partials; encode is one map-side
+    kernel pass; ADC is codes ⋈ broadcast(dtable) -> groupBy(vec_id)
+    sum -> top-k TakeOrdered. 100 TB: the scored side carries only (vec_id, m,
     cid) — the 64x-compressed representation — so the scan that
     answers a query reads ~4 bytes per vector, and the codebooks +
     distance table stay O(M·K), probe-independent of corpus size.
@@ -225,7 +219,7 @@ def q_llm_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dtable = (
         books.join(F.broadcast(probe), books.m == F.col("pm"))
-        .select("m", "cid", _int_sq_dist(F.col("psv"), F.col("cv")).alias("d"))
+        .select("m", "cid", int_sq_dist(F.col("psv"), F.col("cv")).alias("d"))
     )
     return (
         codes.where(F.col("vec_id") != PROBE_VEC_ID)
@@ -276,13 +270,17 @@ def q_llm_ann_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the composed pipeline stays bit-reproducible and fully
     oracled (trainer included, both chains unrolled in one WITH)."""
     from .kmeans import assignment_ranking
-    from .similarity import IVF_PROBE_CELLS, _cell_members, trained_quantizer
+    from .similarity import IVF_PROBE_CELLS, _cell_members, _ivf_artifact
 
-    # stage 1: IVF — the probe's nprobe nearest cells, then the cell
-    # members (served from the materialized per-corpus index)
-    vectors, cents = trained_quantizer(spark, sf_dir)
+    # stage 1: IVF — the probe's nprobe nearest cells (the kernel on the
+    # probe's own scan row), then the cell members (served from the
+    # materialized per-corpus index)
+    cents, _ = _ivf_artifact(spark, sf_dir, None)
+    probe_rows = table(spark, sf_dir, "embeddings").where(
+        F.col("vec_id") == PROBE_VEC_ID
+    )
     probe_cells = (
-        assignment_ranking(vectors.where(F.col("vec_id") == PROBE_VEC_ID), cents)
+        assignment_ranking(quantized_rows(probe_rows), cents)
         .where(F.col("rn") <= IVF_PROBE_CELLS)
         .select("cid")
     )
@@ -301,7 +299,7 @@ def q_llm_ann_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("m").alias("pm"), F.col("sv").alias("psv")
     )
     dtable = books.join(F.broadcast(probe), books.m == F.col("pm")).select(
-        "m", "cid", _int_sq_dist(F.col("psv"), F.col("cv")).alias("d")
+        "m", "cid", int_sq_dist(F.col("psv"), F.col("cv")).alias("d")
     )
     return (
         codes.join(cand_ids, "vec_id", "left_semi")
@@ -385,9 +383,13 @@ def q_llm_ann_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin chains the IVF Lloyd unroll, re-roots the PQ chain at the
     residual CTE, and reproduces every code and score."""
     from .kmeans import _assign, assignment_ranking
-    from .similarity import IVF_PROBE_CELLS, trained_quantizer
+    from .similarity import IVF_PROBE_CELLS, _ivf_artifact
 
-    vectors, cents = trained_quantizer(spark, sf_dir)
+    # one fixture read (one schema-inference job) for both the spread
+    # vectors and the probe row, which skips the spread
+    emb = table(spark, sf_dir, "embeddings")
+    vectors = quantized_rows(emb.repartition(spark.sparkContext.defaultParallelism))
+    cents, _ = _ivf_artifact(spark, sf_dir, None)
     assigned = _assign(vectors, cents)  # (vec_id, qv, cid)
     cents2 = cents.select(F.col("cid").alias("ccid"), F.col("cv").alias("ccv"))
     residuals = (
@@ -406,14 +408,13 @@ def q_llm_ann_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes = _pq_assign(rsub, books).select(
         "vec_id", "m", F.col("cid").alias("code")
     )
+    probe_vec = quantized_rows(emb.where(F.col("vec_id") == PROBE_VEC_ID))
     probe_cells = (
-        assignment_ranking(vectors.where(F.col("vec_id") == PROBE_VEC_ID), cents)
+        assignment_ranking(probe_vec, cents)
         .where(F.col("rn") <= IVF_PROBE_CELLS)
         .select("cid")
     )
-    probe_qv = vectors.where(F.col("vec_id") == PROBE_VEC_ID).select(
-        F.col("qv").alias("pqv")
-    )
+    probe_qv = probe_vec.select(F.col("qv").alias("pqv"))
     pres = (
         cents.join(F.broadcast(probe_cells), "cid", "left_semi")
         .crossJoin(F.broadcast(probe_qv))
@@ -438,7 +439,7 @@ def q_llm_ann_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pcell",
         F.col("bm").alias("dm"),
         "dcode",
-        _int_sq_dist(F.col("sv"), F.col("cv")).alias("d"),
+        int_sq_dist(F.col("sv"), F.col("cv")).alias("d"),
     )
     cand = (
         residuals.select("vec_id", "cell")

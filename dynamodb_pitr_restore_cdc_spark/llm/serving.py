@@ -43,9 +43,9 @@ from .similarity import (
     MULTIPROBE_RES,
     MULTIPROBE_TOP_K,
     _as_double,
+    _ivf_artifact,
     _ivf_oracle_prefix,
     cosine_col,
-    trained_quantizer,
 )
 
 # the serving predicate: a deterministic label so both dialects name
@@ -69,7 +69,7 @@ def filtered_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     if path is None or not os.path.isdir(path):
         from .kmeans import nearest_cell, quantize_expr
 
-        _, cents = trained_quantizer(spark, sf_dir)
+        cents, _ = _ivf_artifact(spark, sf_dir, None)
         members = table(spark, sf_dir, "embeddings").select(
             "vec_id",
             _as_double("embedding").alias("v"),
@@ -121,19 +121,19 @@ def multiprobe_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the equivalence tests, so a change to the probe-slice rule or
     the nprobe cut cannot desynchronize which query batch two lanes
     answer."""
-    from .kmeans import assignment_ranking
+    from .kmeans import assignment_ranking, quantized_rows
 
-    vectors, cents = trained_quantizer(spark, sf_dir)
-    is_probe = F.col("vec_id") % MULTIPROBE_MOD == MULTIPROBE_RES
+    cents, _ = _ivf_artifact(spark, sf_dir, None)
+    rows = table(spark, sf_dir, "embeddings").where(
+        F.col("vec_id") % MULTIPROBE_MOD == MULTIPROBE_RES
+    )
     probe_cells = (
-        assignment_ranking(vectors.where(is_probe), cents)
+        assignment_ranking(quantized_rows(rows), cents)
         .where(F.col("rn") <= IVF_PROBE_CELLS)
         .select(F.col("vec_id").alias("qid"), "cid")
     )
-    probes = (
-        table(spark, sf_dir, "embeddings")
-        .where(is_probe)
-        .select(F.col("vec_id").alias("qid"), _as_double("embedding").alias("pv"))
+    probes = rows.select(
+        F.col("vec_id").alias("qid"), _as_double("embedding").alias("pv")
     )
     return probe_cells.join(probes, "qid")
 

@@ -239,12 +239,13 @@ def q_llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     The quantizer is the integer-exact Lloyd trainer from llm/kmeans.py
     (SURVEY §2B-bis: "trains the IVF quantizer" — true in code since
     round 3; the round-2 fixed-8 exemplar constant is gone). Cell
-    assignment is the map-side nearest-cell kernel (the K centroids as
-    one row value, one argmin per vector, integer squared-L2 — same
-    ranking as L2, no sqrt); the probe's nprobe cells come from the
-    same kernel on the probe's own scan row, which broadcasts as
-    nprobe (cid, pv) rows — no window, no shuffle. At scale `cid`
-    becomes the partition key, so a probe reads nprobe/K of the data.
+    assignment is the map-side nearest-cell kernel (one Arrow-batched
+    exact-integer argmin per vector against the K centroids, integer
+    squared-L2 — same ranking as L2, no sqrt); the probe's nprobe
+    cells come from the same kernel on the probe's own scan row,
+    which broadcasts as nprobe (cid, pv) rows — no window, no shuffle.
+    At scale `cid` becomes the partition key, so a probe reads
+    nprobe/K of the data.
     Fully oracle-checked, trainer included: exact integer math keeps
     even the iterative k-means SQL-expressible."""
     from .kmeans import nearest_cells, quantize_expr
@@ -654,17 +655,18 @@ def q_llm_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cost: one brute-force pass (the thing being audited away) + the
     IVF probe; at 100 TB the audit runs on a sampled probe set, same
     plan shape."""
-    from .kmeans import assignment_ranking
+    from .kmeans import assignment_ranking, quantized_rows
 
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double("embedding").alias("v")
-    )
+    emb = table(spark, sf_dir, "embeddings")
+    e = emb.select("vec_id", _as_double("embedding").alias("v"))
     probe = e.where(F.col("vec_id") == PROBE_VEC_ID).select(F.col("v").alias("pv"))
 
-    vectors, cents = trained_quantizer(spark, sf_dir)
+    cents, _ = _ivf_artifact(spark, sf_dir, None)
     members = _cell_members(spark, sf_dir)
     probe_cells = (
-        assignment_ranking(vectors.where(F.col("vec_id") == PROBE_VEC_ID), cents)
+        assignment_ranking(
+            quantized_rows(emb.where(F.col("vec_id") == PROBE_VEC_ID)), cents
+        )
         .where(F.col("rn") <= IVF_PROBE_CELLS)
         .select("cid")
     )

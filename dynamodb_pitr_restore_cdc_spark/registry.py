@@ -931,11 +931,23 @@ _DRIVER_VERIFIED_R15: frozenset[str] = frozenset(
 # — because none has an age-0 driver row, so the narrow full-window
 # exception does not apply to any of them (the IVF index drills, whose
 # IvfIndex changed, are seeds above).
-# Window math: 41 seeds + the 2 remaining age-5 r10 tail entries
+#
+# The Arrow-batched nearest-cell kernel (llm/kmeans.py: one numpy
+# exact-integer pass for every assignment, ranking and Lloyd update,
+# per-task partials combined by one hash aggregation; PQ on the same
+# kernel with one cell set per subspace) re-implements the paths of
+# every seed above that trains or probes a quantizer, so those seeds
+# stand.  Added: q_llm_ann_pq, whose PQ assign and codebook update now
+# run the kernel (no struct-min SortAggregate, no per-iteration
+# checkpoint); it is also one of the r11-cohort queries at age 5.  The
+# probes of q_llm_ann_recall, q_llm_ann_ivfadc,
+# q_llm_ann_ivfpq_residual and serving.multiprobe_plan now quantize
+# their own scan rows; all are seeds already.
+# Window math: 42 seeds + the 2 remaining age-5 r10 tail entries
 # (q_stream_static_join, q_stream_schema_evolution — near_dedup and
-# interval_join moved into the seed set) + the 7 oldest of the
-# 42-query r11 cohort = 50; the displaced r11-cohort entries stay
-# guarded by the local parity suite.
+# interval_join moved into the seed set) + the 6 oldest of the
+# r11 cohort outside the seed set = 50; the displaced r11-cohort
+# entries stay guarded by the local parity suite.
 _REVERIFY_R16: frozenset[str] = frozenset(
     {
         "q_cdc_bucketed_sink", "q_cdc_sink_compaction",
@@ -958,7 +970,7 @@ _REVERIFY_R16: frozenset[str] = frozenset(
         "q_llm_ann_ivf_multiprobe", "q_llm_ann_ivf_filtered",
         "q_llm_embed_neardup", "q_llm_ann_recall",
         "q_stream_semantic_neardup", "q_llm_ann_ivfadc",
-        "q_llm_ann_ivfpq_residual",
+        "q_llm_ann_ivfpq_residual", "q_llm_ann_pq",
     }
 )
 

@@ -810,3 +810,83 @@ def test_quantizer_is_exact_under_planted_ties(spark, tmp_path):
     d001 = _tie_corpus(SF_SMOKE, tmp_path / "sf001")
     for k, want_k in ((4, 3), (12, 10)):
         check(d001, k, lloyd_oracle_ctes(str(k), IVF_TRAIN_ITERS), want_k)
+
+
+def test_pq_is_exact_under_planted_ties(spark, tmp_path):
+    """Exact-tie property of the PQ kernel (one cell set per subspace):
+    with duplicated seed subvectors (vec 2 := vec 1, vec 5 := vec 3 in
+    every subspace) and a block of identical members, the (d2, cid)
+    tie-break must pick the same codewords as the DuckDB
+    _pq_oracle_ctes chain — codebooks equal its c{PQ_ITERS} rows, codes
+    equal its enc rows, codewords 2 and 5 vanish in every subspace —
+    and q_llm_ann_pq still matches its oracle."""
+    import duckdb
+
+    from dynamodb_pitr_restore_cdc_spark.llm.pq import (
+        PQ_ITERS,
+        _pq_assign,
+        _pq_oracle_ctes,
+        _subvectors,
+        pq_codebooks,
+    )
+
+    from .conftest import SF_SMOKE
+    from .parity import assert_parity
+
+    d = _tie_corpus(SF_SMOKE, tmp_path / "sf001")
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{d}/embeddings.parquet')"
+    )
+    sub = _subvectors(spark, d).localCheckpoint(eager=True)
+    books = pq_codebooks(sub)
+    got = sorted((r.m, r.cid, list(r.cv)) for r in books.collect())
+    want = con.execute(
+        f"WITH {_pq_oracle_ctes()} SELECT m, cid, cv FROM c{PQ_ITERS}"
+    ).fetchall()
+    assert got == sorted((int(m), int(c), [int(x) for x in v]) for m, c, v in want)
+    assert {2, 5}.isdisjoint(c for _, c, _ in got)
+    codes = {
+        tuple(r) for r in _pq_assign(sub, books).select("vec_id", "m", "cid").collect()
+    }
+    want_codes = con.execute(
+        f"WITH {_pq_oracle_ctes()} SELECT vec_id, m, cid FROM enc"
+    ).fetchall()
+    assert codes == {tuple(int(x) for x in r) for r in want_codes}
+    spec = SPECS["q_llm_ann_pq"]
+    assert_parity(spec.builder(spark, d), con.execute(spec.oracle).fetchdf(), "q_llm_ann_pq")
+
+
+def test_nearest_cell_kernel_is_exact_and_overflow_is_loud(spark):
+    """The kernel's |x|² − 2·x·Cᵀ + |c|² is exact int64 up to the
+    largest magnitudes its guard admits (checked against Python
+    integers), and past the guard it raises instead of wrapping: numpy
+    int64 wraps silently where Spark's ANSI arithmetic raised. One
+    component near 1e9 must fail the query, not return a cell."""
+    import pytest
+
+    from dynamodb_pitr_restore_cdc_spark.llm.kmeans import (
+        CellMatrix,
+        assignment_ranking,
+        nearest_cell,
+    )
+
+    rng = np.random.default_rng(5)
+    cells = [(c, rng.integers(-10**6, 10**6, 64).tolist()) for c in range(1, 9)]
+    cm = CellMatrix(cells)
+    x = rng.integers(-3 * 10**8, 3 * 10**8, (20, 64))
+    want = [
+        [sum((a - b) ** 2 for a, b in zip(row, cv)) for _, cv in cells]
+        for row in x.tolist()
+    ]
+    assert cm.sq_dists(x).tolist() == want
+
+    big = [0] * 64
+    big[7] = 10**9
+    with pytest.raises(ArithmeticError):
+        cm.sq_dists(np.array([big]))
+    frame = spark.createDataFrame([(1, big)], "vec_id bigint, qv array<bigint>")
+    with pytest.raises(Exception, match="ArithmeticError"):
+        frame.select(nearest_cell(cells)).collect()
+    with pytest.raises(Exception, match="ArithmeticError"):
+        assignment_ranking(frame, cells).collect()

@@ -457,19 +457,23 @@ def test_dynamic_partition_pruning_fires(spark, sf_dir):
 
 
 def test_ivfadc_stays_jvm_side_and_broadcasts(plans):
-    # the composed ANN: no Python anywhere, the distance table and
-    # probe-cell sides broadcast, and the final top-k is TakeOrdered
+    # the composed ANN: no row-wise or scalar-UDF Python (the one
+    # Python stage is the Arrow-batched nearest-cell kernel), the
+    # distance table and probe-cell sides broadcast, and the final
+    # top-k is TakeOrdered
     p = plans("q_llm_ann_ivfadc")
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
+    assert "MapInArrow" in p
     assert has_broadcast_join(p)
     assert "TakeOrderedAndProject" in p
 
 
 def test_ivfpq_residual_stays_jvm_side(plans):
-    # residual IVFADC: still zero Python, broadcast dtable/cells,
-    # TakeOrdered top-k
+    # residual IVFADC: no Python but the Arrow-batched nearest-cell
+    # kernel, broadcast dtable/cells, TakeOrdered top-k
     p = plans("q_llm_ann_ivfpq_residual")
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
+    assert "MapInArrow" in p
     assert has_broadcast_join(p)
     assert "TakeOrderedAndProject" in p
 
@@ -890,3 +894,77 @@ def test_cold_ann_ivf_job_count(spark, sf_dir, tmp_path):
     n_jobs = len(set(st.getJobIdsForGroup(None)) - before)
     release_persisted()
     assert n_jobs <= 20, n_jobs
+
+
+def test_pq_is_the_map_side_kernel(spark, sf_dir, plans):
+    """The PQ assign, a codebook update and q_llm_ann_pq run the
+    nearest-cell kernel with one cell set per subspace: no SortAggregate
+    anywhere (the struct-min argmin planned as one). The assign is one
+    map-side MapInArrow with no exchange; the update's only exchange is
+    its hash exchange on (m, cid)."""
+    import re
+
+    from dynamodb_pitr_restore_cdc_spark.llm.kmeans import lloyd_update
+    from dynamodb_pitr_restore_cdc_spark.llm.pq import (
+        _books,
+        _pq_assign,
+        _subvectors,
+        pq_codebooks,
+    )
+
+    sub = _subvectors(spark, sf_dir).localCheckpoint(eager=True)
+    books = pq_codebooks(sub)
+    assign = plan_string(_pq_assign(sub, books))
+    update = plan_string(lloyd_update(sub, _books(books), "m", "sv"))
+    for name, p in (
+        ("assign", assign),
+        ("update", update),
+        ("q_llm_ann_pq", plans("q_llm_ann_pq")),
+    ):
+        assert "SortAggregate" not in p, name
+        assert "MapInArrow" in p, name
+        assert "EvalPython" not in p, name
+    assert "Exchange" not in assign
+    exchanges = re.findall(
+        r"^\(\d+\) Exchange\nInput.*\nArguments: (\w+)", update, re.M
+    )
+    assert exchanges == ["hashpartitioning"], exchanges
+
+
+def test_quantizer_consumers_warm_job_counts(spark, sf_dir):
+    """Warm job counts (the IVF artifact built first) of the quantizer's
+    consumers, a structural count that host noise cannot move. Before the probes quantized their own scan rows and PQ
+    ran the kernel: q_llm_ann_recall 7, q_llm_ann_ivfadc 25,
+    q_llm_ann_ivfpq_residual 25, serving.multiprobe_plan 5 (each paid a
+    map-stage job for the spread corpus), q_llm_ann_pq 21. Each probe
+    must now run at least one job fewer, and PQ no more."""
+    from dynamodb_pitr_restore_cdc_spark.llm.serving import multiprobe_plan
+    from dynamodb_pitr_restore_cdc_spark.llm.similarity import _ivf_artifact
+    from dynamodb_pitr_restore_cdc_spark.registry import release_persisted
+
+    _ivf_artifact(spark, sf_dir, None)
+    st = spark.sparkContext.statusTracker()
+    calls = {
+        q: (lambda q=q: SPECS[q].builder(spark, sf_dir).collect())
+        for q in (
+            "q_llm_ann_recall",
+            "q_llm_ann_ivfadc",
+            "q_llm_ann_ivfpq_residual",
+            "q_llm_ann_pq",
+        )
+    }
+    calls["multiprobe_plan"] = lambda: multiprobe_plan(spark, sf_dir).collect()
+    got = {}
+    for name, call in calls.items():
+        before = set(st.getJobIdsForGroup(None))
+        call()
+        got[name] = len(set(st.getJobIdsForGroup(None)) - before)
+    release_persisted()
+    limits = {
+        "q_llm_ann_recall": 6,
+        "q_llm_ann_ivfadc": 24,
+        "q_llm_ann_ivfpq_residual": 24,
+        "multiprobe_plan": 4,
+        "q_llm_ann_pq": 21,
+    }
+    assert all(got[n] <= limits[n] for n in limits), got

@@ -256,8 +256,8 @@ def band_candidates(left_bands: DataFrame, right_bands: DataFrame) -> DataFrame:
     """Distinct (doc_a, doc_b) candidates from a banded join: same
     (band, bucket), left id strictly lower. THE banded candidate join —
     shared by greedy_drop_set's two lanes, q_llm_near_dedup, and
-    LshIndex.pairs (unified round 14; the executors are seeded in
-    _REVERIFY_R14). LshIndex.delta_pairs keeps its own asymmetric
+    LshIndex.pairs (unified round 14, when its executors were re-seeded
+    for the driver). LshIndex.delta_pairs keeps its own asymmetric
     changed-side × full-index join (`!=` + least/greatest), which is a
     different shape, not a copy."""
     return (

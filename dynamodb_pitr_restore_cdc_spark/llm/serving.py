@@ -23,8 +23,9 @@ exactly full: 45 age-5 rotations + 4 reverifies + the
 incremental-manifest query); registered in round 13 as that window's
 one fresh query, discharging the code-enforced obligation
 (`tests/test_serving.py::test_r13_registration_obligation`, which
-trips the moment `_DRIVER_VERIFIED_R12` exists — the round-11 review
-rule that a deferral must live in code, not a comment).
+tripped once round 12's driver evidence was recorded — the round-11
+review rule that a deferral must live in code, not a comment — and now
+checks the registration unconditionally).
 """
 
 from __future__ import annotations

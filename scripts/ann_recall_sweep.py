@@ -7,10 +7,10 @@ script measures the DISTRIBUTION over a deterministic probe sample
 (default sf0.01), plus the scored-fraction cost (cells touched / K).
 Output: one table to stdout; the numbers land in SCALE.md.
 
-Plan shape (all JVM): brute-force truth for ALL probes in one job —
-probes × corpus broadcast-cosine, per-probe top-5 via WindowGroupLimit;
-IVF side = probe cell ranking (K-row window per probe) and a
-cell-semijoin per nprobe. Runs a few corpus passes total, independent
+Plan shape: brute-force truth for ALL probes in one job — probes ×
+corpus broadcast-cosine, per-probe top-5 via WindowGroupLimit; IVF
+side = probe cell ranking (the nearest-cell kernel over the probes'
+own scan rows) and a cell-semijoin per nprobe. Runs a few corpus passes total, independent
 of probe count.
 """
 
@@ -24,12 +24,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from dynamodb_pitr_restore_cdc_spark.llm.kmeans import assignment_ranking
+from dynamodb_pitr_restore_cdc_spark.llm.kmeans import (
+    assignment_ranking,
+    quantized_rows,
+)
 from dynamodb_pitr_restore_cdc_spark.llm.similarity import (
     _as_double,
     _cell_members,
+    _ivf_artifact,
     cosine_col,
-    trained_quantizer,
 )
 from dynamodb_pitr_restore_cdc_spark.session import get_spark
 from dynamodb_pitr_restore_cdc_spark.sources import table
@@ -52,9 +55,8 @@ def main() -> None:
     spark = get_spark("ann-sweep", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "16")))
     spark.sparkContext.setLogLevel("ERROR")
 
-    e = table(spark, SF_DIR, "embeddings").select(
-        "vec_id", _as_double("embedding").alias("v")
-    )
+    emb = table(spark, SF_DIR, "embeddings")
+    e = emb.select("vec_id", _as_double("embedding").alias("v"))
     probes = (
         e.where(F.col("vec_id") < N_PROBES)
         .select(F.col("vec_id").alias("probe_id"), F.col("v").alias("pv"))
@@ -69,10 +71,11 @@ def main() -> None:
     exact = exact.persist()
     exact.count()
 
-    vectors, cents = trained_quantizer(spark, SF_DIR)
+    cents, _ = _ivf_artifact(spark, SF_DIR, None)
     k_cells = cents.count()
     members = _cell_members(spark, SF_DIR)
-    probe_vecs = vectors.where(F.col("vec_id") < N_PROBES)
+    # probes quantized off their own scan rows, as the engine's probes are
+    probe_vecs = quantized_rows(emb.where(F.col("vec_id") < N_PROBES))
     ranking = (
         assignment_ranking(probe_vecs, cents)
         .select(F.col("vec_id").alias("probe_id"), "cid", "rn")

@@ -1,8 +1,9 @@
 #!/usr/bin/env python
 """Driver-evidence staleness gate (round-8 verdict, item 6).
 
-Joins the CORRECTNESS_r*.json union against the live registry and
-reports, per oracled query, the newest round with a driver row. Exit
+Joins the CORRECTNESS_r*.json union (read by the package's `evidence`
+module, the same reader the rotation uses) against the live registry
+and reports, per oracled query, the newest round with a driver row. Exit
 code 1 iff any oracled query's newest row is older than MAX_AGE_ROUNDS
 rounds behind the newest correctness file — the enforced form of the
 rotation invariant that all_queries() ordering implements (a frozen
@@ -12,12 +13,18 @@ makes that loud).
 Usage:
     python scripts/evidence_report.py [--max-age N] [--dir REPO_ROOT]
 
+`--dir` names where the correctness files are read; the registry (and
+so the driver window) is always the package next to this script.
+
 Policy:
-- threshold default 5: the registry holds ~205 oracled queries and the
-  driver window is ~50, so a full rotation takes ceil(205/50) = 5
+- threshold default 5: the registry holds 229 oracled queries and the
+  driver window is 50, so a full rotation takes ceil(229/50) = 5
   rounds — steady-state ages run 0..4 and hit 5 only for the straggler
   batch about to be re-checked. Age > 5 therefore always means the
   rotation stalled (round 8's freeze produced age 6).
+- any row counts here, red or green: a red row is still evidence the
+  rotation reached the query. The rotation itself (evidence.rotation)
+  counts only verifying rows, so a red query moves to the front.
 - rows-only queries (oracle is None) are reported but never gate: a
   driver slot can only ever re-confirm `no_oracle` for them, and the
   ordering deliberately parks them last.
@@ -33,30 +40,18 @@ Policy:
 from __future__ import annotations
 
 import argparse
-import json
 import os
-import re
 import sys
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, HERE)
+
+from dynamodb_pitr_restore_cdc_spark.evidence import (  # noqa: E402
+    WINDOW,
+    correctness_rounds,
+)
+
 MAX_AGE_DEFAULT = 5
-WINDOW = 50  # the driver evaluates registry order and keeps ~50 rows
-
-
-def correctness_rounds(root: str) -> dict[int, set[str]]:
-    """round number -> query names with a driver row in that round."""
-    out: dict[int, set[str]] = {}
-    for fn in os.listdir(root):
-        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", fn)
-        if not m:
-            continue
-        with open(os.path.join(root, fn)) as fh:
-            rows = json.load(fh)
-        # a row gates freshness only if the check RAN (err or not —
-        # a red row is still evidence the rotation reached the query;
-        # redness is the driver/judge's failure signal, not staleness)
-        out[int(m.group(1))] = set(rows)
-    return out
 
 
 def build_report(
@@ -105,7 +100,6 @@ def main(argv: list[str]) -> int:
     ap.add_argument("--strict", action="store_true")
     args = ap.parse_args(argv)
 
-    sys.path.insert(0, args.dir)
     from dynamodb_pitr_restore_cdc_spark.registry import all_queries
 
     rounds = correctness_rounds(args.dir)

@@ -41,15 +41,19 @@ RUNS = int(os.environ.get("BENCH_RUNS", "3"))
 
 
 def main() -> None:
-    from dynamodb_pitr_restore_cdc_spark.llm.kmeans import assignment_ranking
+    from dynamodb_pitr_restore_cdc_spark.llm.kmeans import (
+        assignment_ranking,
+        quantized_rows,
+    )
     from dynamodb_pitr_restore_cdc_spark.llm.similarity import (
         IVF_PROBE_CELLS,
         MULTIPROBE_MOD,
         MULTIPROBE_RES,
         _as_double,
         _cell_members,
+        _ivf_artifact,
+        cosine_col,
         ivf_probe_topk,
-        trained_quantizer,
     )
     from dynamodb_pitr_restore_cdc_spark.sources import table
 
@@ -58,14 +62,13 @@ def main() -> None:
     spec = all_queries()["q_llm_ann_ivf_multiprobe"]
 
     # materialize the one-time artifacts outside the timed region
-    vectors, cents = trained_quantizer(spark, SF_DIR)
+    cents, _ = _ivf_artifact(spark, SF_DIR, None)
     members = _cell_members(spark, SF_DIR)
     members.count()
-    e = table(spark, SF_DIR, "embeddings").select(
-        "vec_id", _as_double("embedding").alias("v")
-    )
+    emb = table(spark, SF_DIR, "embeddings")
+    e = emb.select("vec_id", _as_double("embedding").alias("v"))
     is_probe = F.col("vec_id") % MULTIPROBE_MOD == MULTIPROBE_RES
-    probe_ids = [r.vec_id for r in vectors.where(is_probe).select("vec_id").collect()]
+    probe_ids = [r.vec_id for r in emb.where(is_probe).select("vec_id").collect()]
     print(f"sf_dir={SF_DIR} probes={len(probe_ids)} runs={RUNS}")
 
     def run_batched() -> float:
@@ -75,17 +78,20 @@ def main() -> None:
         release_persisted()
         return dt
 
+    def probe_of(pid: int):
+        """(cells, probe) of one probe row, quantized off its own scan
+        row as the engine's probes are."""
+        cells = (
+            assignment_ranking(quantized_rows(emb.where(F.col("vec_id") == pid)), cents)
+            .where(F.col("rn") <= IVF_PROBE_CELLS)
+            .select("cid")
+        )
+        return cells, e.where(F.col("vec_id") == pid).select(F.col("v").alias("pv"))
+
     def run_per_probe() -> float:
         t0 = time.perf_counter()
         for pid in probe_ids:
-            probe_cells = (
-                assignment_ranking(
-                    vectors.where(F.col("vec_id") == pid), cents
-                )
-                .where(F.col("rn") <= IVF_PROBE_CELLS)
-                .select("cid")
-            )
-            probe = e.where(F.col("vec_id") == pid).select(F.col("v").alias("pv"))
+            probe_cells, probe = probe_of(pid)
             ivf_probe_topk(members, probe_cells.crossJoin(probe)).write.format(
                 "noop"
             ).mode("overwrite").save()
@@ -101,19 +107,12 @@ def main() -> None:
     release_persisted()
     per_rows = set()
     for pid in probe_ids:
-        probe_cells = (
-            assignment_ranking(vectors.where(F.col("vec_id") == pid), cents)
-            .where(F.col("rn") <= IVF_PROBE_CELLS)
-            .select("cid")
-        )
-        probe = e.where(F.col("vec_id") == pid).select(F.col("v").alias("pv"))
+        probe_cells, probe = probe_of(pid)
         cand = (
             members.join(F.broadcast(probe_cells), "cid", "left_semi")
             .where(F.col("vec_id") != pid)
             .crossJoin(F.broadcast(probe))
         )
-        from dynamodb_pitr_restore_cdc_spark.llm.similarity import cosine_col
-
         top = (
             cand.select("vec_id", cosine_col(F.col("v"), F.col("pv")).alias("cos"))
             .orderBy(F.col("cos").desc(), "vec_id")

@@ -640,8 +640,8 @@ def test_r15_split_bucket_overflow_obligation(spark):
     (q_llm_decontaminate, q_llm_contamination_report,
     q_llm_leakage_audit, q_stream_decontaminate, q_llm_corpus_build,
     q_stream_corpus_build, q_llm_pack_manifest_incremental) = 50.
-    The moment the round-15 editor records _DRIVER_VERIFIED_R14 this
-    test demands the fixed function."""
+    Round 15 landed the fix; the checks stay unconditional so the
+    overflow wall cannot come back."""
     import dynamodb_pitr_restore_cdc_spark.registry as R
     from dynamodb_pitr_restore_cdc_spark.llm.curation import (
         SPLIT_MULT,
@@ -649,8 +649,6 @@ def test_r15_split_bucket_overflow_obligation(spark):
     )
 
     R.all_queries()
-    if not hasattr(R, "_DRIVER_VERIFIED_R14"):
-        return  # obligation arms when round 15 starts
     big = 6_000_000_000  # past the 3.47e9 int64 overflow wall
     expected = ((big % 2**32) * SPLIT_MULT % 2**32) % 1000
     got = (

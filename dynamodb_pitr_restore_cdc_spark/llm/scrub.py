@@ -248,7 +248,7 @@ def q_stream_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     computes directly. At 100 TB the index is the block vocabulary
     keyed by block (in production: xxhash64(block), 8-byte keys), and
     each micro-batch joins only its own blocks against it."""
-    from ..streaming.stream_queries import _fresh_dir, _write_split_files
+    from ..streaming.drill import Drill, read_pinned, run_available_now
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     block_expr = F.posexplode(
@@ -271,14 +271,6 @@ def q_stream_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("percentile(doc_id, 0.6667)").alias("p2"),
     ).first()
     d = F.col("doc_id")
-    src, out, ck = (
-        _fresh_dir("spd-src"),
-        _fresh_dir("spd-out"),
-        _fresh_dir("spd-ck"),
-    )
-    _write_split_files(
-        docs, [d < row.p1, (d >= row.p1) & (d < row.p2), d >= row.p2], src
-    )
 
     def dedup_batch(batch: DataFrame, epoch_id: int) -> None:
         blocks = batch.select("doc_id", block_expr)
@@ -295,24 +287,18 @@ def q_stream_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out)
         )
 
-    import shutil
-
-    q = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(dedup_batch)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    result = tracked_persist(
-        spark.read.schema("doc_id long, n_blocks long, n_dup_blocks long").parquet(
-            out
+    with Drill(spark, "spd") as drill:
+        src = drill.splits(docs, [d < row.p1, (d >= row.p1) & (d < row.p2), d >= row.p2])
+        out = drill.dir("out")
+        run_available_now(
+            read_pinned(spark, "doc_id long, text string", src)
+            .writeStream.foreachBatch(dedup_batch)
+            .option("checkpointLocation", drill.dir("ck"))
         )
-    )
-    result.count()  # materialize before removing the backing dirs
-    for p in (src, out, ck):
-        shutil.rmtree(p, ignore_errors=True)
+        result = tracked_persist(
+            spark.read.schema("doc_id long, n_blocks long, n_dup_blocks long").parquet(
+                out
+            )
+        )
+        result.count()  # materialize before removing the backing dirs
     return result

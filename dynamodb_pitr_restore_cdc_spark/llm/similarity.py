@@ -16,7 +16,6 @@ values agree to ~1e-15 and the round(_, 4) outputs hash-match.
 from __future__ import annotations
 
 import os
-import shutil
 import uuid
 
 import numpy as np
@@ -727,16 +726,13 @@ def run_semantic_stream(spark: SparkSession, src: str, out: str, member: DataFra
         )
         pairs.write.mode("overwrite").parquet(os.path.join(out, f"e{epoch_id}"))
 
-    q = (
-        spark.readStream.schema("vec_id long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    from ..streaming.drill import read_pinned, run_available_now
+
+    run_available_now(
+        read_pinned(spark, "vec_id long", src)
         .writeStream.foreachBatch(pair_batch)
         .option("checkpointLocation", os.path.join(out, "_ck"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
 
 
 def read_semantic_pairs(spark: SparkSession, out: str) -> DataFrame:
@@ -766,7 +762,7 @@ def q_stream_semantic_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     idempotent); at scale the index lookup is a partition-pruned read
     on cid, and the only growing artifact is the index itself — the
     same one every other ANN query shares."""
-    from ..streaming.stream_queries import _fresh_dir, _write_split_files
+    from ..streaming.drill import Drill
 
     ids = table(spark, sf_dir, "embeddings").select("vec_id")
     row = ids.agg(
@@ -781,12 +777,10 @@ def q_stream_semantic_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     member.count()  # materialize before the stream's batches join it
     v = F.col("vec_id")
-    src, out = _fresh_dir("sem-src"), _fresh_dir("sem-out")
-    _write_split_files(ids, [v <= c1, (v > c1) & (v <= c2), v > c2], src)
-
-    run_semantic_stream(spark, src, out, member)
-    result = tracked_persist(read_semantic_pairs(spark, out))
-    result.count()  # materialize before removing the backing dirs
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(out, ignore_errors=True)
+    with Drill(spark, "sem") as drill:
+        src = drill.splits(ids, [v <= c1, (v > c1) & (v <= c2), v > c2])
+        out = drill.dir("out")
+        run_semantic_stream(spark, src, out, member)
+        result = tracked_persist(read_semantic_pairs(spark, out))
+        result.count()  # materialize before removing the backing dirs
     return result

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.cdc import cdc_merge
-from .util import atomic_write_text
+from .drill import fold_versions, run_available_now
 
 CHANGELOG_STREAM_SCHEMA = T.StructType(
     [
@@ -140,61 +140,19 @@ def run_cdc_apply(
     own output and, thanks to the seq_no guard in cdc_merge, converges
     to the same state: exactly-once STATE from at-least-once DELIVERY,
     which is precisely what the reference's TODO at
-    lambda-backfill/main.py:47 fails to provide.
+    lambda-backfill/main.py:47 fails to provide (drill.fold_versions).
     """
-    os.makedirs(work_dir, exist_ok=True)
-    pointer = os.path.join(work_dir, "_LATEST")
-    if os.path.exists(pointer):
-        # resume: the checkpoint will skip already-committed files, so the
-        # sink must resume from its last committed version, not v_init —
-        # otherwise replay would merge new batches onto a stale snapshot.
-        with open(pointer) as fh:
-            snap_path = fh.read().strip()
-    else:
-        snap_path = os.path.join(work_dir, "v_init")
-        snapshot.write.mode("overwrite").parquet(snap_path)
-        atomic_write_text(pointer, snap_path)
-    state = {"path": snap_path}
+    ok, dlq = split_dlq(read_changelog_stream(spark, src_dir))
 
-    stream = read_changelog_stream(spark, src_dir)
-    ok, dlq = split_dlq(stream)
+    def merge(batch_df: DataFrame, epoch_id: int, state: dict, path: str) -> None:
+        snap = batch_df.sparkSession.read.parquet(state["path"])
+        cdc_merge(snap, batch_df).write.mode("overwrite").parquet(path)
 
-    def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        new_path = os.path.join(work_dir, f"v{epoch_id}")
-        if new_path == state["path"]:
-            # replay of an epoch whose data AND pointer writes both landed
-            # (crash fell between pointer write and the stream's commit-log
-            # write). Re-merging would read and overwrite the same path —
-            # illegal in Spark — and the seq_no guard makes it a no-op
-            # anyway, so the replayed epoch is skipped outright.
-            return
-        sess = batch_df.sparkSession
-        snap = sess.read.parquet(state["path"])
-        merged = cdc_merge(snap, batch_df)
-        merged.write.mode("overwrite").parquet(new_path)
-        state["path"] = new_path
-        # pointer write AFTER the data write: a crash between the two
-        # replays the epoch, which overwrites v{epoch} idempotently from
-        # the still-prior pointer (atomic: a torn pointer would wedge
-        # every resume)
-        atomic_write_text(pointer, new_path)
-
-    q = (
-        ok.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", os.path.join(work_dir, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
+    final = fold_versions(ok, work_dir, snapshot, merge)["path"]
     if dlq_dir is not None:
-        dq = (
+        run_available_now(
             dlq.writeStream.format("parquet")
             .option("path", dlq_dir)
             .option("checkpointLocation", os.path.join(work_dir, "_dlq_checkpoint"))
-            .trigger(availableNow=True)
-            .start()
         )
-        dq.awaitTermination()
-
-    return state["path"]
+    return final

@@ -27,8 +27,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import tempfile
-import uuid
 from dataclasses import dataclass, field
 from functools import reduce
 
@@ -37,6 +35,7 @@ from pyspark.sql import functions as F
 
 from ..operators.cdc import cdc_merge, changelog, with_changelog
 from ..registry import register, tracked_persist
+from .drill import Drill, fold_versions
 from .util import atomic_write_text
 
 MAX_RECEIVES = 5  # cdk-stack.ts:53
@@ -117,9 +116,6 @@ class RedriveStore:
         if not dirs:
             return None
         return self.spark.read.schema(self._schema).parquet(*dirs)
-
-    def cleanup(self) -> None:
-        shutil.rmtree(self.root, ignore_errors=True)
 
     # -- one receive cycle ---------------------------------------------------
 
@@ -249,43 +245,19 @@ def run_cdc_apply_redrive(
     (final sink path, the redrive store)."""
     from .cdc_stream import read_changelog_stream
 
-    os.makedirs(work_dir, exist_ok=True)
     store = RedriveStore(spark, os.path.join(work_dir, "redrive"), max_receives)
-    pointer = os.path.join(work_dir, "_LATEST")
-    if os.path.exists(pointer):
-        with open(pointer) as fh:
-            snap_path = fh.read().strip()
-    else:
-        snap_path = os.path.join(work_dir, "v_init")
-        snapshot.write.mode("overwrite").parquet(snap_path)
-        atomic_write_text(pointer, snap_path)
-    state = {"path": snap_path}
 
-    def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        new_path = os.path.join(work_dir, f"v{epoch_id}")
-        if new_path == state["path"]:
-            return  # replayed epoch, already fully committed (see cdc_stream)
-        sess = batch_df.sparkSession
+    def merge(batch_df: DataFrame, epoch_id: int, state: dict, path: str) -> None:
         # epoch-guarded: a replay after the store committed but before the
         # sink did re-reads the stored accepted rows instead of
         # re-incrementing receive counts (at-least-once safety)
         accepted = store.deliver(batch_df, try_reject, epoch_id=epoch_id).drop(
             RECEIVE_COUNT_COL
         )
-        snap = sess.read.parquet(state["path"])
-        merged = cdc_merge(snap, accepted)
-        merged.write.mode("overwrite").parquet(new_path)
-        state["path"] = new_path
-        atomic_write_text(pointer, new_path)
+        snap = batch_df.sparkSession.read.parquet(state["path"])
+        cdc_merge(snap, accepted).write.mode("overwrite").parquet(path)
 
-    q = (
-        read_changelog_stream(spark, src_dir)
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", os.path.join(work_dir, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    state = fold_versions(read_changelog_stream(spark, src_dir), work_dir, snapshot, merge)
     return state["path"], store
 
 
@@ -321,10 +293,6 @@ def q_cdc_dlq_redrive(spark: SparkSession, sf_dir: str) -> DataFrame:
     def try_reject(df: DataFrame) -> DataFrame:
         return df.where(poison | (transient & (F.col(RECEIVE_COUNT_COL) < 3)))
 
-    root = os.path.join(
-        tempfile.gettempdir(), "spark_cdc_engine_stream", f"redrive-{uuid.uuid4().hex[:8]}"
-    )
-    store = RedriveStore(spark, root, max_receives=MAX_RECEIVES)
     # WHERE FALSE, not createDataFrame([]): the RDD-backed empty frame
     # carries defaultParallelism empty partitions into every cycle's
     # union (~0.27 s of no-op tasks per action — CLAUDE.md gotcha);
@@ -335,28 +303,30 @@ def q_cdc_dlq_redrive(spark: SparkSession, sf_dir: str) -> DataFrame:
     # changelog is compute-bound (r16 idle-32 A/B: pinned 4.73 s vs
     # session width 4.03 s; the r15 pin won only on a loaded host)
     batch = cl
-    for i in range(MAX_RECEIVES):  # cycle 1 delivers; 2-5 are redelivery ticks
-        store.deliver(batch, try_reject)
-        # consume the cycle's accepted rows as a kept snapshot (a
-        # hardlink clone, not an eager localCheckpoint: zero Spark jobs
-        # per cycle, and the rows are read ONCE by the final union+agg
-        # — r16: removes 5 sequential checkpoint jobs + their gaps)
-        accepted_cycles.append(
-            store.kept_snapshot(os.path.join(root, f"kept_c{i}")).select(
-                F.lit("applied").alias("route"), F.col(RECEIVE_COUNT_COL)
+    with Drill(spark, "redrive") as drill:
+        root = os.path.join(drill.root, "store")
+        store = RedriveStore(spark, root, max_receives=MAX_RECEIVES)
+        for i in range(MAX_RECEIVES):  # cycle 1 delivers; 2-5 are redelivery ticks
+            store.deliver(batch, try_reject)
+            # consume the cycle's accepted rows as a kept snapshot (a
+            # hardlink clone, not an eager localCheckpoint: zero Spark jobs
+            # per cycle, and the rows are read ONCE by the final union+agg
+            # — r16: removes 5 sequential checkpoint jobs + their gaps)
+            accepted_cycles.append(
+                store.kept_snapshot(os.path.join(root, f"kept_c{i}")).select(
+                    F.lit("applied").alias("route"), F.col(RECEIVE_COUNT_COL)
+                )
             )
-        )
-        batch = empty
+            batch = empty
 
-    applied = reduce(lambda a, b: a.unionByName(b), accepted_cycles)
-    dlq = store.dlq().select(
-        F.lit("dlq").alias("route"), F.col(RECEIVE_COUNT_COL)
-    )
-    result = tracked_persist(  # released by the harness post-consumption
-        applied.unionByName(dlq)
-        .groupBy("route", RECEIVE_COUNT_COL)
-        .agg(F.count("*").alias("n_records"))
-    )
-    result.count()  # materialize before removing the store's backing dirs
-    store.cleanup()
+        applied = reduce(lambda a, b: a.unionByName(b), accepted_cycles)
+        dlq = store.dlq().select(
+            F.lit("dlq").alias("route"), F.col(RECEIVE_COUNT_COL)
+        )
+        result = tracked_persist(  # released by the harness post-consumption
+            applied.unionByName(dlq)
+            .groupBy("route", RECEIVE_COUNT_COL)
+            .agg(F.count("*").alias("n_records"))
+        )
+        result.count()  # materialize before removing the store's backing dirs
     return result

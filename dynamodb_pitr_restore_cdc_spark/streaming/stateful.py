@@ -15,21 +15,19 @@ impossible to write silently with this API.
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions.rounding import avg_div
 from ..operators.behavior import SESSION_GAP_US
 from ..operators.cdc import changelog, with_changelog
-from ..registry import register, tracked_persist
+from ..registry import register
 from .cdc_stream import CHANGELOG_STREAM_SCHEMA
-from .util import pinned_shuffle_width
-from .stream_queries import _fresh_dir, _write_split_files
+from .drill import Drill, read_pinned
 
 OUTPUT_SCHEMA = "key long, n_events long, sum_value_c long, max_seq long"
 STATE_SCHEMA = "n long, s long, m long"
@@ -149,47 +147,26 @@ def q_stream_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     session-window semantics (q_stream_session) on everything it can
     legally emit."""
     cl = changelog(spark, sf_dir).select("key", "ts", "seq_no")
-    src, ck = _fresh_dir("ss-src"), _fresh_dir("ss-ck")
     tsu = F.unix_micros("ts")
     row = cl.agg(
         F.expr("percentile(unix_micros(ts), 0.3333)").alias("p1"),
         F.expr("percentile(unix_micros(ts), 0.6667)").alias("p2"),
     ).first()
-    _write_split_files(
-        cl, [tsu <= row.p1, (tsu > row.p1) & (tsu <= row.p2), tsu > row.p2], src
-    )
-
-    stream = (
-        spark.readStream.schema("key long, ts timestamp, seq_no long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .selectExpr("key AS user_id", "ts")
-    )
-    sessions = stream.groupBy("user_id").applyInPandasWithState(
-        sessionize,
-        SESSION_OUTPUT_SCHEMA,
-        SESSION_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
-    name = f"ss_out_{uuid.uuid4().hex[:8]}"
-    with pinned_shuffle_width(spark):
-        q = (
-            sessions.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
+    with Drill(spark, "ss") as drill:
+        src = drill.splits(
+            cl, [tsu <= row.p1, (tsu > row.p1) & (tsu <= row.p2), tsu > row.p2]
         )
-        q.awaitTermination()
-    import shutil
-
-    result = tracked_persist(spark.table(name))
-    result.count()
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(ck, ignore_errors=True)
-    return result
+        stream = read_pinned(spark, "key long, ts timestamp, seq_no long", src).selectExpr(
+            "key AS user_id", "ts"
+        )
+        sessions = stream.groupBy("user_id").applyInPandasWithState(
+            sessionize,
+            SESSION_OUTPUT_SCHEMA,
+            SESSION_STATE_SCHEMA,
+            "append",
+            GroupStateTimeout.NoTimeout,
+        )
+        return drill.memory(sessions, "append", pinned=True)
 
 
 @register(
@@ -213,27 +190,11 @@ def q_stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     LAST emission per key must equal the batch aggregate — which is the
     oracle. Proves cross-batch state continuity, not just windowing."""
     cl = changelog(spark, sf_dir)
-    src, ck = _fresh_dir("st-src"), _fresh_dir("st-ck")
     s = F.col("seq_no")
     row = cl.agg(
         F.expr("percentile(seq_no, 0.3333)").alias("p1"),
         F.expr("percentile(seq_no, 0.6667)").alias("p2"),
     ).first()
-    _write_split_files(cl, [s < row.p1, (s >= row.p1) & (s < row.p2), s >= row.p2], src)
-
-    stream = (
-        spark.readStream.schema(CHANGELOG_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    updates = stream.groupBy("key").applyInPandasWithState(
-        running_totals,
-        OUTPUT_SCHEMA,
-        STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
-    )
-    name = f"st_out_{uuid.uuid4().hex[:8]}"
     # the state-shuffle width is fixed at query start from
     # spark.sql.shuffle.partitions; each partition is a state-store
     # instance checkpointed EVERY micro-batch, so a small keyed stream
@@ -246,33 +207,32 @@ def q_stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     # — the drill's cost is the per-batch applyInPandasWithState
     # executor work itself, not the HDFS store commit or a trailing
     # no-data batch (the event log shows exactly 3 batch jobs).
-    with pinned_shuffle_width(spark):
-        q = (
-            updates.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
+    with Drill(spark, "st") as drill:
+        src = drill.splits(cl, [s < row.p1, (s >= row.p1) & (s < row.p2), s >= row.p2])
+        updates = read_pinned(spark, CHANGELOG_STREAM_SCHEMA, src).groupBy(
+            "key"
+        ).applyInPandasWithState(
+            running_totals,
+            OUTPUT_SCHEMA,
+            STATE_SCHEMA,
+            "update",
+            GroupStateTimeout.NoTimeout,
         )
-        q.awaitTermination()
-    # final state per key = the emission with the highest running count
-    out = spark.table(name)
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("key").orderBy(F.col("n_events").desc())
-    final = tracked_persist(
-        out.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(
-            "key",
-            "n_events",
-            avg_div("sum_value_c", "n_events").alias("avg_value"),
-            "max_seq",
+        # final state per key = the emission with the highest running count
+        w = W.partitionBy("key").orderBy(F.col("n_events").desc())
+        return drill.memory(
+            updates,
+            "update",
+            pinned=True,
+            shape=lambda out: out.withColumn("rn", F.row_number().over(w))
+            .where(F.col("rn") == 1)
+            .select(
+                "key",
+                "n_events",
+                avg_div("sum_value_c", "n_events").alias("avg_value"),
+                "max_seq",
+            ),
         )
-    )
-    final.count()
-    return final
 
 
 # ---------------------------------------------------------------------------
@@ -414,47 +374,25 @@ def q_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         F.round(F.col("value") * 100).cast("bigint").alias("v"),
     )
-    src, ck = _fresh_dir("an-src"), _fresh_dir("an-ck")
     tsu = F.unix_micros("ts")
     row = ev.agg(
         F.expr("percentile(unix_micros(ts), 0.3333)").alias("p1"),
         F.expr("percentile(unix_micros(ts), 0.6667)").alias("p2"),
     ).first()
-    _write_split_files(
-        ev, [tsu <= row.p1, (tsu > row.p1) & (tsu <= row.p2), tsu > row.p2], src
-    )
-
-    stream = (
-        spark.readStream.schema(
-            "event_id long, user_id long, ts timestamp, v long"
+    with Drill(spark, "an") as drill:
+        src = drill.splits(
+            ev, [tsu <= row.p1, (tsu > row.p1) & (tsu <= row.p2), tsu > row.p2]
         )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    flagged = stream.groupBy("user_id").applyInPandasWithState(
-        prequential_zscore,
-        ANOMALY_OUTPUT_SCHEMA,
-        ANOMALY_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
-    name = f"an_out_{uuid.uuid4().hex[:8]}"
-    # NO width pin: the prequential z-score UDF over per-user history is
-    # compute-bound per batch, unlike the tiny keyed folds above (r16
-    # idle-32 A/B: pinned 10.70 s vs session width 5.88 s)
-    q = (
-        flagged.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    import shutil
-
-    result = tracked_persist(spark.table(name))
-    result.count()
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(ck, ignore_errors=True)
-    return result
+        flagged = read_pinned(
+            spark, "event_id long, user_id long, ts timestamp, v long", src
+        ).groupBy("user_id").applyInPandasWithState(
+            prequential_zscore,
+            ANOMALY_OUTPUT_SCHEMA,
+            ANOMALY_STATE_SCHEMA,
+            "append",
+            GroupStateTimeout.NoTimeout,
+        )
+        # NO width pin: the prequential z-score UDF over per-user history is
+        # compute-bound per batch, unlike the tiny keyed folds above (r16
+        # idle-32 A/B: pinned 10.70 s vs session width 5.88 s)
+        return drill.memory(flagged, "append")

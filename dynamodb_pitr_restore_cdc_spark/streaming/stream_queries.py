@@ -9,13 +9,9 @@ Two execution shapes, same operators:
 - the genuinely stateful behaviors (watermark late-drop, streaming
   dedup, foreachBatch CDC) run REAL multi-micro-batch streams over
   deterministic file splits, so batch boundaries — the thing that makes
-  streaming semantics interesting — actually exist.
-
-Determinism discipline for the real streams: input files are written
-with monotonically increasing mtimes (the file source orders by
-modification time), maxFilesPerTrigger=1 pins the batch decomposition,
-and fixture timestamps are fixed — so every run sees the same batches,
-the same watermark trajectory, and the same output.
+  streaming semantics interesting — actually exist. Each runs through
+  the one drill lifecycle in streaming/drill.py (which states the
+  determinism discipline that makes those boundaries reproducible).
 
 Scale notes (100 TB): all stateful ops are keyed (user_id /
 content_hash) so state shards across executors; watermarks bound state
@@ -33,9 +29,6 @@ which is correct under arbitrary reordering.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,77 +38,8 @@ from ..registry import register, tracked_persist
 from ..sources import table
 from .cdc_sink import BucketedCdcSink
 from .cdc_stream import CHANGELOG_STREAM_SCHEMA, run_cdc_apply
-from .util import STREAM_DRILL_WIDTH, pinned_shuffle_width  # noqa: F401 — re-exported drill knob
-
-
-# ---------------------------------------------------------------------------
-# deterministic file-split helpers for real streaming runs
-# ---------------------------------------------------------------------------
-
-def _fresh_dir(tag: str) -> str:
-    d = os.path.join(
-        tempfile.gettempdir(), "spark_cdc_engine_stream", f"{tag}-{uuid.uuid4().hex[:8]}"
-    )
-    os.makedirs(d, exist_ok=True)
-    return d
-
-
-_SPLIT_BASE_MTIME = 1_700_000_000
-
-
-def _write_one_split(df: DataFrame, src_dir: str, i: int) -> None:
-    """Write one split as a single parquet file, entirely executor-side
-    (no driver materialization — at 100 TB a split is still a distributed
-    write; coalesce(1) is the micro-batch-fixture shape, not a data
-    funnel through the driver). The part file is renamed to a stable
-    name with an increasing mtime so the file streaming source processes
-    splits in list order."""
-    tmp = os.path.join(src_dir, f"_tmp_{i:05d}")  # leading _ : invisible to the stream source
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    part = next(p for p in os.listdir(tmp) if p.endswith(".parquet"))
-    path = os.path.join(src_dir, f"{i:05d}.parquet")
-    os.replace(os.path.join(tmp, part), path)
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.utime(path, (_SPLIT_BASE_MTIME + i, _SPLIT_BASE_MTIME + i))
-
-
-def _write_split_files(df: DataFrame, splits: list, src_dir: str) -> None:
-    """Write one parquet file per split predicate, with increasing mtimes
-    so the file streaming source processes them in list order.
-
-    The N split writes are INDEPENDENT jobs over the same source, so
-    they are submitted from a small thread pool (guide §2.6 — actions
-    are only sequential because driver code calls them sequentially);
-    overlapping them hides most of the per-write scan+schedule latency
-    that every streaming drill pays before its stream even starts
-    (r16 profile: 3 sequential writes + the percentile cut = ~3.6 s of
-    q_stream_stateful_totals' 14 s wall). Each thread owns its split's
-    tmp dir and target file, and the mtime is set per file from the
-    split INDEX, so the on-disk result — names, contents, mtime order —
-    is identical to the sequential form (tests/test_split_files.py
-    pins that identity; the streams consume an unchanged fixture)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    if not splits:
-        return
-    with ThreadPoolExecutor(max_workers=min(4, len(splits))) as pool:
-        # list() drains the iterator so the first failing split raises
-        list(
-            pool.map(
-                lambda iv: _write_one_split(df.where(iv[1]), src_dir, iv[0]),
-                enumerate(splits),
-            )
-        )
-
-
-def _ts_tertiles(df: DataFrame, col: str) -> tuple:
-    """Deterministic 1/3-2/3 event-time cut points (driver-side scalars —
-    orchestration, not a data path)."""
-    row = df.agg(
-        F.expr(f"percentile(unix_micros({col}), 0.3333)").alias("p1"),
-        F.expr(f"percentile(unix_micros({col}), 0.6667)").alias("p2"),
-    ).first()
-    return int(row.p1), int(row.p2)
+from .drill import Drill, _ts_tertiles, _write_one_split, read_pinned, run_available_now
+from .util import pinned_shuffle_width
 
 
 # ---------------------------------------------------------------------------
@@ -268,47 +192,31 @@ def q_stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     on_time = F.col("event_id") % 5 != 0
     p1, p2 = _ts_tertiles(e, "ts")
     tsu = F.unix_micros("ts")
-    src, ck = _fresh_dir("wm-src"), _fresh_dir("wm-ck")
-    _write_split_files(
-        e,
-        [
-            on_time & (tsu <= p1),
-            on_time & (tsu > p1),
-            ~on_time,  # replayed/late rows, spread over the whole month
-        ],
-        src,
-    )
-    stream = (
-        spark.readStream.schema("event_id long, ts timestamp, user_id long, value double")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .withWatermark("ts", "10 minutes")
-    )
-    agg = stream.groupBy(F.window("ts", "1 hour")).agg(F.count("*").alias("n_events"))
-    name = f"wm_out_{uuid.uuid4().hex[:8]}"
-    # state-shuffle width pinned like the stateful.py family: each
-    # shuffle partition is a state store checkpointed EVERY micro-batch,
-    # so a small keyed stream wants few wide stores, not cores-many
-    # (r15 profile: the 32-wide batches each cost ~3x their 4-wide twin)
-    with pinned_shuffle_width(spark):
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
+    with Drill(spark, "wm") as drill:
+        src = drill.splits(
+            e,
+            [
+                on_time & (tsu <= p1),
+                on_time & (tsu > p1),
+                ~on_time,  # replayed/late rows, spread over the whole month
+            ],
         )
-        q.awaitTermination()
-    result = tracked_persist(
-        spark.table(name).select(
-            F.unix_micros(F.col("window.start")).alias("window_start_us"), "n_events"
+        stream = read_pinned(
+            spark, "event_id long, ts timestamp, user_id long, value double", src
+        ).withWatermark("ts", "10 minutes")
+        agg = stream.groupBy(F.window("ts", "1 hour")).agg(F.count("*").alias("n_events"))
+        # state-shuffle width pinned like the stateful.py family: each
+        # shuffle partition is a state store checkpointed EVERY micro-batch,
+        # so a small keyed stream wants few wide stores, not cores-many
+        # (r15 profile: the 32-wide batches each cost ~3x their 4-wide twin)
+        return drill.memory(
+            agg,
+            "append",
+            pinned=True,
+            shape=lambda t: t.select(
+                F.unix_micros(F.col("window.start")).alias("window_start_us"), "n_events"
+            ),
         )
-    )
-    result.count()
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(ck, ignore_errors=True)
-    return result
 
 
 @register(
@@ -326,38 +234,22 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cl = changelog(spark, sf_dir)
     p1, p2 = _ts_tertiles(cl, "ts")
     tsu = F.unix_micros("ts")
-    src, ck = _fresh_dir("dedup-src"), _fresh_dir("dedup-ck")
-    _write_split_files(cl, [tsu <= p2, tsu > p2], src)
-    # batch 3: redelivered duplicates
-    _write_one_split(cl.where(F.col("seq_no") % 7 == 0), src, 2)
+    with Drill(spark, "dedup") as drill:
+        src = drill.splits(cl, [tsu <= p2, tsu > p2])
+        # batch 3: redelivered duplicates
+        _write_one_split(cl.where(F.col("seq_no") % 7 == 0), src, 2)
 
-    stream = (
-        spark.readStream.schema(CHANGELOG_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .withWatermark("ts", "10 minutes")
-        .dropDuplicatesWithinWatermark(["content_hash"])
-    )
-    name = f"dedup_out_{uuid.uuid4().hex[:8]}"
-    # state-shuffle width pinned to a few wide stores (stateful.py
-    # rationale; the dedup state op checkpoints one store per shuffle
-    # partition per micro-batch — r15 profile: 1.3-1.5s per 32-wide batch)
-    with pinned_shuffle_width(spark):
-        q = (
-            stream.select("seq_no", "key", "op", "content_hash")
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
+        stream = (
+            read_pinned(spark, CHANGELOG_STREAM_SCHEMA, src)
+            .withWatermark("ts", "10 minutes")
+            .dropDuplicatesWithinWatermark(["content_hash"])
         )
-        q.awaitTermination()
-    result = tracked_persist(spark.table(name))
-    result.count()
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(ck, ignore_errors=True)
-    return result
+        # state-shuffle width pinned to a few wide stores (stateful.py
+        # rationale; the dedup state op checkpoints one store per shuffle
+        # partition per micro-batch — r15 profile: 1.3-1.5s per 32-wide batch)
+        return drill.memory(
+            stream.select("seq_no", "key", "op", "content_hash"), "append", pinned=True
+        )
 
 
 @register(
@@ -388,20 +280,15 @@ def q_stream_foreachbatch_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot = fold_changelog(cl.where(F.col("seq_no") < row.med))
     second = cl.where(F.col("seq_no") >= row.med)
 
-    src, work = _fresh_dir("fb-src"), _fresh_dir("fb-work")
     s = F.col("seq_no")
-    _write_split_files(
-        second, [s < row.p1, (s >= row.p1) & (s < row.p2), s >= row.p2], src
-    )
-
-    with pinned_shuffle_width(spark):
-        final_path = run_cdc_apply(spark, src, snapshot, work)
-        result = tracked_persist(
-            spark.read.parquet(final_path).select("key", "last_seq", "payload_value")
-        )
-        result.count()
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(work, ignore_errors=True)
+    with Drill(spark, "fb") as drill:
+        src = drill.splits(second, [s < row.p1, (s >= row.p1) & (s < row.p2), s >= row.p2])
+        with pinned_shuffle_width(spark):
+            final_path = run_cdc_apply(spark, src, snapshot, drill.dir("work"))
+            result = tracked_persist(
+                spark.read.parquet(final_path).select("key", "last_seq", "payload_value")
+            )
+            result.count()
     return result
 
 
@@ -464,33 +351,15 @@ def q_stream_complete_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events").select("event_id", "ts", "user_id", "value")
     p1, p2 = _ts_tertiles(e, "ts")
     tsu = F.unix_micros("ts")
-    src, ck = _fresh_dir("cm-src"), _fresh_dir("cm-ck")
-    _write_split_files(e, [tsu <= p1, (tsu > p1) & (tsu <= p2), tsu > p2], src)
-
-    agg = (
-        spark.readStream.schema("event_id long, ts timestamp, user_id long, value double")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .groupBy(F.window("ts", "1 hour"))
-        .agg(F.count("*").alias("n_events"))
-        .select(F.unix_micros(F.col("window.start")).alias("window_start_us"), "n_events")
-    )
-    name = f"cm_out_{uuid.uuid4().hex[:8]}"
-    with pinned_shuffle_width(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
+    with Drill(spark, "cm") as drill:
+        src = drill.splits(e, [tsu <= p1, (tsu > p1) & (tsu <= p2), tsu > p2])
+        agg = (
+            read_pinned(spark, "event_id long, ts timestamp, user_id long, value double", src)
+            .groupBy(F.window("ts", "1 hour"))
+            .agg(F.count("*").alias("n_events"))
+            .select(F.unix_micros(F.col("window.start")).alias("window_start_us"), "n_events")
         )
-        q.awaitTermination()
-    result = tracked_persist(spark.table(name))
-    result.count()
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(ck, ignore_errors=True)
-    return result
+        return drill.memory(agg, "complete", pinned=True)
 
 
 @register(
@@ -513,35 +382,20 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events").select("event_id", "ts", "user_id", "event_type", "value")
     p1, p2 = _ts_tertiles(e, "ts")
     tsu = F.unix_micros("ts")
-    src, ck = _fresh_dir("sj-src"), _fresh_dir("sj-ck")
-    _write_split_files(e, [tsu <= p1, (tsu > p1) & (tsu <= p2), tsu > p2], src)
-
-    customers = table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, value double"
+    with Drill(spark, "sj") as drill:
+        src = drill.splits(e, [tsu <= p1, (tsu > p1) & (tsu <= p2), tsu > p2])
+        customers = table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+        stream = (
+            read_pinned(
+                spark,
+                "event_id long, ts timestamp, user_id long, event_type string, value double",
+                src,
+            )
+            .where(F.col("event_type") == "purchase")
+            .join(F.broadcast(customers), F.col("user_id") == F.col("c_custkey"))
+            .select("event_id", "user_id", "c_mktsegment", F.round("value", 2).alias("value"))
         )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .where(F.col("event_type") == "purchase")
-        .join(F.broadcast(customers), F.col("user_id") == F.col("c_custkey"))
-        .select("event_id", "user_id", "c_mktsegment", F.round("value", 2).alias("value"))
-    )
-    name = f"sj_out_{uuid.uuid4().hex[:8]}"
-    q = (
-        stream.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    result = tracked_persist(spark.table(name))
-    result.count()
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(ck, ignore_errors=True)
-    return result
+        return drill.memory(stream, "append")
 
 
 @register(
@@ -565,57 +419,42 @@ def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events").select("event_id", "ts", "user_id", "event_type")
     p1, p2 = _ts_tertiles(e, "ts")
     tsu = F.unix_micros("ts")
-    src, ck = _fresh_dir("ij-src"), _fresh_dir("ij-ck")
-    _write_split_files(e, [tsu <= p1, (tsu > p1) & (tsu <= p2), tsu > p2], src)
-
     schema = "event_id long, ts timestamp, user_id long, event_type string"
+    with Drill(spark, "ij") as drill:
+        src = drill.splits(e, [tsu <= p1, (tsu > p1) & (tsu <= p2), tsu > p2])
 
-    def side(kind: str, prefix: str):
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-            .where(F.col("event_type") == kind)
-            .select(
-                F.col("event_id").alias(f"{prefix}_id"),
-                F.col("user_id").alias(f"{prefix}_user"),
-                F.col("ts").alias(f"{prefix}_ts"),
+        def side(kind: str, prefix: str):
+            return (
+                read_pinned(spark, schema, src)
+                .where(F.col("event_type") == kind)
+                .select(
+                    F.col("event_id").alias(f"{prefix}_id"),
+                    F.col("user_id").alias(f"{prefix}_user"),
+                    F.col("ts").alias(f"{prefix}_ts"),
+                )
+                .withWatermark(f"{prefix}_ts", "1 hour")
             )
-            .withWatermark(f"{prefix}_ts", "1 hour")
-        )
 
-    purchases = side("purchase", "p")
-    signups = side("signup", "s")
-    joined = purchases.join(
-        signups,
-        F.expr(
-            "p_user = s_user AND s_ts BETWEEN p_ts - INTERVAL 7 DAYS AND p_ts"
-        ),
-    )
-    name = f"ij_out_{uuid.uuid4().hex[:8]}"
-    # stream-stream joins keep one state store PER SIDE per shuffle
-    # partition, checkpointed every batch: pin the width to a few wide
-    # stores for this keyed test stream (same rationale as stateful.py)
-    with pinned_shuffle_width(spark):
-        q = (
+        purchases = side("purchase", "p")
+        signups = side("signup", "s")
+        joined = purchases.join(
+            signups,
+            F.expr(
+                "p_user = s_user AND s_ts BETWEEN p_ts - INTERVAL 7 DAYS AND p_ts"
+            ),
+        )
+        # stream-stream joins keep one state store PER SIDE per shuffle
+        # partition, checkpointed every batch: pin the width to a few wide
+        # stores for this keyed test stream (same rationale as stateful.py)
+        return drill.memory(
             joined.select(
                 F.col("p_id").alias("purchase_id"),
                 F.col("s_id").alias("signup_id"),
                 F.col("p_user").alias("user_id"),
-            )
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
+            ),
+            "append",
+            pinned=True,
         )
-        q.awaitTermination()
-    result = tracked_persist(spark.table(name))
-    result.count()
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(ck, ignore_errors=True)
-    return result
 
 
 @register(
@@ -645,11 +484,10 @@ def q_cdc_bucketed_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).first()
     snapshot = fold_changelog(cl.where(F.col("seq_no") < row.med))
 
-    sink_dir = _fresh_dir("bsink")
-    sink = BucketedCdcSink(spark, sink_dir, n_buckets=16)
     s = F.col("seq_no")
     second = cl.where(s >= row.med)
-    with pinned_shuffle_width(spark):
+    with Drill(spark, "bsink") as drill, pinned_shuffle_width(spark):
+        sink = BucketedCdcSink(spark, drill.dir("sink"), n_buckets=16)
         sink.init(snapshot)
         for pred in [s < row.p1, (s >= row.p1) & (s < row.p2), s >= row.p2]:
             sink.apply_batch(second.where(pred))
@@ -657,7 +495,6 @@ def q_cdc_bucketed_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             sink.visible().select("key", "last_seq", "payload_value")
         )
         result.count()
-    shutil.rmtree(sink_dir, ignore_errors=True)
     return result
 
 
@@ -692,12 +529,11 @@ def q_cdc_sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).first()
     snapshot = fold_changelog(cl.where(F.col("seq_no") < row.med))
 
-    sink_dir = _fresh_dir("csink")
-    sink = BucketedCdcSink(spark, sink_dir, n_buckets=16)
     s = F.col("seq_no")
     second = cl.where(s >= row.med)
     is_tomb = F.col("op") == "REMOVE"
-    with pinned_shuffle_width(spark):
+    with Drill(spark, "csink") as drill, pinned_shuffle_width(spark):
+        sink = BucketedCdcSink(spark, drill.dir("sink"), n_buckets=16)
         sink.init(snapshot)
         sink.apply_batch(second.where(s < row.p1))
         sink.apply_batch(second.where((s >= row.p1) & (s < row.p2)))
@@ -710,7 +546,6 @@ def q_cdc_sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             sink.visible().select("key", "last_seq", "payload_value")
         )
         result.count()
-    shutil.rmtree(sink_dir, ignore_errors=True)
     return result
 
 
@@ -757,10 +592,6 @@ def q_stream_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("percentile(doc_id, 0.6667)").alias("p2"),
     ).first()
     d = F.col("doc_id")
-    src, out, ck = _fresh_dir("snd-src"), _fresh_dir("snd-out"), _fresh_dir("snd-ck")
-    _write_split_files(
-        docs, [d < row.p1, (d >= row.p1) & (d < row.p2), d >= row.p2], src
-    )
 
     def dedup_batch(batch: DataFrame, epoch_id: int) -> None:
         bands_b = to_band_buckets(batch)
@@ -794,30 +625,26 @@ def q_stream_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out)
         )
 
-    # NO width pin: each micro-batch runs a real banded join + verify
-    # UDF against the static corpus — compute-bound work that wants the
-    # session width (r16 idle-32 A/B: pinned 8.52 s vs unpinned 5.72 s;
-    # the r15 pin was validated on a loaded host that masked this)
-    q = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(dedup_batch)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    result = tracked_persist(
-        spark.read.schema(
-            "doc_b long, n_dup_sources long, best_jaccard double"
-        ).parquet(out).select(
-            F.col("doc_b").alias("doc_id"), "n_dup_sources", "best_jaccard"
+    with Drill(spark, "snd") as drill:
+        src = drill.splits(docs, [d < row.p1, (d >= row.p1) & (d < row.p2), d >= row.p2])
+        out = drill.dir("out")
+        # NO width pin: each micro-batch runs a real banded join + verify
+        # UDF against the static corpus — compute-bound work that wants the
+        # session width (r16 idle-32 A/B: pinned 8.52 s vs unpinned 5.72 s;
+        # the r15 pin was validated on a loaded host that masked this)
+        run_available_now(
+            read_pinned(spark, "doc_id long, text string", src)
+            .writeStream.foreachBatch(dedup_batch)
+            .option("checkpointLocation", drill.dir("ck"))
         )
-    )
-    result.count()  # materialize before removing the backing dirs
-    for p in (src, out, ck):
-        shutil.rmtree(p, ignore_errors=True)
+        result = tracked_persist(
+            spark.read.schema(
+                "doc_b long, n_dup_sources long, best_jaccard double"
+            ).parquet(out).select(
+                F.col("doc_b").alias("doc_id"), "n_dup_sources", "best_jaccard"
+            )
+        )
+        result.count()  # materialize before removing the backing dirs
     return result
 
 
@@ -864,10 +691,6 @@ def q_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("percentile(doc_id, 0.6667)").alias("p2"),
     ).first()
     d = F.col("doc_id")
-    src, out, ck = _fresh_dir("sdc-src"), _fresh_dir("sdc-out"), _fresh_dir("sdc-ck")
-    _write_split_files(
-        test_docs, [d < row.p1, (d >= row.p1) & (d < row.p2), d >= row.p2], src
-    )
 
     def decon_batch(batch: DataFrame, epoch_id: int) -> None:
         hits = (
@@ -890,25 +713,23 @@ def q_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out)
         )
 
-    # NO width pin: each micro-batch explodes five-grams and joins the
-    # static train vocabulary — compute-bound per-batch work (r16
-    # idle-32 A/B: pinned 9.89 s vs unpinned 2.94 s)
-    q = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(decon_batch)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    result = tracked_persist(
-        spark.read.schema("doc_id long, n_shared long, contaminated int").parquet(out)
-    )
-    result.count()  # materialize before removing the backing dirs
-    for p in (src, out, ck):
-        shutil.rmtree(p, ignore_errors=True)
+    with Drill(spark, "sdc") as drill:
+        src = drill.splits(
+            test_docs, [d < row.p1, (d >= row.p1) & (d < row.p2), d >= row.p2]
+        )
+        out = drill.dir("out")
+        # NO width pin: each micro-batch explodes five-grams and joins the
+        # static train vocabulary — compute-bound per-batch work (r16
+        # idle-32 A/B: pinned 9.89 s vs unpinned 2.94 s)
+        run_available_now(
+            read_pinned(spark, "doc_id long, text string", src)
+            .writeStream.foreachBatch(decon_batch)
+            .option("checkpointLocation", drill.dir("ck"))
+        )
+        result = tracked_persist(
+            spark.read.schema("doc_id long, n_shared long, contaminated int").parquet(out)
+        )
+        result.count()  # materialize before removing the backing dirs
     return result
 
 
@@ -946,40 +767,27 @@ def q_stream_lsh_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("percentile(doc_id, 0.6667)").alias("p2"),
     ).first()
     d = F.col("doc_id")
-    src, work, base = (
-        _fresh_dir("lshing-src"),
-        _fresh_dir("lshing-ck"),
-        _fresh_dir("lshing-idx"),
-    )
-    _write_split_files(
-        docs, [d < row.p1, (d >= row.p1) & (d < row.p2), d >= row.p2], src
-    )
-    idx = LshIndex(spark, os.path.join(base, "t"))
+    with Drill(spark, "lshing") as drill:
+        src = drill.splits(docs, [d < row.p1, (d >= row.p1) & (d < row.p2), d >= row.p2])
+        idx = LshIndex(spark, os.path.join(drill.root, "idx"))
 
-    def upsert_batch(batch: DataFrame, epoch_id: int) -> None:
-        idx.upsert(batch, seq=int(epoch_id) + 2)
+        def upsert_batch(batch: DataFrame, epoch_id: int) -> None:
+            idx.upsert(batch, seq=int(epoch_id) + 2)
 
-    with pinned_shuffle_width(spark):
-        # empty init: the table exists before the stream attaches (the
-        # reference's create-then-attach orchestration, A17)
-        idx.init(docs.where(F.lit(False)), seq=1)
-        q = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-            .writeStream.foreachBatch(upsert_batch)
-            .option("checkpointLocation", os.path.join(work, "_ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    # the PAIR query runs at session width — it is the real compute
-    # (_run_maintenance's scoping; r16 idle-32 A/B: pairs under the pin
-    # cost 17.4 s vs 6.9 s unpinned)
-    result = tracked_persist(idx.pairs(docs))
-    result.count()  # materialize before removing the backing dirs
-    for p in (src, work, base):
-        shutil.rmtree(p, ignore_errors=True)
+        with pinned_shuffle_width(spark):
+            # empty init: the table exists before the stream attaches (the
+            # reference's create-then-attach orchestration, A17)
+            idx.init(docs.where(F.lit(False)), seq=1)
+            run_available_now(
+                read_pinned(spark, "doc_id long, text string", src)
+                .writeStream.foreachBatch(upsert_batch)
+                .option("checkpointLocation", drill.dir("ck"))
+            )
+        # the PAIR query runs at session width — it is the real compute
+        # (_run_maintenance's scoping; r16 idle-32 A/B: pairs under the pin
+        # cost 17.4 s vs 6.9 s unpinned)
+        result = tracked_persist(idx.pairs(docs))
+        result.count()  # materialize before removing the backing dirs
     return result
 
 
@@ -1021,45 +829,32 @@ def q_stream_ivf_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("percentile(vec_id, 0.6667)").alias("p2"),
     ).first()
     v = F.col("vec_id")
-    src, work, base = (
-        _fresh_dir("ivfing-src"),
-        _fresh_dir("ivfing-ck"),
-        _fresh_dir("ivfing-idx"),
-    )
-    _write_split_files(
-        late, [v < row.p1, (v >= row.p1) & (v < row.p2), v >= row.p2], src
-    )
-    idx = IvfIndex(spark, os.path.join(base, "t"))
+    with Drill(spark, "ivfing") as drill:
+        src = drill.splits(late, [v < row.p1, (v >= row.p1) & (v < row.p2), v >= row.p2])
+        idx = IvfIndex(spark, os.path.join(drill.root, "idx"))
 
-    def upsert_batch(batch: DataFrame, epoch_id: int) -> None:
-        idx.upsert(batch, seq=int(epoch_id) + 2)
+        def upsert_batch(batch: DataFrame, epoch_id: int) -> None:
+            idx.upsert(batch, seq=int(epoch_id) + 2)
 
-    floats = table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double("embedding").alias("v")
-    )
-    with pinned_shuffle_width(spark):
-        # init trains the quantizer on the loaded corpus BEFORE the stream
-        # attaches (the reference's create-then-attach orchestration, A17)
-        idx.init(qv.where(v <= c2), seq=1)
-        q = (
-            spark.readStream.schema("vec_id long, qv array<bigint>")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-            .writeStream.foreachBatch(upsert_batch)
-            .option("checkpointLocation", os.path.join(work, "_ck"))
-            .trigger(availableNow=True)
-            .start()
+        floats = table(spark, sf_dir, "embeddings").select(
+            "vec_id", _as_double("embedding").alias("v")
         )
-        q.awaitTermination()
-        idx.remove(qv.where(v % _REMOVE_MOD == 5).select("vec_id"), seq=10)
-    # the probe SEARCH runs at session width — the distance scan over
-    # probed cells is the real compute (_run_maintenance's scoping)
-    result = tracked_persist(
-        idx.search(qv.where(v == PROBE_VEC_ID), floats, PROBE_VEC_ID)
-    )
-    result.count()  # materialize before removing the backing dirs
-    for p in (src, work, base):
-        shutil.rmtree(p, ignore_errors=True)
+        with pinned_shuffle_width(spark):
+            # init trains the quantizer on the loaded corpus BEFORE the stream
+            # attaches (the reference's create-then-attach orchestration, A17)
+            idx.init(qv.where(v <= c2), seq=1)
+            run_available_now(
+                read_pinned(spark, "vec_id long, qv array<bigint>", src)
+                .writeStream.foreachBatch(upsert_batch)
+                .option("checkpointLocation", drill.dir("ck"))
+            )
+            idx.remove(qv.where(v % _REMOVE_MOD == 5).select("vec_id"), seq=10)
+        # the probe SEARCH runs at session width — the distance scan over
+        # probed cells is the real compute (_run_maintenance's scoping)
+        result = tracked_persist(
+            idx.search(qv.where(v == PROBE_VEC_ID), floats, PROBE_VEC_ID)
+        )
+        result.count()  # materialize before removing the backing dirs
     return result
 
 
@@ -1100,47 +895,35 @@ def q_stream_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("percentile(doc_id, 0.6667)").alias("p2"),
     ).first()
     d = F.col("doc_id")
-    src, work, base = (
-        _fresh_dir("scb-src"),
-        _fresh_dir("scb-ck"),
-        _fresh_dir("scb-idx"),
-    )
-    _write_split_files(
-        docs.select("doc_id", "text"),
-        [d < row.p1, (d >= row.p1) & (d < row.p2), d >= row.p2],
-        src,
-    )
-    idx = LshIndex(spark, os.path.join(base, "t"))
-
-    def upsert_batch(batch: DataFrame, epoch_id: int) -> None:
-        idx.upsert(batch, seq=int(epoch_id) + 2)
-
-    with pinned_shuffle_width(spark):
-        idx.init(docs.where(F.lit(False)).select("doc_id", "text"), seq=1)
-        q = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-            .writeStream.foreachBatch(upsert_batch)
-            .option("checkpointLocation", os.path.join(work, "_ck"))
-            .trigger(availableNow=True)
-            .start()
+    with Drill(spark, "scb") as drill:
+        src = drill.splits(
+            docs.select("doc_id", "text"),
+            [d < row.p1, (d >= row.p1) & (d < row.p2), d >= row.p2],
         )
-        q.awaitTermination()
-    # the eight-stage pipeline after ingest (exact dedup, drop set,
-    # downstream build) is the real compute: session width, matching
-    # _run_maintenance's scoping (r16 idle-32 width audit)
-    deduped = tracked_persist(quality_exact_dedup(docs))
-    dd = deduped.select("doc_id")
-    # greedy drop set over the streamed index, endpoints restricted to
-    # the dedup survivors (eligible= replaces the old pairs→semi-join
-    # pair filtering: bands are filtered BEFORE candidates form, same
-    # drop set, fewer verifies); the fan-out auto-gate engages the
-    # two-phase clique mitigation at scale (index_maintenance.drop_set)
-    near_drop = idx.drop_set(docs.select("doc_id", "text"), eligible=dd)
-    survivors = deduped.join(near_drop, "doc_id", "left_anti")
-    result = tracked_persist(downstream_build(docs, survivors))
-    result.count()  # materialize before removing the backing dirs
-    for p in (src, work, base):
-        shutil.rmtree(p, ignore_errors=True)
+        idx = LshIndex(spark, os.path.join(drill.root, "idx"))
+
+        def upsert_batch(batch: DataFrame, epoch_id: int) -> None:
+            idx.upsert(batch, seq=int(epoch_id) + 2)
+
+        with pinned_shuffle_width(spark):
+            idx.init(docs.where(F.lit(False)).select("doc_id", "text"), seq=1)
+            run_available_now(
+                read_pinned(spark, "doc_id long, text string", src)
+                .writeStream.foreachBatch(upsert_batch)
+                .option("checkpointLocation", drill.dir("ck"))
+            )
+        # the eight-stage pipeline after ingest (exact dedup, drop set,
+        # downstream build) is the real compute: session width, matching
+        # _run_maintenance's scoping (r16 idle-32 width audit)
+        deduped = tracked_persist(quality_exact_dedup(docs))
+        dd = deduped.select("doc_id")
+        # greedy drop set over the streamed index, endpoints restricted to
+        # the dedup survivors (eligible= replaces the old pairs→semi-join
+        # pair filtering: bands are filtered BEFORE candidates form, same
+        # drop set, fewer verifies); the fan-out auto-gate engages the
+        # two-phase clique mitigation at scale (index_maintenance.drop_set)
+        near_drop = idx.drop_set(docs.select("doc_id", "text"), eligible=dd)
+        survivors = deduped.join(near_drop, "doc_id", "left_anti")
+        result = tracked_persist(downstream_build(docs, survivors))
+        result.count()  # materialize before removing the backing dirs
     return result

@@ -16,26 +16,15 @@ import contextlib
 import os
 import uuid
 
-# Per-drill shuffle width for the keyed test streams (state stores,
-# foreachBatch window passes over O(users) rows). Each streaming state
-# partition is a store checkpointed EVERY micro-batch, and each batch
-# job pays per-task scheduling, so a small keyed stream wants a few
-# wide partitions, not cores-many. Parameterized (env); kept as the
-# module-level LOCAL default for import compatibility — the effective
-# width is computed per session by drill_width() below.
-STREAM_DRILL_WIDTH = int(os.environ.get("SPARK_GRAFT_STREAM_WIDTH", "4"))
-
 
 def drill_width(spark) -> int:
-    """Effective drill shuffle width for THIS session: the env knob
-    when set, else cores-derived — max(4, defaultParallelism // 8).
-    The r15 verdict's item 3: a fixed constant is right for the local
-    32-core fixtures (32 // 8 = 4, unchanged) but serializes a real
-    cluster; deriving from the session keeps the scheduling win at
-    small core counts without a serialization cliff at large ones."""
-    env = os.environ.get("SPARK_GRAFT_STREAM_WIDTH")
-    if env is not None:
-        return int(env)
+    """Drill shuffle width for THIS session: max(4, defaultParallelism
+    // 8). Each streaming state partition is a store checkpointed EVERY
+    micro-batch, and each batch job pays per-task scheduling, so a small
+    keyed stream wants a few wide partitions, not cores-many. Deriving
+    from the session (r15 verdict item 3) keeps that win at small core
+    counts (32 // 8 = 4, the old constant) without serializing a real
+    cluster."""
     return max(4, spark.sparkContext.defaultParallelism // 8)
 
 

@@ -900,8 +900,6 @@ class VersionedCdcSink:
 # registered queries
 # ---------------------------------------------------------------------------
 
-import tempfile  # noqa: E402
-
 from ..operators.behavior import _Z_EXPR as _BEHAVIOR_Z_EXPR  # noqa: E402
 from ..operators.cdc import (  # noqa: E402
     cdc_merge,
@@ -914,6 +912,7 @@ from ..registry import (  # noqa: E402
     register,
     tracked_persist,
 )
+from .drill import Drill, read_pinned, run_available_now  # noqa: E402
 from .util import atomic_write_text
 
 # One 3-commit sink per (session, corpus), shared by the time-travel /
@@ -1069,44 +1068,26 @@ def q_stream_versioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_seq = cl.agg(F.max("seq_no")).first()[0]  # driver scalar: orchestration
     q1, q2, q3 = max_seq // 3, (5 * max_seq) // 9, (7 * max_seq) // 9
 
-    root = os.path.join(
-        tempfile.gettempdir(), "spark_cdc_engine_stream", f"vsink-{uuid.uuid4().hex[:8]}"
-    )
-    src, work, ckpt = (os.path.join(root, d) for d in ("src", "sink", "ckpt"))
-    os.makedirs(src, exist_ok=True)
-
-    from .stream_queries import _write_split_files  # pinned mtime-ordered splits
-
     s = F.col("seq_no")
-    _write_split_files(
-        cl.where(s > q1),
-        [s <= q2, (s > q2) & (s <= q3), s > q3],
-        src,
-    )
-
-    sink = VersionedCdcSink(spark, work, n_buckets=16)
 
     def commit_batch(batch_df: DataFrame, epoch_id: int) -> None:
         sink.spark = batch_df.sparkSession  # merge reads run on the batch session
         sink.apply_batch(batch_df.select("seq_no", "op", "key", "payload_value"))
 
-    try:
+    with Drill(spark, "vsink") as drill:
+        src = drill.splits(cl.where(s > q1), [s <= q2, (s > q2) & (s <= q3), s > q3])
+        sink = VersionedCdcSink(spark, os.path.join(drill.root, "sink"), n_buckets=16)
         # NO width pin: every micro-batch is a full COW merge
         # (cdc_merge_tombstone over the touched buckets) — compute-bound
         # work that wants the session width (r16 idle-32 A/B: pinned
         # 7.24 s vs unpinned 5.85 s; the r15 pin was validated on a
         # loaded host that masked the lost parallelism)
         sink.init(fold_changelog(cl.where(s <= q1)))
-        q = (
-            spark.readStream.schema(CHANGELOG_STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+        run_available_now(
+            read_pinned(spark, CHANGELOG_STREAM_SCHEMA, src)
             .writeStream.foreachBatch(commit_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", drill.dir("ckpt"))
         )
-        q.awaitTermination()
         sink.spark = spark
         if sink.latest_version() != 4:  # init + 3 split commits
             raise RuntimeError(
@@ -1119,8 +1100,6 @@ def q_stream_versioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             sink.visible(version=3).select("key", "last_seq", "payload_value")
         )
         result.count()  # materialize before the working dir is removed
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     return result
 
 

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from dynamodb_pitr_restore_cdc_spark.session import get_spark
 from dynamodb_pitr_restore_cdc_spark.sources import table
-from dynamodb_pitr_restore_cdc_spark.streaming.stream_queries import (
+from dynamodb_pitr_restore_cdc_spark.streaming.drill import (
     _write_split_files,
 )
 from dynamodb_pitr_restore_cdc_spark.streaming.twins import (

@@ -15,14 +15,9 @@ loudly instead of silently invalidating the exception.
 
 from __future__ import annotations
 
-import os
 from types import SimpleNamespace
-from unittest import mock
 
-from dynamodb_pitr_restore_cdc_spark.streaming.util import (
-    STREAM_DRILL_WIDTH,
-    drill_width,
-)
+from dynamodb_pitr_restore_cdc_spark.streaming.util import drill_width
 
 
 def _fake_spark(parallelism: int):
@@ -32,16 +27,9 @@ def _fake_spark(parallelism: int):
 
 
 def test_drill_width_equals_r15_constant_at_driver_core_counts():
-    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_STREAM_WIDTH"}
-    with mock.patch.dict(os.environ, env, clear=True):
-        for cores in (4, 8, 16, 32):  # the driver benches at 8 and 32
-            assert drill_width(_fake_spark(cores)) == 4 == STREAM_DRILL_WIDTH
-        # the formula departs from the constant only past 39 cores —
-        # i.e. only on real clusters, never under the driver contract
-        assert drill_width(_fake_spark(40)) == 5
-        assert drill_width(_fake_spark(256)) == 32
-
-
-def test_drill_width_env_knob_still_wins():
-    with mock.patch.dict(os.environ, {"SPARK_GRAFT_STREAM_WIDTH": "7"}):
-        assert drill_width(_fake_spark(32)) == 7
+    for cores in (4, 8, 16, 32):  # the driver benches at 8 and 32
+        assert drill_width(_fake_spark(cores)) == 4
+    # the formula departs from the constant only past 39 cores —
+    # i.e. only on real clusters, never under the driver contract
+    assert drill_width(_fake_spark(40)) == 5
+    assert drill_width(_fake_spark(256)) == 32

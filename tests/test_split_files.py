@@ -17,7 +17,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from dynamodb_pitr_restore_cdc_spark.streaming.stream_queries import (
+from dynamodb_pitr_restore_cdc_spark.streaming.drill import (
     _SPLIT_BASE_MTIME,
     _write_one_split,
     _write_split_files,

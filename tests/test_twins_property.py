@@ -81,7 +81,7 @@ def test_session_stream_resumes_from_committed_store(spark, tmp_path):
     to the session store."""
     import os
 
-    from dynamodb_pitr_restore_cdc_spark.streaming.stream_queries import (
+    from dynamodb_pitr_restore_cdc_spark.streaming.drill import (
         _write_one_split,
     )
     from dynamodb_pitr_restore_cdc_spark.streaming.twins import (
@@ -127,7 +127,7 @@ def test_alert_stream_resumes_without_duplicate_alerts(spark, tmp_path):
     import os
     import shutil
 
-    from dynamodb_pitr_restore_cdc_spark.streaming.stream_queries import (
+    from dynamodb_pitr_restore_cdc_spark.streaming.drill import (
         _write_one_split,
     )
     from dynamodb_pitr_restore_cdc_spark.streaming.twins import (
@@ -182,7 +182,7 @@ def test_ewma_stream_resumes_with_bounded_tail(spark, tmp_path):
     single-run emission (which parity already proves == batch)."""
     import os
 
-    from dynamodb_pitr_restore_cdc_spark.streaming.stream_queries import (
+    from dynamodb_pitr_restore_cdc_spark.streaming.drill import (
         _write_one_split,
     )
     from dynamodb_pitr_restore_cdc_spark.streaming.twins import (
@@ -236,7 +236,7 @@ def test_alert_stream_absorbs_phantom_commit(spark, tmp_path):
 
     import pandas as pd
 
-    from dynamodb_pitr_restore_cdc_spark.streaming.stream_queries import (
+    from dynamodb_pitr_restore_cdc_spark.streaming.drill import (
         _write_one_split,
     )
     from dynamodb_pitr_restore_cdc_spark.streaming.twins import (
@@ -298,7 +298,7 @@ def test_cusum_stream_resumes_from_committed_store(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from dynamodb_pitr_restore_cdc_spark.streaming.stream_queries import (
+    from dynamodb_pitr_restore_cdc_spark.streaming.drill import (
         _write_one_split,
     )
     from dynamodb_pitr_restore_cdc_spark.streaming.twins import (
@@ -363,7 +363,7 @@ def test_semantic_neardup_stream_resumes_without_duplicate_pairs(spark, tmp_path
         read_semantic_pairs,
         run_semantic_stream,
     )
-    from dynamodb_pitr_restore_cdc_spark.streaming.stream_queries import (
+    from dynamodb_pitr_restore_cdc_spark.streaming.drill import (
         _write_one_split,
     )
 
@@ -409,7 +409,7 @@ def test_hw_stream_resumes_with_carried_smoothings(spark, tmp_path):
     recomputed-from-truncated-history s1 would diverge here."""
     import os
 
-    from dynamodb_pitr_restore_cdc_spark.streaming.stream_queries import (
+    from dynamodb_pitr_restore_cdc_spark.streaming.drill import (
         _write_one_split,
     )
     from dynamodb_pitr_restore_cdc_spark.streaming.twins import (
@@ -464,7 +464,7 @@ def test_hw_stream_resume_survives_torn_pointer_attempt(spark, tmp_path):
     write landed IN `_LATEST` and permanently wedged every resume.)"""
     import os
 
-    from dynamodb_pitr_restore_cdc_spark.streaming.stream_queries import (
+    from dynamodb_pitr_restore_cdc_spark.streaming.drill import (
         _write_one_split,
     )
     from dynamodb_pitr_restore_cdc_spark.streaming.twins import (
@@ -524,7 +524,7 @@ def test_heavy_hitters_exact_when_capacity_exceeds_keys(spark, tmp_path):
 
     import pandas as pd
 
-    from dynamodb_pitr_restore_cdc_spark.streaming.stream_queries import (
+    from dynamodb_pitr_restore_cdc_spark.streaming.drill import (
         _write_one_split,
     )
     from dynamodb_pitr_restore_cdc_spark.streaming.twins import (
@@ -559,7 +559,7 @@ def test_heavy_hitters_bounds_hold_under_eviction(spark, tmp_path):
 
     import pandas as pd
 
-    from dynamodb_pitr_restore_cdc_spark.streaming.stream_queries import (
+    from dynamodb_pitr_restore_cdc_spark.streaming.drill import (
         _write_one_split,
     )
     from dynamodb_pitr_restore_cdc_spark.streaming.twins import (
@@ -603,7 +603,7 @@ def test_heavy_hitters_stream_resumes_from_committed_summary(spark, tmp_path):
 
     import pandas as pd
 
-    from dynamodb_pitr_restore_cdc_spark.streaming.stream_queries import (
+    from dynamodb_pitr_restore_cdc_spark.streaming.drill import (
         _write_one_split,
     )
     from dynamodb_pitr_restore_cdc_spark.streaming.twins import (

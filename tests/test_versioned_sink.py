@@ -186,7 +186,7 @@ def test_streaming_commits_resume_from_checkpoint(spark, tmp_path):
     from dynamodb_pitr_restore_cdc_spark.streaming.cdc_stream import (
         CHANGELOG_STREAM_SCHEMA,
     )
-    from dynamodb_pitr_restore_cdc_spark.streaming.stream_queries import (
+    from dynamodb_pitr_restore_cdc_spark.streaming.drill import (
         _write_one_split,
     )
 

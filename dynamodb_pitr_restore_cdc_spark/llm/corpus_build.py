@@ -25,10 +25,6 @@ text after the index is built.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -237,10 +233,9 @@ def q_llm_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # referenced by index init (an action), both text sides of the pair
     # verify, and the anti-join base — one materialization, four reads
+    from ..streaming.drill import Drill
     from ..streaming.util import pinned_shuffle_width
 
-    base = tempfile.mkdtemp(prefix="corpusbuild-")
-    idx = LshIndex(spark, os.path.join(base, "t"))
     # Scoped drill width. What executes where (every frame here is
     # lazy, so a phase runs under the width of the ACTION that
     # triggers it):
@@ -257,13 +252,14 @@ def q_llm_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r16 interleaved same-session A/B (median of 5, variants
     # alternated per run): this scoped form 5.09 s / full pin 5.54 s /
     # no pin 7.46 s.
-    with pinned_shuffle_width(spark):
-        deduped = tracked_persist(quality_exact_dedup(docs))
-        idx.init(deduped.select("doc_id", "text"))
-    near_drop = idx.drop_set(deduped.select("doc_id", "text"))
-    survivors = deduped.join(near_drop, "doc_id", "left_anti")
-    with pinned_shuffle_width(spark):
-        result = tracked_persist(downstream_build(docs, survivors))
-        result.count()  # materialize before the index's backing dir goes away
-    shutil.rmtree(base, ignore_errors=True)
+    with Drill(spark, "corpusbuild") as d:
+        idx = LshIndex(spark, d.dir("t"))
+        with pinned_shuffle_width(spark):
+            deduped = tracked_persist(quality_exact_dedup(docs))
+            idx.init(deduped.select("doc_id", "text"))
+        near_drop = idx.drop_set(deduped.select("doc_id", "text"))
+        survivors = deduped.join(near_drop, "doc_id", "left_anti")
+        with pinned_shuffle_width(spark):
+            result = tracked_persist(downstream_build(docs, survivors))
+            result.count()  # materialize before the index's backing dir goes away
     return result

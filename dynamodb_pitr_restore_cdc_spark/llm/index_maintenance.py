@@ -32,8 +32,6 @@ that keeps continuous dedup viable at 10⁹ documents.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,6 +39,7 @@ from pyspark.sql import functions as F
 from ..registry import register, release_checkpoint, tracked_checkpoint, tracked_persist
 from ..sources import table
 from ..streaming.delta_log_sink import DeltaLogSink
+from ..streaming.drill import Drill
 from .dedup import (
     JACCARD_THRESHOLD,
     PAIR_SELECT_SQL,
@@ -326,17 +325,16 @@ live AS (SELECT vec_id FROM embeddings WHERE vec_id % {_REMOVE_MOD} <> 5),
 
 
 def _run_maintenance(
-    spark: SparkSession, sf_dir: str, mid_hook=None
-) -> tuple[LshIndex, DataFrame, int, str]:
-    """init → late ingest → edits → [mid_hook(idx)] → retractions;
-    returns (index, final corpus frame, index version after init, tmp
-    root). ``mid_hook`` runs BETWEEN upsert epochs — the seam where
-    table maintenance on the index state happens in production (the
-    compaction-under-query drill injects optimize_plan → compact_mor
-    there)."""
+    spark: SparkSession, sf_dir: str, path: str, mid_hook=None
+) -> tuple[LshIndex, DataFrame, int]:
+    """init → late ingest → edits → [mid_hook(idx)] → retractions of an
+    index at `path`; returns (index, final corpus frame, index version
+    after init). ``mid_hook`` runs BETWEEN upsert epochs — the seam
+    where table maintenance on the index state happens in production
+    (the compaction-under-query drill injects optimize_plan →
+    compact_mor there)."""
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    base = tempfile.mkdtemp(prefix="lshidx-")
-    idx = LshIndex(spark, os.path.join(base, "t"))
+    idx = LshIndex(spark, path)
     edited = (
         docs.where(F.col("doc_id") % _EDIT_MOD == 3)
         .alias("r")
@@ -379,7 +377,7 @@ def _run_maintenance(
     # _verify joins the corpus twice (doc_a and doc_b sides — no
     # cross-branch CSE), so the edit-application join must not rebuild
     # per branch; released by the harness via release_persisted()
-    return idx, tracked_persist(final), v0, base
+    return idx, tracked_persist(final), v0
 
 
 def _register() -> None:
@@ -407,10 +405,10 @@ WITH {_FINAL_CORPUS_SQL},
         (sink blind-append lane); the signature UDF runs once per
         INGESTED row, which is the property that keeps continuous
         dedup viable at 10⁹ docs."""
-        idx, final, _v0, base = _run_maintenance(spark, sf_dir)
-        result = tracked_persist(idx.pairs(final))
-        result.count()  # materialize before the backing dirs go away
-        shutil.rmtree(base, ignore_errors=True)
+        with Drill(spark, "lshidx") as d:
+            idx, final, _v0 = _run_maintenance(spark, sf_dir, d.dir("t"))
+            result = tracked_persist(idx.pairs(final))
+            result.count()  # materialize before the backing dirs go away
         return result
 
     from .similarity import PROBE_VEC_ID
@@ -441,28 +439,27 @@ WITH {_FINAL_CORPUS_SQL},
         q = _quantized(spark, sf_dir)
         mx = q.agg(F.max("vec_id")).first()[0]  # orchestration scalar
         c2 = (2 * int(mx)) // 3
-        base = tempfile.mkdtemp(prefix="ivfidx-")
-        idx = IvfIndex(spark, os.path.join(base, "t"))
-        # NO width pin: init trains the coarse quantizer (Lloyd
-        # iterations — real compute; r16 idle-32 A/B: pinned 9.70 s vs
-        # session width 7.86 s)
-        idx.init(q.where(F.col("vec_id") <= c2), seq=1)
-        idx.upsert(q.where(F.col("vec_id") > c2), seq=2)
-        idx.remove(
-            q.where(F.col("vec_id") % _REMOVE_MOD == 5).select("vec_id"), seq=3
-        )
-        from .similarity import _as_double
-
-        floats = table(spark, sf_dir, "embeddings").select(
-            "vec_id", _as_double("embedding").alias("v")
-        )
-        result = tracked_persist(
-            idx.search(
-                q.where(F.col("vec_id") == PROBE_VEC_ID), floats, PROBE_VEC_ID
+        with Drill(spark, "ivfidx") as d:
+            idx = IvfIndex(spark, d.dir("t"))
+            # NO width pin: init trains the coarse quantizer (Lloyd
+            # iterations — real compute; r16 idle-32 A/B: pinned 9.70 s vs
+            # session width 7.86 s)
+            idx.init(q.where(F.col("vec_id") <= c2), seq=1)
+            idx.upsert(q.where(F.col("vec_id") > c2), seq=2)
+            idx.remove(
+                q.where(F.col("vec_id") % _REMOVE_MOD == 5).select("vec_id"), seq=3
             )
-        )
-        result.count()  # materialize before the backing dirs go away
-        shutil.rmtree(base, ignore_errors=True)
+            from .similarity import _as_double
+
+            floats = table(spark, sf_dir, "embeddings").select(
+                "vec_id", _as_double("embedding").alias("v")
+            )
+            result = tracked_persist(
+                idx.search(
+                    q.where(F.col("vec_id") == PROBE_VEC_ID), floats, PROBE_VEC_ID
+                )
+            )
+            result.count()  # materialize before the backing dirs go away
         return result
 
     @register(
@@ -500,10 +497,10 @@ WHERE j_milli >= {int(JACCARD_THRESHOLD * 1000)}
         brute-force truth to pairs touching it. Deletions are excluded
         by both sides: the feed's DELETE rows are the retraction
         signal, no pair compute needed."""
-        idx, final, v0, base = _run_maintenance(spark, sf_dir)
-        result = tracked_persist(idx.delta_pairs(v0, final))
-        result.count()  # materialize before the backing dirs go away
-        shutil.rmtree(base, ignore_errors=True)
+        with Drill(spark, "lshidx") as d:
+            idx, final, v0 = _run_maintenance(spark, sf_dir, d.dir("t"))
+            result = tracked_persist(idx.delta_pairs(v0, final))
+            result.count()  # materialize before the backing dirs go away
         return result
 
     @register(
@@ -541,10 +538,12 @@ WITH {_FINAL_CORPUS_SQL},
             assert to_compact, "fixture must trip the small-file fan-in rule"
             idx.sink.compact_mor(to_compact)
 
-        idx, final, _v0, base = _run_maintenance(spark, sf_dir, mid_hook=compact)
-        result = tracked_persist(idx.pairs(final))
-        result.count()  # materialize before the backing dirs go away
-        shutil.rmtree(base, ignore_errors=True)
+        with Drill(spark, "lshidx") as d:
+            idx, final, _v0 = _run_maintenance(
+                spark, sf_dir, d.dir("t"), mid_hook=compact
+            )
+            result = tracked_persist(idx.pairs(final))
+            result.count()  # materialize before the backing dirs go away
         return result
 
 

@@ -51,10 +51,6 @@ q_llm_lsh_index_delta_pairs — point reads in a production store).
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -296,18 +292,15 @@ def q_llm_pack_manifest_incremental(
     docs = raw.where(
         (F.col("doc_id") <= cut) | F.col("lang").isin(*BATCH_LANGS)
     )
+    from ..streaming.drill import Drill
     from ..streaming.util import pinned_shuffle_width
 
-    base = tempfile.mkdtemp(prefix="manifestincr-")
     # the whole cadence is ~70 jobs over ≤5000-doc frames (r15 profile:
     # nearly all of them 33-98 task stages at cores-wide shuffle width);
     # the drill width cuts per-job scheduling cost, and every stage is a
     # partition-count-independent agg/join (the dropset gate is a
     # count-based scalar)
-    with pinned_shuffle_width(spark):
-        result = tracked_persist(
-            incremental_manifest(spark, docs, cut, os.path.join(base, "t"))
-        )
+    with Drill(spark, "manifestincr") as d, pinned_shuffle_width(spark):
+        result = tracked_persist(incremental_manifest(spark, docs, cut, d.dir("t")))
         result.count()  # materialize before the index's backing dir goes away
-    shutil.rmtree(base, ignore_errors=True)
     return result

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register, tracked_persist
 from ..sources import table
+from ..streaming.drill import Drill
 
 # ---------------------------------------------------------------------------
 # changelog derivation (twin-written: Spark builder + DuckDB SQL)
@@ -552,36 +553,27 @@ def q_cdc_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter. At 100 TB schema evolution costs nothing at write time
     (files keep their own schema; no table-wide rewrite) and one footer
     union at read planning."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     cl = changelog(spark, sf_dir)
-    out = os.path.join(
-        tempfile.gettempdir(), "spark_cdc_engine_sink", f"evolve-{uuid.uuid4().hex[:8]}"
-    )
-    # old-writer records (seq_no % 10 < 5): no payload_props column yet
-    cl.where(F.col("seq_no") % 10 < 5).select(
-        "seq_no", "op", "key", "payload_value"
-    ).write.mode("overwrite").parquet(os.path.join(out, "old"))
-    # new-writer records: the evolved shape carries the new attribute
-    cl.where(F.col("seq_no") % 10 >= 5).select(
-        "seq_no", "op", "key", "payload_value", "payload_props"
-    ).write.mode("overwrite").parquet(os.path.join(out, "new"))
+    with Drill(spark, "evolve") as d:
+        old, new = d.dir("old"), d.dir("new")
+        # old-writer records (seq_no % 10 < 5): no payload_props column yet
+        cl.where(F.col("seq_no") % 10 < 5).select(
+            "seq_no", "op", "key", "payload_value"
+        ).write.mode("overwrite").parquet(old)
+        # new-writer records: the evolved shape carries the new attribute
+        cl.where(F.col("seq_no") % 10 >= 5).select(
+            "seq_no", "op", "key", "payload_value", "payload_props"
+        ).write.mode("overwrite").parquet(new)
 
-    merged = spark.read.option("mergeSchema", "true").parquet(
-        os.path.join(out, "old"), os.path.join(out, "new")
-    )
-    snap = latest_per_key(merged).where(F.col("op") != "REMOVE").select(
-        "key",
-        F.col("seq_no").alias("last_seq"),
-        "payload_value",
-        "payload_props",
-    )
-    result = tracked_persist(snap)  # materialize before the backing dir is removed
-    result.count()
-    shutil.rmtree(out, ignore_errors=True)
+        merged = spark.read.option("mergeSchema", "true").parquet(old, new)
+        snap = latest_per_key(merged).where(F.col("op") != "REMOVE").select(
+            "key",
+            F.col("seq_no").alias("last_seq"),
+            "payload_value",
+            "payload_props",
+        )
+        result = tracked_persist(snap)  # materialize before the backing dir is removed
+        result.count()
     return result
 
 

@@ -23,7 +23,6 @@ every subsequent query, which is exactly the 100 TB trade."""
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 import uuid
 
@@ -33,6 +32,7 @@ from pyspark.sql import functions as F
 from ..functions.rounding import cents
 from ..registry import pid_scoped_root, register, tracked_persist
 from ..sources import table
+from ..streaming.drill import Drill
 
 
 @register(
@@ -55,30 +55,26 @@ def q_scan_partitioned_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     values come back through partitionColumnTypeInference (a yyyy
     directory name reads as INT) — outputs that expose the partition
     column cast it explicitly."""
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "spark_cdc_engine_sink",
-        f"orders_part-{uuid.uuid4().hex[:8]}",
-    )
-    (
-        table(spark, sf_dir, "orders")
-        .withColumn("o_year", F.date_format("o_orderdate", "yyyy"))
-        .write.mode("overwrite")
-        .partitionBy("o_year")
-        .parquet(out)
-    )
-    result = tracked_persist(
-        spark.read.parquet(out)
-        .where(F.col("o_year") == "1997")
-        .select(
-            "o_orderkey",
-            "o_custkey",
-            "o_orderstatus",
-            F.round("o_totalprice", 2).alias("total_price"),
+    with Drill(spark, "orders_part") as d:
+        out = d.dir("orders")
+        (
+            table(spark, sf_dir, "orders")
+            .withColumn("o_year", F.date_format("o_orderdate", "yyyy"))
+            .write.mode("overwrite")
+            .partitionBy("o_year")
+            .parquet(out)
         )
-    )
-    result.count()  # materialize before removing the backing dir
-    shutil.rmtree(out, ignore_errors=True)
+        result = tracked_persist(
+            spark.read.parquet(out)
+            .where(F.col("o_year") == "1997")
+            .select(
+                "o_orderkey",
+                "o_custkey",
+                "o_orderstatus",
+                F.round("o_totalprice", 2).alias("total_price"),
+            )
+        )
+        result.count()  # materialize before removing the backing dir
     return result
 
 
@@ -324,36 +320,32 @@ def q_join_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFr
     dim-derived partition key). At 100 TB DPP is what makes
     star-schema queries over a date-partitioned fact read days, not
     years, without the user naming dates on the fact."""
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "spark_cdc_engine_sink",
-        f"orders_dpp-{uuid.uuid4().hex[:8]}",
-    )
-    (
-        table(spark, sf_dir, "orders")
-        .withColumn("o_year", F.date_format("o_orderdate", "yyyy"))
-        .write.mode("overwrite")
-        .partitionBy("o_year")
-        .parquet(out)
-    )
-    c = table(spark, sf_dir, "customer").where(
-        F.col("c_mktsegment") == "BUILDING"
-    )
-    o = spark.read.parquet(out).where(F.col("o_year").isin("1996", "1997"))
-    result = tracked_persist(
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        # partitionColumnTypeInference reads o_year back as INT; cast
-        # to string AFTER the pruning filter so the directory skipping
-        # happens on the native partition type
-        .groupBy(F.col("o_year").cast("string").alias("o_year"))
-        .agg(
-            F.count("*").alias("n_orders"),
-            (F.sum(cents("o_totalprice")) / 100.0).alias("total_price"),
+    with Drill(spark, "orders_dpp") as d:
+        out = d.dir("orders")
+        (
+            table(spark, sf_dir, "orders")
+            .withColumn("o_year", F.date_format("o_orderdate", "yyyy"))
+            .write.mode("overwrite")
+            .partitionBy("o_year")
+            .parquet(out)
         )
-        .orderBy("o_year")
-    )
-    result.count()  # materialize before removing the backing dir
-    shutil.rmtree(out, ignore_errors=True)
+        c = table(spark, sf_dir, "customer").where(
+            F.col("c_mktsegment") == "BUILDING"
+        )
+        o = spark.read.parquet(out).where(F.col("o_year").isin("1996", "1997"))
+        result = tracked_persist(
+            o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
+            # partitionColumnTypeInference reads o_year back as INT; cast
+            # to string AFTER the pruning filter so the directory skipping
+            # happens on the native partition type
+            .groupBy(F.col("o_year").cast("string").alias("o_year"))
+            .agg(
+                F.count("*").alias("n_orders"),
+                (F.sum(cents("o_totalprice")) / 100.0).alias("total_price"),
+            )
+            .orderBy("o_year")
+        )
+        result.count()  # materialize before removing the backing dir
     return result
 
 

@@ -10,15 +10,12 @@ the predicate (ReadSchema / PushedFilters in the formatted plan) — at
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register, tracked_persist
 from ..sources import table
+from ..streaming.drill import Drill
 
 
 @register(
@@ -74,25 +71,21 @@ def q_scan_json_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     inference — SURVEY §1.3), proving the second source format's
     value fidelity against the parquet-direct oracle. Doubles survive
     because Spark's JSON writer emits shortest-round-trip decimals."""
-    import uuid
-
-    out = os.path.join(
-        tempfile.gettempdir(), "spark_cdc_engine_sink", f"events_json-{uuid.uuid4().hex[:8]}"
-    )
-    subset = (
-        table(spark, sf_dir, "events")
-        .where(F.col("event_id") % 10 == 0)
-        .select("event_id", "user_id", F.round("value", 2).alias("value"))
-    )
-    subset.write.mode("overwrite").json(out)
-    # tracked: harnesses release after consuming the result, so the
-    # cached rows don't outlive the run (the backing dir is gone, so
-    # the plan is never recomputed after release — it's fully consumed)
-    result = tracked_persist(
-        spark.read.schema("event_id long, user_id long, value double").json(out)
-    )
-    result.count()  # materialize before removing the backing dir
-    shutil.rmtree(out, ignore_errors=True)
+    with Drill(spark, "events_json") as d:
+        out = d.dir("data")
+        subset = (
+            table(spark, sf_dir, "events")
+            .where(F.col("event_id") % 10 == 0)
+            .select("event_id", "user_id", F.round("value", 2).alias("value"))
+        )
+        subset.write.mode("overwrite").json(out)
+        # tracked: harnesses release after consuming the result, so the
+        # cached rows don't outlive the run (the backing dir is gone, so
+        # the plan is never recomputed after release — it's fully consumed)
+        result = tracked_persist(
+            spark.read.schema("event_id long, user_id long, value double").json(out)
+        )
+        result.count()  # materialize before removing the backing dir
     return result
 
 
@@ -114,26 +107,22 @@ def q_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     read-back proves schema round-trip stability. Oracle: the same
     aggregate computed directly on the source — equality IS the
     roundtrip contract."""
-    import uuid
-
     # unique path per invocation: a fixed path would collide if the
     # harness ever runs two queries concurrently
-    out = os.path.join(
-        tempfile.gettempdir(), "spark_cdc_engine_sink", f"orders_roundtrip-{uuid.uuid4().hex[:8]}"
-    )
-    orders = table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
-    )
-    orders.write.mode("overwrite").parquet(out)
-    back = spark.read.parquet(out)
-    result = tracked_persist(  # see q_scan_json_source: released post-consumption
-        back.groupBy("o_orderstatus").agg(
-            F.count("*").alias("n_rows"),
-            F.round(F.sum("o_totalprice"), 2).alias("sum_total"),
+    with Drill(spark, "orders_roundtrip") as d:
+        out = d.dir("data")
+        orders = table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
         )
-    )
-    result.count()  # materialize before removing the backing dir
-    shutil.rmtree(out, ignore_errors=True)
+        orders.write.mode("overwrite").parquet(out)
+        back = spark.read.parquet(out)
+        result = tracked_persist(  # see q_scan_json_source: released post-consumption
+            back.groupBy("o_orderstatus").agg(
+                F.count("*").alias("n_rows"),
+                F.round(F.sum("o_totalprice"), 2).alias("sum_total"),
+            )
+        )
+        result.count()  # materialize before removing the backing dir
     return result
 
 
@@ -150,24 +139,20 @@ def q_scan_csv_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     headered CSV and read back with an EXPLICIT schema (never
     inference — SURVEY §1.3). Doubles survive because Spark's CSV
     writer emits shortest-round-trip decimals, same as the JSON path."""
-    import uuid
-
-    out = os.path.join(
-        tempfile.gettempdir(), "spark_cdc_engine_sink", f"events_csv-{uuid.uuid4().hex[:8]}"
-    )
-    subset = (
-        table(spark, sf_dir, "events")
-        .where(F.col("event_id") % 10 == 3)
-        .select("event_id", "user_id", F.round("value", 2).alias("value"))
-    )
-    subset.write.mode("overwrite").option("header", "true").csv(out)
-    result = tracked_persist(  # released post-consumption (see q_scan_json_source)
-        spark.read.schema("event_id long, user_id long, value double")
-        .option("header", "true")
-        .csv(out)
-    )
-    result.count()  # materialize before removing the backing dir
-    shutil.rmtree(out, ignore_errors=True)
+    with Drill(spark, "events_csv") as d:
+        out = d.dir("data")
+        subset = (
+            table(spark, sf_dir, "events")
+            .where(F.col("event_id") % 10 == 3)
+            .select("event_id", "user_id", F.round("value", 2).alias("value"))
+        )
+        subset.write.mode("overwrite").option("header", "true").csv(out)
+        result = tracked_persist(  # released post-consumption (see q_scan_json_source)
+            spark.read.schema("event_id long, user_id long, value double")
+            .option("header", "true")
+            .csv(out)
+        )
+        result.count()  # materialize before removing the backing dir
     return result
 
 
@@ -187,34 +172,30 @@ def q_scan_orc_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate pushdown + column pruning as parquet, so the read-back
     scan stays prunable. Timestamps survive natively (no string round
     trip) and leave as epoch-us per the engine-wide contract."""
-    import uuid
-
-    out = os.path.join(
-        tempfile.gettempdir(), "spark_cdc_engine_sink", f"orders_orc-{uuid.uuid4().hex[:8]}"
-    )
-    subset = (
-        table(spark, sf_dir, "orders")
-        .where(F.col("o_orderkey") % 7 == 0)
-        .select(
-            "o_orderkey",
-            "o_custkey",
-            "o_orderstatus",
-            F.round("o_totalprice", 2).alias("total_price"),
-            "o_orderdate",
+    with Drill(spark, "orders_orc") as d:
+        out = d.dir("data")
+        subset = (
+            table(spark, sf_dir, "orders")
+            .where(F.col("o_orderkey") % 7 == 0)
+            .select(
+                "o_orderkey",
+                "o_custkey",
+                "o_orderstatus",
+                F.round("o_totalprice", 2).alias("total_price"),
+                "o_orderdate",
+            )
         )
-    )
-    subset.write.mode("overwrite").orc(out)
-    result = tracked_persist(  # released post-consumption (see q_scan_json_source)
-        spark.read.orc(out).select(
-            "o_orderkey",
-            "o_custkey",
-            "o_orderstatus",
-            "total_price",
-            F.unix_micros("o_orderdate").alias("order_date_us"),
+        subset.write.mode("overwrite").orc(out)
+        result = tracked_persist(  # released post-consumption (see q_scan_json_source)
+            spark.read.orc(out).select(
+                "o_orderkey",
+                "o_custkey",
+                "o_orderstatus",
+                "total_price",
+                F.unix_micros("o_orderdate").alias("order_date_us"),
+            )
         )
-    )
-    result.count()  # materialize before removing the backing dir
-    shutil.rmtree(out, ignore_errors=True)
+        result.count()  # materialize before removing the backing dir
     return result
 
 

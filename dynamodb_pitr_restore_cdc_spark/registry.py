@@ -188,10 +188,14 @@ REVERIFY_SEEDS: dict[str, int] = {
     "q_cdc_iceberg_schema_evolution": 16,
     "q_cdc_iceberg_optimize_plan": 16,
     # The other sink write sites moved onto the one bucket writer:
-    # versioned sink, corpus builds, BucketedCdcSink.apply_batch/compact.
+    # versioned sink and corpus builds.
     "q_stream_versioned_sink": 16,
     "q_llm_corpus_build": 16,
     "q_stream_corpus_build": 16,
+    # The paper's replay commits through the log-table core: the
+    # foreachBatch drain (epoch-identified MERGE) and the bucketed-sink
+    # drills (a 16-bucket DeltaLogSink).
+    "q_stream_foreachbatch_cdc": 16,
     "q_cdc_bucketed_sink": 16,
     "q_cdc_sink_compaction": 16,
     # The LSH/IVF index drills: their index tables are DeltaLogSinks
@@ -223,6 +227,8 @@ REVERIFY_SEEDS: dict[str, int] = {
     "q_llm_ann_ivfadc": 16,
     "q_llm_ann_ivfpq_residual": 16,
     "q_llm_ann_pq": 16,
+    # The space-saving summary is read back with its schema.
+    "q_stream_heavy_hitters": 16,
 }
 
 

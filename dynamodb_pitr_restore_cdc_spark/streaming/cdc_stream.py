@@ -4,19 +4,16 @@ Structured Streaming (SURVEY.md §3).
 Reference shape: DynamoDB Stream → SQS FIFO buffer → Lambda drain →
 batch_write_item (cdc-to-sqs/main.py:25-34, lambda-backfill/main.py:25-46).
 Spark shape: file/Kafka `readStream` → validation filter-split (DLQ) →
-`writeStream.foreachBatch(cdc_merge)` with checkpointing. The stream's
-checkpoint replaces the SQS buffer (A4), micro-batching replaces the
-ESM batching policy (A15), and the seq_no guard inside cdc_merge
+`writeStream.foreachBatch` → one MERGE commit per micro-batch into a
+Delta-format `LogTable`, with checkpointing. The stream's checkpoint
+replaces the SQS buffer (A4), micro-batching replaces the ESM batching
+policy (A15), and the per-key max-seq guard of the tombstoned merge
 replaces FIFO delivery (A6) — order is recovered from data, never
 assumed from arrival.
 
-Scale notes (100 TB): the sink here is plain keyed Parquet, rewritten
-read-modify-write per micro-batch — correct but O(sink) per batch. The
-production-shape upgrade (same cdc_merge logic, different sink driver)
-is a key-bucketed layout where each micro-batch rewrites only the
-buckets its keys hash into, or a MERGE INTO against a table format
-(Delta/Iceberg) when available; cdc_merge itself is already
-partition-parallel and sink-agnostic.
+Scale notes (100 TB): each micro-batch reads and rewrites only the
+buckets its keys hash into (the commit core prunes from log metadata),
+so the files written per epoch are O(touched buckets), not O(table).
 """
 
 from __future__ import annotations
@@ -27,8 +24,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.cdc import cdc_merge
-from .drill import fold_versions, run_available_now
+from .delta_log_sink import DeltaLogSink
+from .drill import run_available_now
+from .log_table import NoTable
 
 CHANGELOG_STREAM_SCHEMA = T.StructType(
     [
@@ -125,34 +123,44 @@ def split_dlq(stream: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 
 def run_cdc_apply(
-    spark: SparkSession,
-    src_dir: str,
-    snapshot: DataFrame,
-    work_dir: str,
-    dlq_dir: str | None = None,
+    spark: SparkSession, src_dir: str, snapshot: DataFrame, work_dir: str
 ) -> str:
-    """Drain all available changelog files through foreachBatch(cdc_merge),
-    starting from `snapshot`. Returns the path of the final sink version.
+    """Drain all available changelog files into a Delta-format table
+    restored from `snapshot`; returns the table root (``work_dir/table``,
+    read it through ``DeltaLogSink(spark, path).visible()``).
 
-    Versioned-directory sink: each micro-batch writes `v{epoch}` and
-    advances a pointer — read-modify-write against an immutable input,
-    so a replayed epoch (at-least-once delivery) simply overwrites its
-    own output and, thanks to the seq_no guard in cdc_merge, converges
-    to the same state: exactly-once STATE from at-least-once DELIVERY,
-    which is precisely what the reference's TODO at
-    lambda-backfill/main.py:47 fails to provide (drill.fold_versions).
+    The first run initialises the table from `snapshot`; each epoch is
+    then one MERGE commit carrying ``txn = (checkpoint path, epoch)``.
+    A restart resumes from the table's latest version while the
+    checkpoint (``work_dir/_checkpoint``) skips committed files, and an
+    epoch replayed after its commit landed (a crash before the stream's
+    commit-log write) is a no-op at the table: exactly-once STATE from
+    at-least-once DELIVERY, which is precisely what the reference's TODO
+    at lambda-backfill/main.py:47 fails to provide. Tombstones make the
+    merge a per-key max-seq reduction, so the state is also correct
+    under cross-batch reordering.
     """
-    ok, dlq = split_dlq(read_changelog_stream(spark, src_dir))
+    # one bucket per write task of the restoring session: a wider table
+    # only splits each epoch's rewrite into more, smaller files (at
+    # sf0.1, local[4]: 32 buckets ran the drill in 6.84 s, 4 in 5.04 s)
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    table = DeltaLogSink(spark, os.path.join(work_dir, "table"), n_buckets=width)
+    try:
+        table.latest_version()
+    except NoTable:
+        table.init(snapshot)
+    checkpoint = os.path.join(work_dir, "_checkpoint")
+    # the batch carries the snapshot's payload columns only: any other
+    # changelog column would widen the table by schema evolution
+    cols = ["key", "seq_no", "op"] + [
+        c for c in snapshot.columns if c not in ("key", "last_seq", "op")
+    ]
+    ok, _dlq = split_dlq(read_changelog_stream(spark, src_dir))
 
-    def merge(batch_df: DataFrame, epoch_id: int, state: dict, path: str) -> None:
-        snap = batch_df.sparkSession.read.parquet(state["path"])
-        cdc_merge(snap, batch_df).write.mode("overwrite").parquet(path)
+    def merge(batch_df: DataFrame, epoch_id: int) -> None:
+        table.apply_batch(batch_df.select(*cols), txn=(checkpoint, epoch_id))
 
-    final = fold_versions(ok, work_dir, snapshot, merge)["path"]
-    if dlq_dir is not None:
-        run_available_now(
-            dlq.writeStream.format("parquet")
-            .option("path", dlq_dir)
-            .option("checkpointLocation", os.path.join(work_dir, "_dlq_checkpoint"))
-        )
-    return final
+    run_available_now(
+        ok.writeStream.foreachBatch(merge).option("checkpointLocation", checkpoint)
+    )
+    return table.path

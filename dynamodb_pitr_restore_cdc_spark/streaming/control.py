@@ -115,7 +115,7 @@ def drain_for_control_events(
     the buffered changelog into a sink late-bound to the target name
     (initiate-lambda-backfill/main.py:65-74's env-var late binding,
     re-expressed as a per-target work dir). Returns
-    {target_table: final sink path}."""
+    {target_table: table root}."""
     import os
 
     from .orchestration import restore_and_backfill

@@ -11,9 +11,11 @@ time travel, changefeed) are the shared commit core in
   per line: ``metaData`` (schema, partition columns and the
   configuration carrying mergeKey and bucketTransform), ``add`` (file
   path, partitionValues, size, stats), ``remove`` (with a
-  deletionTimestamp), ``commitInfo`` (operation ``CREATE TABLE AS
-  SELECT``/``MERGE``/``OPTIMIZE``/``WRITE``). Table state at version
-  v = replay of commits 1..v (adds minus removes).
+  deletionTimestamp), ``txn`` (appId, version, lastUpdated: the
+  epoch an exactly-once MERGE recorded), ``commitInfo`` (operation
+  ``CREATE TABLE AS SELECT``/``MERGE``/``OPTIMIZE``/``WRITE``). Table
+  state at version v = replay of commits 1..v (adds minus removes,
+  the newest txn per appId).
 - **Put-if-absent commits**: a commit is a hard-linked rename into
   ``<version>.json``; ``os.link`` raises EEXIST if the version was
   already claimed — Delta's optimistic-concurrency rule. (The
@@ -148,17 +150,17 @@ class DeltaLogSink(LogTable):
 
     def _state(
         self, version: int | None = None
-    ) -> tuple[str, dict, dict[str, dict]]:
-        """(schemaString, configuration, {path: add-action}) at
-        `version` — replay of the newest checkpoint ≤ version plus the
-        commits after it. `configuration` is the metaData configuration
-        map (carries mergeKey); tables written before it existed replay
-        to {} and fall back to the defaults."""
+    ) -> tuple[str, dict, dict[str, dict], dict[str, int]]:
+        """(schemaString, configuration, {path: add-action}, {appId:
+        txn version}) at `version` — replay of the newest checkpoint ≤
+        version plus the commits after it. `configuration` is the
+        metaData configuration map (carries mergeKey); tables written
+        before it existed replay to {} and fall back to the defaults."""
         latest = self.latest_version()
         v = latest if version is None else version
         if v > latest or v < 1:
             raise ValueError(f"version {v} out of range (latest {latest})")
-        schema, config, active = None, {}, {}
+        schema, config, active, txns = None, {}, {}, {}
         start = 1
         ck = self._newest_checkpoint_at_most(v)
         if ck is not None:
@@ -170,6 +172,8 @@ class DeltaLogSink(LogTable):
                         config = a["metaData"].get("configuration", {})
                     elif "add" in a:
                         active[a["add"]["path"]] = a["add"]
+                    elif "txn" in a:
+                        txns[a["txn"]["appId"]] = a["txn"]["version"]
             start = ck + 1
         for i in range(start, v + 1):
             p = self._log_path(i)
@@ -188,7 +192,9 @@ class DeltaLogSink(LogTable):
                         active[a["add"]["path"]] = a["add"]
                     elif "remove" in a:
                         active.pop(a["remove"]["path"], None)
-        return schema, config, active
+                    elif "txn" in a:
+                        txns[a["txn"]["appId"]] = a["txn"]["version"]
+        return schema, config, active, txns
 
     # -- commit-core adapter ---------------------------------------------
 
@@ -215,7 +221,7 @@ class DeltaLogSink(LogTable):
         order: the pin must precede the read). `base` is the metaData
         configuration, which an evolving commit republishes."""
         v = self.latest_version() + 1
-        schema, config, active = self._state(version)
+        schema, config, active, txns = self._state(version)
         return Pin(
             version=v,
             schema=schema,
@@ -227,6 +233,7 @@ class DeltaLogSink(LogTable):
                 if buckets is None or int(a["partitionValues"]["bucket"]) in buckets
             ],
             base=config,
+            txns=txns,
         )
 
     def _write_data(self, bucketed: DataFrame, v: int) -> list[dict]:
@@ -277,10 +284,12 @@ class DeltaLogSink(LogTable):
         added: list[dict],
         op: str,
         new_schema: str | None = None,
+        txn: tuple[str, int] | None = None,
     ) -> None:
         """One commit: commitInfo, a metaData action when the schema
-        widened, removes (dataChange only for a MERGE: OPTIMIZE
-        rewrites never change the data), adds."""
+        widened, a txn action for an epoch-identified MERGE, removes
+        (dataChange only for a MERGE: OPTIMIZE rewrites never change
+        the data), adds."""
         meta_actions = (
             [
                 {
@@ -294,11 +303,17 @@ class DeltaLogSink(LogTable):
             if new_schema
             else []
         )
+        txn_actions = (
+            [{"txn": {"appId": txn[0], "version": txn[1], "lastUpdated": _now_ms()}}]
+            if txn
+            else []
+        )
         self._commit(
             pin.version,
             [
                 {"commitInfo": {"operation": op}},
                 *meta_actions,
+                *txn_actions,
                 *(
                     {"remove": {"path": f.path, "dataChange": op == "MERGE",
                                  "deletionTimestamp": _now_ms()}}
@@ -382,9 +397,11 @@ class DeltaLogSink(LogTable):
         schema_at_horizon = None
         config_at_horizon: dict = {}
         active_at_horizon: dict[str, dict] = {}
+        txns_at_horizon: dict[str, dict] = {}
         schema: str | None = None
         config: dict = {}
         active: dict[str, dict] = {}
+        txns: dict[str, dict] = {}  # appId -> newest txn action
         start = 1
         ck0 = self._newest_checkpoint_at_most(on_disk[0])
         if ck0 is not None:
@@ -396,6 +413,8 @@ class DeltaLogSink(LogTable):
                         config = a["metaData"].get("configuration", {})
                     elif "add" in a:
                         active[a["add"]["path"]] = a["add"]
+                    elif "txn" in a:
+                        txns[a["txn"]["appId"]] = a["txn"]
             start = ck0 + 1
             all_refs.update(active)
             # ck0 < horizon always holds here: ck0 is the previous
@@ -415,10 +434,13 @@ class DeltaLogSink(LogTable):
                         removed_ms[a["remove"]["path"]] = a["remove"].get(
                             "deletionTimestamp", 0
                         )  # legacy actions without the stamp: aged
+                    elif "txn" in a:
+                        txns[a["txn"]["appId"]] = a["txn"]
             if v == horizon:
                 schema_at_horizon = schema
                 config_at_horizon = dict(config)
                 active_at_horizon = dict(active)
+                txns_at_horizon = dict(txns)
             if v >= horizon:
                 keep_files.update(active)
         ck = self._ckpt_path(horizon)
@@ -440,6 +462,10 @@ class DeltaLogSink(LogTable):
                 )
                 + "\n"
             )
+            # an exactly-once writer's last epoch must survive log
+            # truncation, or a replayed epoch re-commits after expiry
+            for t in txns_at_horizon.values():
+                fh.write(json.dumps({"txn": t}) + "\n")
             for a in active_at_horizon.values():
                 fh.write(json.dumps({"add": a}) + "\n")
             fh.flush()
@@ -528,11 +554,9 @@ class DeltaLogSink(LogTable):
 def _register_delta_fold() -> None:
     """Deferred import so the module stays importable without the
     registry side effects it feeds (registry imports THIS module)."""
-    import shutil
-    import tempfile
-
     from ..operators.cdc import changelog, fold_changelog, with_changelog
     from ..registry import register, tracked_persist
+    from .drill import Drill
     from .log_table import log_fold_drill, optimize_plan_drill
 
     @register(
@@ -560,7 +584,7 @@ FROM (
         expressed through the log-structured format rather than the
         manifest format (q_cdc_snapshot_rebuild / q_cdc_time_travel
         twins)."""
-        return log_fold_drill(spark, sf_dir, DeltaLogSink, "deltafold-")
+        return log_fold_drill(spark, sf_dir, DeltaLogSink, "deltafold")
 
     @register(
         "q_cdc_delta_schema_evolution",
@@ -598,25 +622,24 @@ FROM (
         )
         max_seq = cl.agg(F.max("seq_no")).first()[0]  # orchestration scalar
         c1, c2 = max_seq // 3, (2 * max_seq) // 3
-        base = tempfile.mkdtemp(prefix="deltaevo-")
-        sink = DeltaLogSink(spark, os.path.join(base, "t"))
         narrow = cl.drop("payload_props")
-        # NO width pin: MERGE commits are compute-bound (see
-        # q_cdc_delta_log_fold; r16 idle-32 A/B 4.48 s → 3.68 s)
-        sink.init(fold_changelog(narrow.where(F.col("seq_no") <= c1)))
-        sink.apply_batch(
-            narrow.where((F.col("seq_no") > c1) & (F.col("seq_no") <= c2))
-        )
-        sink.apply_batch(cl.where(F.col("seq_no") > c2))  # evolves
-        # grace 0 is safe here: this builder is the table's only writer
-        sink.expire_versions(keep_last=2, sweep_orphans=True, orphan_grace_s=0.0)
-        result = tracked_persist(
-            sink.visible().select(
-                "key", "last_seq", "payload_value", "payload_props"
+        with Drill(spark, "deltaevo") as d:
+            sink = DeltaLogSink(spark, d.dir("t"))
+            # NO width pin: MERGE commits are compute-bound (see
+            # q_cdc_delta_log_fold; r16 idle-32 A/B 4.48 s → 3.68 s)
+            sink.init(fold_changelog(narrow.where(F.col("seq_no") <= c1)))
+            sink.apply_batch(
+                narrow.where((F.col("seq_no") > c1) & (F.col("seq_no") <= c2))
             )
-        )
-        result.count()  # materialize before the backing dirs go away
-        shutil.rmtree(base, ignore_errors=True)
+            sink.apply_batch(cl.where(F.col("seq_no") > c2))  # evolves
+            # grace 0 is safe here: this builder is the table's only writer
+            sink.expire_versions(keep_last=2, sweep_orphans=True, orphan_grace_s=0.0)
+            result = tracked_persist(
+                sink.visible().select(
+                    "key", "last_seq", "payload_value", "payload_props"
+                )
+            )
+            result.count()  # materialize before the backing dirs go away
         return result
 
     @register(
@@ -681,7 +704,7 @@ FROM base b FULL OUTER JOIN deltas d ON b.bucket = d.bucket
         The sink-side drill additionally executes the plan
         (compact_mor) and asserts the fold identity in the unit suite;
         the registered surface is the decision table itself."""
-        return optimize_plan_drill(spark, sf_dir, DeltaLogSink, "optplan-")
+        return optimize_plan_drill(spark, sf_dir, DeltaLogSink, "optplan")
 
 
 _register_delta_fold()

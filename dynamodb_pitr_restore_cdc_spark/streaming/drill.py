@@ -19,10 +19,15 @@ and fixture timestamps are fixed — so every run sees the same batches,
 the same watermark trajectory, and the same output.
 
 ``fold_versions`` is the one resumable versioned-state fold of the
-stream runners: exactly-once STATE from at-least-once DELIVERY (the
+twins' stream runners (the CDC replay commits through the log-table
+core instead): exactly-once STATE from at-least-once DELIVERY (the
 Structured Streaming discipline; PAPERS.md). Each epoch writes its
 state version ``v{epoch}`` from the last committed one, and the
 ``_LATEST`` pointer names the committed version.
+
+``Drill`` also owns every builder's scratch dir: a builder that needs
+a temp dir takes ``with Drill(spark, tag) as d:`` and gets it removed
+however the block exits.
 """
 
 from __future__ import annotations

@@ -11,8 +11,11 @@ holds the metadata-tree mechanics:
   COMPLETE table description: schema history, partition spec (the
   transform and the merge-key source field), the full list of live
   snapshots (id, 1-based sequence-number, manifest-list path, summary)
-  and the current snapshot id. Unlike the Delta log there is NO
-  replay: any version's state is one metadata read away.
+  and the current snapshot id, plus — once an epoch-identified MERGE
+  committed — a ``txns`` map (appId -> version, lastUpdated: the
+  Delta txn action's fields) that every later metadata file copies
+  forward. Unlike the Delta log there is NO replay: any version's
+  state is one metadata read away.
 - **version-hint.text + put-if-absent commits**: a commit writes the
   next metadata file via temp + ``os.link`` (EEXIST = another writer
   won) and then moves the hint — exactly the HadoopTableOperations
@@ -610,6 +613,7 @@ class IcebergLogSink(LogTable):
             transform=meta["partition-spec"][0]["transform"],
             files=[self._facts(e) for e in self._prune(manifest_list, buckets)],
             base=(meta_num, meta, snap, manifest_list),
+            txns={app: t["version"] for app, t in meta.get("txns", {}).items()},
         )
 
     def _write_data(self, bucketed: DataFrame, seq: int) -> list[dict]:
@@ -667,13 +671,27 @@ class IcebergLogSink(LogTable):
         added: list[dict],
         op: str,
         new_schema: str | None = None,
+        txn: tuple[str, int] | None = None,
     ) -> None:
         """One snapshot on the pinned base: a widened schema becomes a
         new schema-id in the metadata file's schema history, and the
-        manifest tree reuses every manifest that lost no file."""
+        manifest tree reuses every manifest that lost no file. A `txn`
+        lands in the metadata file's ``txns`` map (appId -> version,
+        lastUpdated), which every later metadata file copies forward —
+        snapshot expiry included — and the pin reads with no extra
+        file."""
         meta_num, meta, snap, _manifest_list = pin.base
         if new_schema is not None:
             meta = self._apply_schema(meta, new_schema)
+        if txn is not None:
+            app, epoch = txn
+            meta = {
+                **meta,
+                "txns": {
+                    **meta.get("txns", {}),
+                    app: {"version": epoch, "lastUpdated": int(time.time() * 1000)},
+                },
+            }
         rec = self._build_snapshot(
             snap, {f.path for f in removed}, added, _OPERATIONS[op]
         )
@@ -1209,11 +1227,9 @@ class IcebergLogSink(LogTable):
 def _register_iceberg_fold() -> None:
     """Deferred import so the module stays importable without the
     registry side effects it feeds (registry imports THIS module)."""
-    import shutil
-    import tempfile
-
     from ..operators.cdc import changelog, fold_changelog, with_changelog
     from ..registry import register, tracked_persist
+    from .drill import Drill
     from .log_table import log_fold_drill, optimize_plan_drill
 
     @register(
@@ -1242,7 +1258,7 @@ FROM (
         still equal the plain changelog fold — the PITR identity
         (`state-machine.json` restore path) expressed through the
         snapshot-tree format rather than the transaction-log format."""
-        return log_fold_drill(spark, sf_dir, IcebergLogSink, "icebergfold-")
+        return log_fold_drill(spark, sf_dir, IcebergLogSink, "icebergfold")
 
     @register(
         "q_cdc_iceberg_mor_fold",
@@ -1276,25 +1292,24 @@ FROM (
         )
         max_seq = cl.agg(F.max("seq_no")).first()[0]  # orchestration scalar
         c1, c2 = max_seq // 3, (2 * max_seq) // 3
-        base = tempfile.mkdtemp(prefix="icebergmor-")
-        sink = IcebergLogSink(spark, os.path.join(base, "t"))
-        # NO width pin: compact_mor folds + full compact are real
-        # merges (r16 idle-32 A/B: pinned 22.59 s vs session 7.12 s —
-        # the widest gap of the audit)
-        sink.init(fold_changelog(cl.where(F.col("seq_no") <= c1)))
-        sink.append(
-            cl.where((F.col("seq_no") > c1) & (F.col("seq_no") <= c2))
-        )
-        sink.append(cl.where(F.col("seq_no") > c2))
-        sink.compact_mor(set(range(sink.n_buckets // 2)))
-        sink.compact(reorder_horizon_seq=int(max_seq) + 1)
-        # grace 0 is safe here: this builder is the table's only writer
-        sink.expire_versions(keep_last=2, sweep_orphans=True, orphan_grace_s=0.0)
-        result = tracked_persist(
-            sink.visible().select("key", "last_seq", "payload_value")
-        )
-        result.count()  # materialize before the backing dirs go away
-        shutil.rmtree(base, ignore_errors=True)
+        with Drill(spark, "icebergmor") as d:
+            sink = IcebergLogSink(spark, d.dir("t"))
+            # NO width pin: compact_mor folds + full compact are real
+            # merges (r16 idle-32 A/B: pinned 22.59 s vs session 7.12 s —
+            # the widest gap of the audit)
+            sink.init(fold_changelog(cl.where(F.col("seq_no") <= c1)))
+            sink.append(
+                cl.where((F.col("seq_no") > c1) & (F.col("seq_no") <= c2))
+            )
+            sink.append(cl.where(F.col("seq_no") > c2))
+            sink.compact_mor(set(range(sink.n_buckets // 2)))
+            sink.compact(reorder_horizon_seq=int(max_seq) + 1)
+            # grace 0 is safe here: this builder is the table's only writer
+            sink.expire_versions(keep_last=2, sweep_orphans=True, orphan_grace_s=0.0)
+            result = tracked_persist(
+                sink.visible().select("key", "last_seq", "payload_value")
+            )
+            result.count()  # materialize before the backing dirs go away
         return result
 
     @register(
@@ -1334,26 +1349,25 @@ FROM (
         )
         max_seq = cl.agg(F.max("seq_no")).first()[0]  # orchestration scalar
         c1, c2 = max_seq // 3, (2 * max_seq) // 3
-        base = tempfile.mkdtemp(prefix="icebergevo-")
-        sink = IcebergLogSink(spark, os.path.join(base, "t"))
         narrow = cl.drop("payload_props")
-        # NO width pin: MERGE + compact_mor are compute-bound (r16
-        # idle-32 A/B: pinned 13.67 s vs session width 5.60 s)
-        sink.init(fold_changelog(narrow.where(F.col("seq_no") <= c1)))
-        sink.apply_batch(
-            narrow.where((F.col("seq_no") > c1) & (F.col("seq_no") <= c2))
-        )
-        sink.append(cl.where(F.col("seq_no") > c2))  # evolves, MOR lane
-        sink.compact_mor(set(range(sink.n_buckets // 2)))
-        # grace 0 is safe here: this builder is the table's only writer
-        sink.expire_versions(keep_last=2, sweep_orphans=True, orphan_grace_s=0.0)
-        result = tracked_persist(
-            sink.visible().select(
-                "key", "last_seq", "payload_value", "payload_props"
+        with Drill(spark, "icebergevo") as d:
+            sink = IcebergLogSink(spark, d.dir("t"))
+            # NO width pin: MERGE + compact_mor are compute-bound (r16
+            # idle-32 A/B: pinned 13.67 s vs session width 5.60 s)
+            sink.init(fold_changelog(narrow.where(F.col("seq_no") <= c1)))
+            sink.apply_batch(
+                narrow.where((F.col("seq_no") > c1) & (F.col("seq_no") <= c2))
             )
-        )
-        result.count()  # materialize before the backing dirs go away
-        shutil.rmtree(base, ignore_errors=True)
+            sink.append(cl.where(F.col("seq_no") > c2))  # evolves, MOR lane
+            sink.compact_mor(set(range(sink.n_buckets // 2)))
+            # grace 0 is safe here: this builder is the table's only writer
+            sink.expire_versions(keep_last=2, sweep_orphans=True, orphan_grace_s=0.0)
+            result = tracked_persist(
+                sink.visible().select(
+                    "key", "last_seq", "payload_value", "payload_props"
+                )
+            )
+            result.count()  # materialize before the backing dirs go away
         return result
 
     @register(
@@ -1513,7 +1527,7 @@ WHERE m.manifests > 2 * ((m.entries + m.target - 1) // m.target)
         the layouts the engine prices, never unconditionally
         (round-11 review: an unconditional row would hash-mismatch on
         a fixture whose appends touch few contiguous buckets)."""
-        return optimize_plan_drill(spark, sf_dir, IcebergLogSink, "iceoptplan-")
+        return optimize_plan_drill(spark, sf_dir, IcebergLogSink, "iceoptplan")
 
 
 _register_iceberg_fold()

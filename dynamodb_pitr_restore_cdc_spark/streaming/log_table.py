@@ -27,8 +27,10 @@ A format subclass supplies only its mechanics:
   concurrent expiry (a lost race, retried);
 - `_write_data(bucketed, version)` and `_write_pending(rows, version,
   key, counts)`: one commit attempt's data files as format records;
-- `_publish(pin, removed, added, op, new_schema)`: the put-if-absent
-  commit, raising FileExistsError when another writer claimed the slot;
+- `_publish(pin, removed, added, op, new_schema, txn)`: the
+  put-if-absent commit, raising FileExistsError when another writer
+  claimed the slot; a `txn` (app id, epoch) is recorded in the commit
+  itself, and the pin reports the last recorded epoch per app;
 - `_table_decisions(pin)`: table-scoped optimize_plan rows (none by
   default);
 - `init`, `latest_version` and `expire_versions`.
@@ -93,6 +95,7 @@ class Pin:
     transform: str  # persisted partition transform, e.g. "bucket[32]"
     files: list[FileFacts]
     base: Any
+    txns: dict[str, int]  # app id -> last epoch recorded by apply_batch
 
 
 def _the_pin(pin: Pin) -> Pin:
@@ -149,6 +152,7 @@ class LogTable:
         added: list[dict],
         op: str,
         new_schema: str | None = None,
+        txn: tuple[str, int] | None = None,
     ) -> None:
         raise NotImplementedError
 
@@ -266,7 +270,11 @@ class LogTable:
     # -- SinkFormat ----------------------------------------------------------
 
     def apply_batch(
-        self, batch: DataFrame, key: str = "key", max_attempts: int = 5
+        self,
+        batch: DataFrame,
+        key: str = "key",
+        max_attempts: int = 5,
+        txn: tuple[str, int] | None = None,
     ) -> None:
         """MERGE INTO: resolve the batch against ONLY the files of the
         buckets it touches (the format prunes at pin time, from
@@ -278,13 +286,23 @@ class LogTable:
         the winner may have replaced the very files our candidate set
         named, and publishing that stale remove set would resurrect its
         rows as duplicates. An empty batch still commits one (empty)
-        version: one version per micro-batch is the replay contract."""
+        version: one version per micro-batch is the replay contract.
+
+        ``txn = (app_id, epoch)`` makes the commit exactly-once per
+        epoch (Delta's transaction identifiers, PROTOCOL.md; the
+        idempotent-sink contract of Structured Streaming): the epoch is
+        recorded in the commit itself, and an epoch at or below the one
+        the pin reports for the app is a no-op. The check runs inside
+        the attempt, so a lost race re-checks against the winner's
+        state — a winner that committed the same epoch ends the loop."""
         batch = batch.withColumn("bucket", self._bucket(F.col(key)))
         touched = {
             r.bucket for r in batch.select("bucket").distinct().collect()
         }  # ≤ N ints: orchestration, not data
 
         def attempt(pin: Pin) -> None:
+            if txn is not None and pin.txns.get(txn[0], -1) >= txn[1]:
+                return  # this epoch already committed: a replay
             # add-column schema evolution (union-by-name): a batch
             # carrying payload columns the table doesn't know widens
             # the schema in the SAME commit. Evolved inside the retry
@@ -304,7 +322,7 @@ class LogTable:
                 merged.withColumn("bucket", self._bucket(F.col(key))), pin.version
             )
             self._publish(
-                pin, pin.files, added, "MERGE", schema_json if evolved else None
+                pin, pin.files, added, "MERGE", schema_json if evolved else None, txn
             )
 
         self._optimistic("MERGE", attempt, max_attempts, buckets=touched)
@@ -551,24 +569,21 @@ class LogTable:
 
 
 def log_fold_drill(
-    spark: SparkSession, sf_dir: str, sink_cls: type[LogTable], prefix: str
+    spark: SparkSession, sf_dir: str, sink_cls: type[LogTable], tag: str
 ) -> DataFrame:
     """init = fold of the changelog's first third, two MERGE commits,
     a settled-tombstone compact past the full reorder horizon, then
     retention to the last two versions with an orphan sweep; returns
     the surviving visible state."""
-    import shutil
-    import tempfile
-
     from ..operators.cdc import changelog, fold_changelog
     from ..registry import tracked_persist
+    from .drill import Drill
 
     cl = changelog(spark, sf_dir).select("seq_no", "op", "key", "payload_value")
     max_seq = cl.agg(F.max("seq_no")).first()[0]  # orchestration scalar
     c1, c2 = max_seq // 3, (2 * max_seq) // 3
-    base = tempfile.mkdtemp(prefix=prefix)
-    try:
-        sink = sink_cls(spark, os.path.join(base, "t"))
+    with Drill(spark, tag) as d:
+        sink = sink_cls(spark, d.dir("t"))
         # NO width pin: the MERGE commits and the compact rewrite are
         # real per-bucket merges over the full table — compute-bound
         # (r16 idle-32 A/B, pinned vs session width: Delta 8.90 s vs
@@ -585,34 +600,27 @@ def log_fold_drill(
             sink.visible().select("key", "last_seq", "payload_value")
         )
         result.count()  # materialize before the backing dirs go away
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return result
 
 
 def optimize_plan_drill(
-    spark: SparkSession, sf_dir: str, sink_cls: type[LogTable], prefix: str
+    spark: SparkSession, sf_dir: str, sink_cls: type[LogTable], tag: str
 ) -> DataFrame:
     """init = fold of the changelog's first third into 8 identity-mod
     buckets (key % 8, so an oracle can reproduce the layout), six
     blind appends over equal seq ranges of the rest, then the
     optimize_plan decision table (small-file fan-in ≥ 3 files under
     100 rows, or tombstone debt > 15% of bucket rows)."""
-    import shutil
-    import tempfile
-
     from ..operators.cdc import changelog, fold_changelog
     from ..registry import tracked_persist
+    from .drill import Drill
 
     cl = changelog(spark, sf_dir).select("seq_no", "op", "key", "payload_value")
     max_seq = int(cl.agg(F.max("seq_no")).first()[0])  # orchestration scalar
-    c1, d = max_seq // 3, max_seq - max_seq // 3
-    bounds = [c1 + (i * d) // 6 for i in range(7)]
-    base = tempfile.mkdtemp(prefix=prefix)
-    try:
-        sink = sink_cls(
-            spark, os.path.join(base, "t"), n_buckets=8, transform="mod"
-        )
+    c1, span = max_seq // 3, max_seq - max_seq // 3
+    bounds = [c1 + (i * span) // 6 for i in range(7)]
+    with Drill(spark, tag) as d:
+        sink = sink_cls(spark, d.dir("t"), n_buckets=8, transform="mod")
         # NO width pin: the seven appends + the stats pass want session
         # width (r16 idle-32 A/B, pinned vs session width: Delta
         # 10.73 s vs 3.73 s, Iceberg 11.83 s vs 6.25 s)
@@ -630,6 +638,4 @@ def optimize_plan_drill(
             )
         )
         plan.count()  # materialize before the backing dirs go away
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return plan

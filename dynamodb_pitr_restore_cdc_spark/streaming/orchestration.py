@@ -99,7 +99,8 @@ def restore_and_backfill(
 ) -> str:
     """E2+E3 composed: wait for the restored table (A19/A20/A21), then
     attach the drain (A17) — run_cdc_apply drains all buffered change
-    events into the snapshot. Returns the final sink version path."""
+    events into a table restored from the snapshot. Returns the table
+    root (read it through ``DeltaLogSink(spark, path).visible()``)."""
     from .cdc_stream import run_cdc_apply
 
     status = wait_until_ready(probe, poll_interval_s, timeout_s, sleep=sleep)

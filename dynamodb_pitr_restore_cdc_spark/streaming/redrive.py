@@ -4,7 +4,7 @@ The reference's buffer queue moves a message to the DLQ after 5 failed
 receives (cdk/lib/cdk-stack.ts:52-63, ``maxReceiveCount: 5``); each
 redelivery exposes ``ApproximateReceiveCount`` to the consumer. The
 round-1 engine only had the validity *split* half of A7; this module
-adds the *redrive* half for the foreachBatch path:
+adds the *redrive* half:
 
 - every record carries a ``receive_count`` (1-based, incremented per
   delivery) — the SQS attribute as a column;
@@ -12,9 +12,9 @@ adds the *redrive* half for the foreachBatch path:
   models the consumer's failure (the Lambda's raised exception, at the
   per-message granularity SQS provides);
 - rejected records re-enter a durable retry store (versioned dirs +
-  pointer, same crash discipline as run_cdc_apply's sink); records
-  whose receive_count reaches ``max_receives`` are appended to
-  ``dlq/`` instead — the batch is never blocked by a poison record.
+  a commit pointer written last); records whose receive_count reaches
+  ``max_receives`` are appended to ``dlq/`` instead — the batch is
+  never blocked by a poison record.
 
 Scale notes (100 TB): the retry store is O(currently-failing records),
 not O(stream); the happy path adds one anti-join per micro-batch
@@ -33,9 +33,9 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.cdc import cdc_merge, changelog, with_changelog
+from ..operators.cdc import changelog, with_changelog
 from ..registry import register, tracked_persist
-from .drill import Drill, fold_versions
+from .drill import Drill
 from .util import atomic_write_text
 
 MAX_RECEIVES = 5  # cdk-stack.ts:53
@@ -171,8 +171,8 @@ class RedriveStore:
         still_retryable = rejected.where(F.col(RECEIVE_COUNT_COL) < self.max_receives)
 
         # all data dirs first (each overwrite-idempotent under a crashed
-        # cycle's re-run), pointer commit LAST — same crash-window
-        # discipline as run_cdc_apply's versioned sink. The three
+        # cycle's re-run), pointer commit LAST, so a crash before it
+        # re-runs the cycle from the prior committed state. The three
         # routes are independent jobs over the one checkpointed cycle
         # frame, so they run CONCURRENTLY (guide §2.6) — the pointer
         # still only commits after ALL of them landed, so the crash
@@ -228,37 +228,6 @@ class RedriveStore:
     def has_pending(self) -> bool:
         p = self.pending()
         return p is not None and bool(p.take(1))
-
-
-def run_cdc_apply_redrive(
-    spark: SparkSession,
-    src_dir: str,
-    snapshot: DataFrame,
-    work_dir: str,
-    try_reject,
-    max_receives: int = MAX_RECEIVES,
-) -> tuple[str, RedriveStore]:
-    """run_cdc_apply with A7 redrive: each micro-batch is one delivery
-    cycle — accepted records merge into the versioned sink, rejected
-    ones wait in the retry store, poison ones (max_receives failed
-    deliveries) land in dlq/ WITHOUT blocking the batch. Returns
-    (final sink path, the redrive store)."""
-    from .cdc_stream import read_changelog_stream
-
-    store = RedriveStore(spark, os.path.join(work_dir, "redrive"), max_receives)
-
-    def merge(batch_df: DataFrame, epoch_id: int, state: dict, path: str) -> None:
-        # epoch-guarded: a replay after the store committed but before the
-        # sink did re-reads the stored accepted rows instead of
-        # re-incrementing receive counts (at-least-once safety)
-        accepted = store.deliver(batch_df, try_reject, epoch_id=epoch_id).drop(
-            RECEIVE_COUNT_COL
-        )
-        snap = batch_df.sparkSession.read.parquet(state["path"])
-        cdc_merge(snap, accepted).write.mode("overwrite").parquet(path)
-
-    state = fold_versions(read_changelog_stream(spark, src_dir), work_dir, snapshot, merge)
-    return state["path"], store
 
 
 @register(

@@ -1,10 +1,10 @@
 """The table-format seam: what CDC query code may assume about a sink.
 
-The four concrete sinks implement these structural interfaces over
-plain parquet: `BucketedCdcSink` and `VersionedCdcSink`, plus the
-Delta-shaped `DeltaLogSink` and the Iceberg-shaped `IcebergLogSink`,
-which share one commit core (`log_table.LogTable`) and differ only in
-their metadata. Every registered query touches them ONLY through seam
+The three concrete sinks implement these structural interfaces over
+plain parquet: `VersionedCdcSink`, plus the Delta-shaped
+`DeltaLogSink` and the Iceberg-shaped `IcebergLogSink`, which share
+one commit core (`log_table.LogTable`) and differ only in their
+metadata. Every registered query touches them ONLY through seam
 methods — so a real lakehouse table format drops in without touching
 query code. The method-by-method mapping to the two production
 formats:

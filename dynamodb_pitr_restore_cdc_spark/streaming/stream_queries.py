@@ -18,12 +18,12 @@ content_hash) so state shards across executors; watermarks bound state
 growth; session windows merge per key. The tumbling/sliding batch
 equivalents shuffle once on (window, key) with map-side partials.
 
-Ordering note: plain cdc_merge drops tombstones, so it assumes
-roughly seq-ordered batch delivery (the reference's FIFO queue shape) —
-the streaming splits here are contiguous seq ranges accordingly.
-Sources with cross-batch reordering use the tombstone-retaining
-bucketed sink instead (q_cdc_bucketed_sink / streaming/cdc_sink.py),
-which is correct under arbitrary reordering.
+Ordering note: the CDC replays here (q_stream_foreachbatch_cdc and the
+bucketed-sink drills) commit through the log-table core, whose merge
+retains deletes as tombstones — a per-key max-seq reduction, so the
+state is correct under arbitrary cross-batch reordering, not only the
+roughly seq-ordered delivery of the reference's FIFO queue. Their
+splits are contiguous seq ranges only to mirror that queue.
 """
 
 from __future__ import annotations
@@ -36,8 +36,8 @@ from pyspark.sql import functions as F
 from ..operators.cdc import cdc_merge, changelog, fold_changelog, with_changelog
 from ..registry import register, tracked_persist
 from ..sources import table
-from .cdc_sink import BucketedCdcSink
 from .cdc_stream import CHANGELOG_STREAM_SCHEMA, run_cdc_apply
+from .delta_log_sink import DeltaLogSink
 from .drill import Drill, _ts_tertiles, _write_one_split, read_pinned, run_available_now
 from .util import pinned_shuffle_width
 
@@ -267,10 +267,11 @@ FROM (
 )
 def q_stream_foreachbatch_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end streaming CDC apply (A8-A17 under availableNow): the
-    second half of the changelog drains through
-    writeStream.foreachBatch(cdc_merge) in 3 contiguous-seq micro-batches
-    against the first-half snapshot. Must equal — and is oracle-checked
-    against — the batch flagship q_cdc_snapshot_rebuild."""
+    second half of the changelog drains through writeStream.foreachBatch
+    in 3 contiguous-seq micro-batches, each one epoch-identified MERGE
+    commit into a Delta-format table restored from the first-half
+    snapshot (cdc_stream.run_cdc_apply). Must equal — and is
+    oracle-checked against — the batch flagship q_cdc_snapshot_rebuild."""
     cl = changelog(spark, sf_dir)
     row = cl.agg(
         F.expr("percentile(seq_no, 0.5)").alias("med"),
@@ -284,9 +285,9 @@ def q_stream_foreachbatch_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     with Drill(spark, "fb") as drill:
         src = drill.splits(second, [s < row.p1, (s >= row.p1) & (s < row.p2), s >= row.p2])
         with pinned_shuffle_width(spark):
-            final_path = run_cdc_apply(spark, src, snapshot, drill.dir("work"))
+            table = run_cdc_apply(spark, src, snapshot, drill.dir("work"))
             result = tracked_persist(
-                spark.read.parquet(final_path).select("key", "last_seq", "payload_value")
+                DeltaLogSink(spark, table).visible().select("key", "last_seq", "payload_value")
             )
             result.count()
     return result
@@ -471,11 +472,11 @@ FROM (
     ),
 )
 def q_cdc_bucketed_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The flagship rebuild through the 100 TB sink shape: tombstoned,
-    bucket-partitioned snapshot where each micro-batch rewrites ONLY
-    the buckets its keys hash into (streaming/cdc_sink.py). Three
-    contiguous-seq batches; result must equal the one-shot rebuild —
-    same oracle as q_cdc_snapshot_rebuild."""
+    """The flagship rebuild through the 100 TB sink shape: a tombstoned
+    16-bucket Delta-format table where each micro-batch MERGE reads and
+    rewrites ONLY the buckets its keys hash into (the log-table commit
+    core). Three contiguous-seq batches; result must equal the one-shot
+    rebuild — same oracle as q_cdc_snapshot_rebuild."""
     cl = changelog(spark, sf_dir)
     row = cl.agg(
         F.expr("percentile(seq_no, 0.5)").alias("med"),
@@ -485,9 +486,12 @@ def q_cdc_bucketed_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot = fold_changelog(cl.where(F.col("seq_no") < row.med))
 
     s = F.col("seq_no")
-    second = cl.where(s >= row.med)
-    with Drill(spark, "bsink") as drill, pinned_shuffle_width(spark):
-        sink = BucketedCdcSink(spark, drill.dir("sink"), n_buckets=16)
+    second = cl.select("seq_no", "op", "key", "payload_value").where(s >= row.med)
+    with Drill(spark, "bsink") as drill:
+        sink = DeltaLogSink(spark, drill.dir("sink"), n_buckets=16)
+        # NO width pin: the MERGE commits are the log-fold drills' work
+        # (sf0.1 same-session A/B, median of 5, pinned vs session width:
+        # local[8] 4.35 s vs 4.33 s; at local[4] the two widths are equal)
         sink.init(snapshot)
         for pred in [s < row.p1, (s >= row.p1) & (s < row.p2), s >= row.p2]:
             sink.apply_batch(second.where(pred))
@@ -530,10 +534,12 @@ def q_cdc_sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot = fold_changelog(cl.where(F.col("seq_no") < row.med))
 
     s = F.col("seq_no")
-    second = cl.where(s >= row.med)
+    second = cl.select("seq_no", "op", "key", "payload_value").where(s >= row.med)
     is_tomb = F.col("op") == "REMOVE"
-    with Drill(spark, "csink") as drill, pinned_shuffle_width(spark):
-        sink = BucketedCdcSink(spark, drill.dir("sink"), n_buckets=16)
+    with Drill(spark, "csink") as drill:
+        sink = DeltaLogSink(spark, drill.dir("sink"), n_buckets=16)
+        # NO width pin (q_cdc_bucketed_sink; A/B at local[8]: pinned
+        # 5.16 s vs session width 4.94 s)
         sink.init(snapshot)
         sink.apply_batch(second.where(s < row.p1))
         sink.apply_batch(second.where((s >= row.p1) & (s < row.p2)))

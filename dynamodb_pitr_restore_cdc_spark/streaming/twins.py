@@ -105,7 +105,7 @@ def run_session_stream(spark: SparkSession, src: str, work: str) -> str:
     """Drain every available event split in `src` into the versioned
     session store under `work`; returns the final store path.
 
-    Resumable (run_cdc_apply's crash-recovery discipline): the store
+    Resumable (drill.fold_versions' crash-recovery discipline): the store
     pointer `_LATEST` is durable, so a restarted run resumes the merge
     from the last COMMITTED store version while the checkpoint skips
     already-processed files — without the pointer, checkpoint-skipped
@@ -982,6 +982,9 @@ def q_stream_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 HH_CAPACITY = 4096  # summary rows kept per stream (state bound)
 HH_TOP = 25         # rows the registered query reports
+# the summary store's schema: every read passes it (an inferred read
+# runs a footer job per call, and the store is ours)
+_HH_SUMMARY_SCHEMA = "key long, est long, err long"
 
 
 def merge_space_saving(
@@ -1063,7 +1066,7 @@ def run_heavy_hitters_stream(
     (per-epoch overwrite)."""
 
     def merge(batch_df: DataFrame, epoch_id: int, state: dict, path: str) -> dict:
-        summary = batch_df.sparkSession.read.schema("key long, est long, err long").parquet(
+        summary = batch_df.sparkSession.read.schema(_HH_SUMMARY_SCHEMA).parquet(
             state["path"]
         )
         bcounts = batch_df.groupBy(F.col("user_id").alias("key")).agg(
@@ -1131,7 +1134,7 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"{HH_CAPACITY} is below the distinct-key count of {sf_dir}; "
                 f"raise HH_CAPACITY for exact parity at this scale"
             )
-        summary = spark.read.parquet(path)
+        summary = spark.read.schema(_HH_SUMMARY_SCHEMA).parquet(path)
         # top-k FIRST (TakeOrderedAndProject), window AFTER: the row_number
         # then ranks ≤ HH_TOP rows — bounded by the limit constant, not by
         # the summary (same replan as merge_space_saving's truncation)

@@ -1,5 +1,5 @@
 """The shared bucket write (table_files.repartition_by_bucket), pinned
-structurally for all four sinks: every bucket dir of a commit holds
+structurally for every sink: every bucket dir of a commit holds
 exactly one data file, the files of one commit come from more than one
 write task (AQE did not coalesce the exchange into a single serial
 writer), and a shuffle-width pin around the write sets the task count.
@@ -13,7 +13,6 @@ from collections import defaultdict
 import pandas as pd
 import pytest
 
-from dynamodb_pitr_restore_cdc_spark.streaming.cdc_sink import BucketedCdcSink
 from dynamodb_pitr_restore_cdc_spark.streaming.delta_log_sink import DeltaLogSink
 from dynamodb_pitr_restore_cdc_spark.streaming.iceberg_log_sink import IcebergLogSink
 from dynamodb_pitr_restore_cdc_spark.streaming.util import pinned_shuffle_width
@@ -22,10 +21,11 @@ from dynamodb_pitr_restore_cdc_spark.streaming.versioned_sink import VersionedCd
 N_BUCKETS = 8
 
 SINKS = {
-    "delta": DeltaLogSink,
-    "iceberg": IcebergLogSink,
-    "versioned": VersionedCdcSink,
-    "bucketed": BucketedCdcSink,
+    "delta": lambda spark, root: DeltaLogSink(spark, root, n_buckets=N_BUCKETS),
+    "iceberg": lambda spark, root: IcebergLogSink(spark, root, n_buckets=N_BUCKETS),
+    "versioned": lambda spark, root: VersionedCdcSink(spark, root, n_buckets=N_BUCKETS),
+    # the 16-bucket Delta table the bucketed-sink stream drills commit to
+    "bucketed": lambda spark, root: DeltaLogSink(spark, root, n_buckets=16),
 }
 
 
@@ -38,7 +38,7 @@ def _frame(spark, rows, seq_col):
 
 def _init_and_apply(spark, sink):
     """Init 200 keys, then one batch of 64 keys that touches every
-    bucket, so the apply commit rewrites all N_BUCKETS buckets."""
+    bucket, so the apply commit rewrites all of the sink's buckets."""
     snapshot = _frame(
         spark, [(k, 1, "INSERT", float(k)) for k in range(200)], "last_seq"
     )
@@ -54,7 +54,7 @@ def _init_and_apply(spark, sink):
 def _commits(root: str) -> dict[str, dict[int, list[str]]]:
     """{commit dir: {bucket: data files}} for every bucket=N dir under
     the sink root (the dir that holds bucket dirs is one commit's
-    output; the bucketed sink rewrites its buckets in place)."""
+    output)."""
     out: dict[str, dict[int, list[str]]] = defaultdict(dict)
     for dirpath, _dirs, files in os.walk(root):
         name = os.path.basename(dirpath)
@@ -75,13 +75,12 @@ def test_bucket_write_is_one_file_per_bucket_from_parallel_tasks(
 ):
     assert int(spark.conf.get("spark.sql.shuffle.partitions")) > 1
     root = str(tmp_path / name)
-    _init_and_apply(spark, SINKS[name](spark, root, n_buckets=N_BUCKETS))
+    sink = SINKS[name](spark, root)
+    _init_and_apply(spark, sink)
     commits = _commits(root)
-    # init + apply for the log sinks; the bucketed sink's apply rewrote
-    # every bucket in place, so only its files remain
-    assert len(commits) == (1 if name == "bucketed" else 2)
+    assert len(commits) == 2  # init + apply
     for cdir, buckets in commits.items():
-        assert sorted(buckets) == list(range(N_BUCKETS)), cdir
+        assert sorted(buckets) == list(range(sink.n_buckets)), cdir
         assert all(len(files) == 1 for files in buckets.values()), buckets
         assert len(_writer_tasks(buckets)) > 1, (cdir, buckets)
 
@@ -90,7 +89,7 @@ def test_bucket_write_is_one_file_per_bucket_from_parallel_tasks(
 def test_bucket_write_width_follows_the_shuffle_pin(spark, tmp_path, name):
     root = str(tmp_path / name)
     with pinned_shuffle_width(spark, 1):
-        _init_and_apply(spark, SINKS[name](spark, root, n_buckets=N_BUCKETS))
+        _init_and_apply(spark, SINKS[name](spark, root))
     for cdir, buckets in _commits(root).items():
         assert all(len(files) == 1 for files in buckets.values()), buckets
         assert _writer_tasks(buckets) == {0}, cdir

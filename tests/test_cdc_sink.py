@@ -1,6 +1,6 @@
-"""Tombstone merge + bucketed sink: the guarantees beyond plain cdc_merge."""
-
-import os
+"""Tombstone merge + bucketed sink: the guarantees beyond plain
+cdc_merge, the sink being the Delta-format log table the bucketed-sink
+drills commit to."""
 
 import pandas as pd
 from hypothesis import HealthCheck, given, settings
@@ -11,7 +11,7 @@ from dynamodb_pitr_restore_cdc_spark.operators.cdc import (
     cdc_merge_tombstone,
     visible,
 )
-from dynamodb_pitr_restore_cdc_spark.streaming.cdc_sink import BucketedCdcSink
+from dynamodb_pitr_restore_cdc_spark.streaming.delta_log_sink import DeltaLogSink
 
 
 def to_batch(spark, rows):
@@ -25,6 +25,14 @@ def empty_tomb_snapshot(spark):
     return to_batch(spark, []).selectExpr(
         "key", "seq_no as last_seq", "op", "payload_value"
     )
+
+
+def files_by_bucket(sink):
+    """{bucket: active data files} from the table's log."""
+    out = {}
+    for f in sink._pin().files:
+        out.setdefault(f.bucket, set()).add(f.path)
+    return out
 
 
 def naive_fold(ops):
@@ -82,17 +90,13 @@ def test_tombstone_merge_invariant_under_arbitrary_batching(spark, data):
 
 
 def test_bucketed_sink_rewrites_only_touched_buckets(spark, tmp_path):
-    sink = BucketedCdcSink(spark, str(tmp_path / "sink"), n_buckets=8)
+    sink = DeltaLogSink(spark, str(tmp_path / "sink"), n_buckets=8)
     init = to_batch(
         spark, [(k, 1, "INSERT", float(k)) for k in range(40)]
     ).selectExpr("key", "seq_no as last_seq", "op", "payload_value")
     sink.init(init)
 
-    before = {
-        d: sorted(os.listdir(os.path.join(sink.path, d)))
-        for d in os.listdir(sink.path)
-        if d.startswith("bucket=")
-    }
+    before = files_by_bucket(sink)
     # one batch touching exactly one key
     batch = to_batch(spark, [(7, 2, "MODIFY", 99.0)])
     touched_bucket = batch.select(
@@ -100,22 +104,18 @@ def test_bucketed_sink_rewrites_only_touched_buckets(spark, tmp_path):
     ).first().b
     sink.apply_batch(batch)
 
-    after = {
-        d: sorted(os.listdir(os.path.join(sink.path, d)))
-        for d in os.listdir(sink.path)
-        if d.startswith("bucket=")
-    }
-    for d in before:
-        if d != f"bucket={touched_bucket}":
-            assert before[d] == after[d], f"untouched {d} was rewritten"
-    assert before[f"bucket={touched_bucket}"] != after[f"bucket={touched_bucket}"]
+    after = files_by_bucket(sink)
+    for b in before:
+        if b != touched_bucket:
+            assert before[b] == after[b], f"untouched bucket {b} was rewritten"
+    assert before[touched_bucket] != after[touched_bucket]
 
     vis = {r.key: r.payload_value for r in sink.visible().collect()}
     assert vis[7] == 99.0 and len(vis) == 40
 
 
 def test_compaction_drops_old_tombstones_keeps_recent(spark, tmp_path):
-    sink = BucketedCdcSink(spark, str(tmp_path / "sink3"), n_buckets=4)
+    sink = DeltaLogSink(spark, str(tmp_path / "sink3"), n_buckets=4)
     sink.init(
         to_batch(spark, [(k, k, "INSERT", float(k)) for k in range(6)]).selectExpr(
             "key", "seq_no as last_seq", "op", "payload_value"
@@ -125,11 +125,7 @@ def test_compaction_drops_old_tombstones_keeps_recent(spark, tmp_path):
     assert sink.snapshot().where("op = 'REMOVE'").count() == 2
 
     # compaction must prune: untouched clean buckets keep their files
-    clean_before = {
-        d: sorted(os.listdir(os.path.join(sink.path, d)))
-        for d in os.listdir(sink.path)
-        if d.startswith("bucket=")
-    }
+    clean_before = files_by_bucket(sink)
     sink.compact(reorder_horizon_seq=15)
     snap = sink.snapshot()
     # tombstone@10 compacted away, tombstone@20 still guards reordering
@@ -144,7 +140,7 @@ def test_compaction_drops_old_tombstones_keeps_recent(spark, tmp_path):
 
 def test_compaction_is_bucket_pruned_and_clears_empty_buckets(spark, tmp_path):
     # 1 key per bucket: bucket of key 100 will hold ONLY an expired tombstone
-    sink = BucketedCdcSink(spark, str(tmp_path / "sink4"), n_buckets=8)
+    sink = DeltaLogSink(spark, str(tmp_path / "sink4"), n_buckets=8)
     sink.init(
         to_batch(spark, [(k, 1, "INSERT", float(k)) for k in range(6)]).selectExpr(
             "key", "seq_no as last_seq", "op", "payload_value"
@@ -153,13 +149,7 @@ def test_compaction_is_bucket_pruned_and_clears_empty_buckets(spark, tmp_path):
     sink.apply_batch(to_batch(spark, [(100, 5, "INSERT", 1.0)]))
     sink.apply_batch(to_batch(spark, [(100, 6, "REMOVE", None)]))
 
-    before = {
-        d: sorted(os.listdir(os.path.join(sink.path, d)))
-        for d in os.listdir(sink.path)
-        if d.startswith("bucket=")
-    }
-    from pyspark.sql import functions as F
-
+    before = files_by_bucket(sink)
     tomb_bucket = (
         sink.snapshot()
         .where("op = 'REMOVE'")
@@ -167,32 +157,28 @@ def test_compaction_is_bucket_pruned_and_clears_empty_buckets(spark, tmp_path):
         .first()
         .b
     )
-    sink.compact(reorder_horizon_seq=50)
-
-    after = {
-        d: sorted(os.listdir(os.path.join(sink.path, d)))
-        for d in os.listdir(sink.path)
-        if d.startswith("bucket=")
-    }
-    # clean buckets untouched byte-for-byte file list
-    for d in before:
-        if d != f"bucket={tomb_bucket}":
-            assert before[d] == after[d], f"clean {d} was rewritten by compact"
-    # the tombstone-only bucket is GONE (dynamic overwrite can't clear it;
-    # the explicit cleanup must)
-    if all(
+    tomb_only = all(
         r.key == 100
-        for r in spark.read.parquet(str(tmp_path / "sink4")).where(
+        for r in sink.snapshot().where(
             F.pmod(F.hash("key"), F.lit(8)) == tomb_bucket
         ).collect()
-    ):
-        assert f"bucket={tomb_bucket}" not in after
+    )
+    sink.compact(reorder_horizon_seq=50)
+
+    after = files_by_bucket(sink)
+    # clean buckets untouched: the same active file set
+    for b in before:
+        if b != tomb_bucket:
+            assert before[b] == after[b], f"clean bucket {b} was rewritten by compact"
+    # a bucket that held only the expired tombstone has no live file left
+    if tomb_only:
+        assert tomb_bucket not in after
     assert sink.snapshot().where("op = 'REMOVE'").count() == 0
     assert {r.key for r in sink.visible().collect()} == {0, 1, 2, 3, 4, 5}
 
 
 def test_bucketed_sink_delete_and_reinsert(spark, tmp_path):
-    sink = BucketedCdcSink(spark, str(tmp_path / "sink2"), n_buckets=4)
+    sink = DeltaLogSink(spark, str(tmp_path / "sink2"), n_buckets=4)
     sink.init(
         to_batch(spark, [(1, 1, "INSERT", 1.0), (2, 2, "INSERT", 2.0)]).selectExpr(
             "key", "seq_no as last_seq", "op", "payload_value"

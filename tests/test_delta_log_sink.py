@@ -63,7 +63,7 @@ def test_log_layout_and_actions(sink):
 
 
 def test_merge_skips_untouched_buckets(sink, spark):
-    _, _, active_v1 = sink._state(1)
+    active_v1 = sink._state(1)[2]
     bucket_of = {
         p: int(a["partitionValues"]["bucket"]) for p, a in active_v1.items()
     }
@@ -79,7 +79,7 @@ def test_merge_skips_untouched_buckets(sink, spark):
 
 
 def test_data_files_are_immutable(sink, spark):
-    _, _, active_v1 = sink._state(1)
+    active_v1 = sink._state(1)[2]
     sigs = {
         p: os.path.getmtime(os.path.join(sink.path, p)) for p in active_v1
     }
@@ -115,9 +115,9 @@ def test_checkpoint_bounds_replay_and_expiry_fails_loudly(sink, spark):
 
 
 def test_vacuum_deletes_only_unreferenced_files(sink, spark):
-    _, _, active_v1 = sink._state(1)
+    active_v1 = sink._state(1)[2]
     sink.apply_batch(_batch(spark, [(3, 10, "MODIFY", 3.5)]))
-    _, _, active_v2 = sink._state(2)
+    active_v2 = sink._state(2)[2]
     replaced = set(active_v1) - set(active_v2)
     survivors = set(active_v1) & set(active_v2)
     assert replaced and survivors  # untouched buckets' files carry over
@@ -228,7 +228,7 @@ def test_lost_race_remerges_against_winner_state(sink, spark):
     assert len(keys) == len(set(keys))  # no resurrected duplicate anywhere
     # the retry's remove set names the WINNER's file for key 1's bucket,
     # so replay keeps exactly one live add per path
-    _schema, _cfg, active = sink._state()
+    active = sink._state()[2]
     assert len(active) == len({a["path"] for a in active.values()})
 
 
@@ -252,7 +252,7 @@ def test_optimize_lost_race_recomputes_candidates(sink, spark):
     assert [(r.key, r.payload_value) for r in rows if r.key == 3] == [(3, 3.5)]
     keys = [r.key for r in rows]
     assert len(keys) == len(set(keys))  # the stale-remove bug duplicates rows
-    _schema, _cfg, active = sink._state()
+    active = sink._state()[2]
     for a in active.values():  # every live add names an existing file
         assert os.path.exists(os.path.join(sink.path, a["path"]))
 
@@ -306,7 +306,7 @@ def test_vacuum_sweeps_crashed_attempt_orphans(sink, spark):
     # aged past the grace window the same files ARE debris
     sink.expire_versions(keep_last=1, sweep_orphans=True, orphan_grace_s=0.0)
     assert not any(os.path.exists(p) for p in orphans)
-    _schema, _cfg, active = sink._state()
+    active = sink._state()[2]
     for a in active.values():
         assert os.path.exists(os.path.join(sink.path, a["path"]))
     rows = {r.key: r.payload_value for r in sink.visible().collect()}
@@ -348,12 +348,12 @@ def test_visible_folds_mor_entries(sink, spark):
 
 def test_merge_retires_touched_buckets_mor_files(sink, spark):
     sink.append(_batch(spark, [(3, 10, "MODIFY", 3.5)]))
-    _, _, active = sink._state()
+    active = sink._state()[2]
     mor_paths = {p for p, a in active.items() if DeltaLogSink._is_mor(a)}
     assert mor_paths
     # a MERGE touching key 3's bucket must fold + retire its mor files
     sink.apply_batch(_batch(spark, [(3, 11, "MODIFY", 3.6)]))
-    _, _, active2 = sink._state()
+    active2 = sink._state()[2]
     assert not (mor_paths & set(active2)), "merge must retire folded mor files"
     rows = {r.key: r.payload_value for r in sink.visible().collect()}
     assert rows[3] == 3.6
@@ -489,9 +489,9 @@ def test_spared_dead_file_gets_its_sweep_clock_restarted(sink, spark):
     # grace. Ancient write-mtime + fresh tombstone = the hazard shape.
     import time as _time
 
-    _, _, active_v1 = sink._state(1)
+    active_v1 = sink._state(1)[2]
     sink.apply_batch(_batch(spark, [(3, 10, "MODIFY", 3.5)]))
-    _, _, active_v2 = sink._state(2)
+    active_v2 = sink._state(2)[2]
     replaced = sorted(set(active_v1) - set(active_v2))
     assert replaced
     ancient = _time.time() - 10_000

@@ -1,7 +1,8 @@
 """The streaming-drill harness (streaming/drill.py): the one place a
-drill starts, awaits and cleans up. A failing drill must leave no temp
-dir, no active stream, no pinned shuffle width and no memory-sink view
-behind, and no other module may grow its own lifecycle again."""
+drill starts, awaits and cleans up, and the one owner of builders'
+scratch dirs. A failing drill must leave no temp dir, no active
+stream, no pinned shuffle width and no memory-sink view behind, and no
+other module may grow its own lifecycle or temp-dir root again."""
 
 from __future__ import annotations
 
@@ -62,6 +63,48 @@ def test_only_the_harness_runs_a_stream_lifecycle():
             f"{rel}:{line} {what}" for line, what in _lifecycle_calls(tree) if line not in exempt
         ]
     assert not offenders, "stream lifecycle outside streaming/drill.py: " + ", ".join(offenders)
+
+
+# the temp-dir roots that may stay outside a Drill: the harness's own
+# ROOT, the pid-scoped session artifact roots, and the two plan-audit
+# helpers that hand their path to the caller
+_TEMP_ROOT_EXEMPT = {
+    "registry.py": {"pid_scoped_root"},
+    "operators/layout.py": {"partitioned_scan_plan", "dpp_join_plan"},
+}
+
+
+def _temp_root_calls(tree: ast.AST, exempt: set[str]) -> list[tuple[int, str]]:
+    """(line, what) for each mkdtemp(/gettempdir( call outside the
+    functions named in `exempt`."""
+    skip = {
+        line
+        for fn in ast.walk(tree)
+        if isinstance(fn, ast.FunctionDef) and fn.name in exempt
+        for line in range(fn.lineno, fn.end_lineno + 1)
+    }
+    found = []
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        name = getattr(node.func, "attr", getattr(node.func, "id", None))
+        if name in ("mkdtemp", "gettempdir") and node.lineno not in skip:
+            found.append((node.lineno, f"{name}("))
+    return found
+
+
+def test_only_the_harness_makes_a_scratch_dir():
+    offenders = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        rel = path.relative_to(PACKAGE).as_posix()
+        if rel == "streaming/drill.py":
+            continue
+        tree = ast.parse(path.read_text())
+        offenders += [
+            f"{rel}:{line} {what}"
+            for line, what in _temp_root_calls(tree, _TEMP_ROOT_EXEMPT.get(rel, set()))
+        ]
+    assert not offenders, "scratch dir outside streaming/drill.Drill: " + ", ".join(offenders)
 
 
 def _snapshot(spark):

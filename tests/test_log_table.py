@@ -146,3 +146,50 @@ def test_empty_append_commits_nothing_empty_merge_commits_once(
     sink.apply_batch(_batch(spark, []))
     assert sink.latest_version() == v + 1
     assert sorted(r.key for r in sink.visible().collect()) == [0, 1, 2, 3]
+
+
+@pytest.mark.parametrize("fmt", sorted(FORMATS))
+def test_epoch_txn_commits_each_epoch_once(spark, tmp_path, fmt):
+    # apply_batch(txn=(app, epoch)) is exactly-once per epoch at the
+    # table: the epoch is recorded in the commit, and an epoch at or
+    # below the app's recorded one is a no-op
+    sink = FORMATS[fmt](spark, str(tmp_path / "t"), n_buckets=4)
+    sink.init(
+        spark.createDataFrame(
+            [(k, 0, float(k)) for k in range(4)],
+            schema="key long, last_seq long, payload_value double",
+        )
+    )
+    v = sink.latest_version()
+    sink.apply_batch(_batch(spark, [(1, 5, "MODIFY", 1.5)]), txn=("app", 1))
+    sink.apply_batch(_batch(spark, [(1, 5, "MODIFY", 1.5)]), txn=("app", 1))
+    assert sink.latest_version() == v + 1  # the replayed epoch: one version
+    sink.apply_batch(_batch(spark, [(2, 6, "MODIFY", 9.9)]), txn=("app", 0))
+    assert sink.latest_version() == v + 1  # a lower epoch: no-op
+    sink.apply_batch(_batch(spark, [(2, 6, "MODIFY", 2.5)]), txn=("other", 0))
+    assert sink.latest_version() == v + 2  # another app commits
+
+    # a lost race against a winner that committed the same epoch: the
+    # loser re-pins, finds the epoch recorded and commits nothing
+    winner = FORMATS[fmt](spark, sink.path, n_buckets=4)
+    write, fired = sink._write_data, {}
+
+    def racing_write(*a, **k):
+        out = write(*a, **k)
+        if not fired:
+            fired["x"] = True
+            winner.apply_batch(_batch(spark, [(3, 7, "MODIFY", 3.5)]), txn=("app", 2))
+        return out
+
+    sink._write_data = racing_write
+    sink.apply_batch(_batch(spark, [(3, 7, "MODIFY", 3.5)]), txn=("app", 2))
+    assert fired and sink.latest_version() == v + 3
+
+    # the recorded epoch survives retention past every commit carrying it
+    sink.apply_batch(_batch(spark, [(0, 8, "MODIFY", 0.5)]))
+    sink.expire_versions(keep_last=1)
+    sink.apply_batch(_batch(spark, [(0, 9, "REMOVE", None)]), txn=("app", 2))
+    assert sink.latest_version() == v + 4
+    assert sorted((r.key, r.payload_value) for r in sink.visible().collect()) == [
+        (0, 0.5), (1, 1.5), (2, 2.5), (3, 3.5),
+    ]

@@ -5,6 +5,7 @@ clocks (no real sleeping)."""
 import pandas as pd
 import pytest
 
+from dynamodb_pitr_restore_cdc_spark.streaming.delta_log_sink import DeltaLogSink
 from dynamodb_pitr_restore_cdc_spark.streaming.orchestration import (
     RestoreStatus,
     restore_and_backfill,
@@ -106,7 +107,7 @@ def test_restore_and_backfill_end_to_end(spark, tmp_path):
         str(tmp_path / "work"),
         sleep=clk.sleep,
     )
-    got = {r.key: r.payload_value for r in spark.read.parquet(final).collect()}
+    got = {r.key: r.payload_value for r in DeltaLogSink(spark, final).visible().collect()}
     assert got == {10: 1.5}  # key 10 inserted, key 11 removed
 
 
@@ -162,7 +163,7 @@ def test_control_event_drain_late_binds_targets(spark, tmp_path):
     assert probed == ["restored_a", "restored_b"]
     for target, path in out.items():
         assert f"/{target}/" in path + "/"
-        got = {r.key: r.payload_value for r in spark.read.parquet(path).collect()}
+        got = {r.key: r.payload_value for r in DeltaLogSink(spark, path).visible().collect()}
         assert got == {10: 1.5, 11: 9.0}
 
 

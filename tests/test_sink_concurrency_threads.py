@@ -173,7 +173,7 @@ def test_writers_race_maintenance_losslessly(spark, tmp_path, fmt):
     # every file the final state references must exist (no dangling
     # adds from a sweep that raced a winning commit)
     if fmt == "delta":
-        _schema, _cfg, active = sink._state()
+        active = sink._state()[2]
         paths = [a["path"] for a in active.values()]
     else:
         meta = sink._current_meta()

@@ -14,7 +14,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from dynamodb_pitr_restore_cdc_spark.operators.cdc import visible
-from dynamodb_pitr_restore_cdc_spark.streaming.cdc_sink import BucketedCdcSink
 from dynamodb_pitr_restore_cdc_spark.streaming.sink_format import (
     CompactingSinkFormat,
     SinkFormat,
@@ -44,7 +43,9 @@ def _rows(df):
 
 
 FACTORIES = {
-    "bucketed": lambda spark, path: BucketedCdcSink(spark, path, n_buckets=4),
+    # the 16-bucket Delta table the bucketed-sink stream drills
+    # (q_cdc_bucketed_sink, q_cdc_sink_compaction) commit to
+    "bucketed": lambda spark, path: DeltaLogSink(spark, path, n_buckets=16),
     "versioned": lambda spark, path: VersionedCdcSink(spark, path, n_buckets=4),
     # the Delta-protocol-shaped format (delta_log_sink.py): the proof
     # that a transaction-log table format drops in behind the seam
@@ -58,13 +59,11 @@ COMPACTING = ["bucketed", "delta", "iceberg"]
 
 
 def test_structural_conformance():
-    # runtime_checkable protocols: both sinks satisfy the base seam;
-    # each extension is satisfied by exactly the sink that claims it
-    assert issubclass(BucketedCdcSink, SinkFormat)
+    # runtime_checkable protocols: every sink satisfies the base seam;
+    # each extension is satisfied by exactly the sinks that claim it
     assert issubclass(VersionedCdcSink, SinkFormat)
-    assert issubclass(BucketedCdcSink, CompactingSinkFormat)
     assert issubclass(VersionedCdcSink, VersionedSinkFormat)
-    assert not issubclass(BucketedCdcSink, VersionedSinkFormat)
+    assert not issubclass(VersionedCdcSink, CompactingSinkFormat)
     # the Delta-shaped log implements every seam extension
     assert issubclass(DeltaLogSink, SinkFormat)
     assert issubclass(DeltaLogSink, CompactingSinkFormat)

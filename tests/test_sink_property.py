@@ -1,5 +1,5 @@
-"""Sink-level property test: the full BucketedCdcSink stack (bucketing,
-dynamic partition overwrite, tombstones, compaction-free path) must
+"""Sink-level property test: the full log-table stack (bucketing,
+bucket-pruned MERGE commits, tombstones, compaction-free path) must
 equal the naive sequential fold for random op sequences over random
 batch splits — the integration-level version of the merge properties."""
 
@@ -8,7 +8,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from dynamodb_pitr_restore_cdc_spark.streaming.cdc_sink import BucketedCdcSink
+from dynamodb_pitr_restore_cdc_spark.streaming.delta_log_sink import DeltaLogSink
 
 
 def naive_fold(ops):
@@ -43,7 +43,8 @@ def test_bucketed_sink_equals_fold(spark, tmp_path_factory, data):
     assignment = [data.draw(st.integers(0, 1)) for _ in range(n)]
 
     path = str(tmp_path_factory.mktemp("sinkprop"))
-    sink = BucketedCdcSink(spark, path + "/s", n_buckets=4)
+    # the 16-bucket table of the bucketed-sink drills
+    sink = DeltaLogSink(spark, path + "/s", n_buckets=16)
     sink.init(to_batch(spark, []).selectExpr("key", "seq_no as last_seq", "op", "payload_value"))
     for b in range(2):
         rows = [
@@ -65,10 +66,6 @@ def test_delta_sink_equals_fold_and_feed_equals_state_diff(
     # same integration property, through the Delta-protocol format —
     # PLUS the changefeed invariant: changes_between(v2, v3) must equal
     # the dict-diff of the naive fold before/after the second batch
-    from dynamodb_pitr_restore_cdc_spark.streaming.delta_log_sink import (
-        DeltaLogSink,
-    )
-
     n = data.draw(st.integers(1, 15))
     ops = [
         (
@@ -137,10 +134,6 @@ def test_delta_maintenance_interleaving_preserves_history(
     (compaction commits change no visible state), and every EXPIRED
     version raises loudly. Batches are seq-contiguous so a compaction
     horizon can never outrun an in-flight stale row."""
-    from dynamodb_pitr_restore_cdc_spark.streaming.delta_log_sink import (
-        DeltaLogSink,
-    )
-
     n = data.draw(st.integers(3, 12))
     ops = [
         (
@@ -224,10 +217,6 @@ def test_mor_lane_interleaving_converges_to_fold(spark, data):
         fold_changelog,
         latest_per_key,
     )
-    from dynamodb_pitr_restore_cdc_spark.streaming.delta_log_sink import (
-        DeltaLogSink,
-    )
-
     n = data.draw(st.integers(1, 24))
     k = data.draw(st.integers(1, 4))
     rows = []
@@ -277,10 +266,6 @@ def test_compact_skips_buckets_with_pending_deltas(spark, tmp_path_factory):
     tombstone hands the read-time fold to the stale entry, silently
     resurrecting the deleted key across a dataChange:False commit."""
     from dynamodb_pitr_restore_cdc_spark.operators.cdc import fold_changelog
-    from dynamodb_pitr_restore_cdc_spark.streaming.delta_log_sink import (
-        DeltaLogSink,
-    )
-
     path = str(tmp_path_factory.mktemp("morcompact"))
     sink = DeltaLogSink(spark, path + "/t", n_buckets=2)
     sink.init(
@@ -330,9 +315,6 @@ def test_append_stale_entries_survive_compact(spark, fmt, data):
     import tempfile
 
     from dynamodb_pitr_restore_cdc_spark.operators.cdc import fold_changelog
-    from dynamodb_pitr_restore_cdc_spark.streaming.delta_log_sink import (
-        DeltaLogSink,
-    )
     from dynamodb_pitr_restore_cdc_spark.streaming.iceberg_log_sink import (
         IcebergLogSink,
     )

@@ -77,7 +77,7 @@ def test_session_stream_resumes_from_committed_store(spark, tmp_path):
     (same src/work dirs — the durable pointer + stream checkpoint) sees
     one more split. The resumed run must merge the new batch onto the
     COMMITTED store, ending equal to single-pass sessionization of all
-    events — the pointer discipline run_cdc_apply established, applied
+    events — the pointer discipline of drill.fold_versions, applied
     to the session store."""
     import os
 
@@ -456,7 +456,7 @@ def test_hw_stream_resumes_with_carried_smoothings(spark, tmp_path):
 
 
 def test_hw_stream_resume_survives_torn_pointer_attempt(spark, tmp_path):
-    """_set_pointer's crash window: a run that died mid-pointer-update
+    """drill.fold_versions' crash window: a run that died mid-pointer-update
     leaves a stale `_LATEST.tmp` (torn content) while `_LATEST` itself
     still names the last committed state — the restart must resume from
     the committed pointer, ignore the debris, and emit exactly the

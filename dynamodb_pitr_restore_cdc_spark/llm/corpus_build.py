@@ -241,7 +241,8 @@ def q_llm_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # triggers it):
     # - first pin: the exact dedup and the index init, whose bucket
     #   write (table_files.repartition_by_bucket) also takes the pinned
-    #   width, min(32 buckets, pin) parallel write tasks;
+    #   width, min(32 buckets, pin) parallel write tasks (LshIndex keeps
+    #   an explicit 32, not the pin: index_maintenance docstring);
     # - session width: only drop_set's eager part, the folded index
     #   read and the dropset_gate aggregate (the verify plan it returns
     #   is lazy);

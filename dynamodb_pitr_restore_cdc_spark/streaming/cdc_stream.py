@@ -140,11 +140,10 @@ def run_cdc_apply(
     merge a per-key max-seq reduction, so the state is also correct
     under cross-batch reordering.
     """
-    # one bucket per write task of the restoring session: a wider table
-    # only splits each epoch's rewrite into more, smaller files (at
-    # sf0.1, local[4]: 32 buckets ran the drill in 6.84 s, 4 in 5.04 s)
-    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    table = DeltaLogSink(spark, os.path.join(work_dir, "table"), n_buckets=width)
+    # no width: the table takes one bucket per write task of the
+    # restoring session (LogTable._init_transform; at sf0.1, local[4]
+    # this drill ran in 6.84 s at 32 buckets, 5.04 s at 4)
+    table = DeltaLogSink(spark, os.path.join(work_dir, "table"))
     try:
         table.latest_version()
     except NoTable:

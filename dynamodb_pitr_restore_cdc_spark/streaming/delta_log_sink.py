@@ -330,6 +330,7 @@ class DeltaLogSink(LogTable):
         if "op" not in snap.columns:
             snap = snap.withColumn("op", F.lit("INSERT"))
         schema_json = snap.schema.json()
+        name, n = self._init_transform()
         bucketed = snap.withColumn("bucket", self._bucket(F.col(key)))
         adds = self._write_data(bucketed, 1)
         self._commit(
@@ -348,9 +349,7 @@ class DeltaLogSink(LogTable):
                         # even from a fresh sink instance
                         "configuration": {
                             "mergeKey": key,
-                            "bucketTransform": (
-                                f"{self._transform_arg}[{self.n_buckets}]"
-                            ),
+                            "bucketTransform": f"{name}[{n}]",
                         },
                     }
                 },

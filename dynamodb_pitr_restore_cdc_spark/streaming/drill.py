@@ -4,7 +4,7 @@ and cleans up a Structured Streaming query.
 A drill replays a fixture as a REAL multi-micro-batch stream so batch
 boundaries — the thing that makes streaming semantics interesting —
 actually exist. Every drill has the same lifecycle: fresh dirs under
-``<tmp>/spark_cdc_engine_stream/``, mtime-pinned split files, the
+``<tmp>/spark_cdc_engine_stream-<pid>/``, mtime-pinned split files, the
 pinned file stream read, start and await under ``availableNow``, then
 materialize the result and remove the dirs. ``Drill`` owns that
 lifecycle and cleans up in a finally: the query is stopped if it is
@@ -36,16 +36,17 @@ import contextlib
 import json
 import os
 import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..registry import tracked_persist
+from ..registry import pid_scoped_root, tracked_persist
 from .util import atomic_write_text, pinned_shuffle_width
 
-ROOT = os.path.join(tempfile.gettempdir(), "spark_cdc_engine_stream")
+# pid-scoped (registry.pid_scoped_root): a concurrent engine process's
+# drill dirs live under its own root, never under this one
+ROOT = pid_scoped_root("stream")
 
 _SPLIT_BASE_MTIME = 1_700_000_000
 

@@ -900,6 +900,7 @@ class IcebergLogSink(LogTable):
         if "op" not in snap.columns:
             snap = snap.withColumn("op", F.lit("INSERT"))
         schema_json = snap.schema.json()
+        name, n = self._init_transform()
         bucketed = snap.withColumn("bucket", self._bucket(F.col(key)))
         entries = self._write_data(bucketed, 1)
         meta = {
@@ -909,9 +910,7 @@ class IcebergLogSink(LogTable):
             "schemas": [{"schema-id": 0, "schema": schema_json}],
             "current-schema-id": 0,
             "partition-spec": [
-                {"name": "bucket",
-                 "transform": f"{self._transform_arg}[{self.n_buckets}]",
-                 "source": key}
+                {"name": "bucket", "transform": f"{name}[{n}]", "source": key}
             ],
             "snapshots": [],
             "current-snapshot-id": None,
@@ -1224,6 +1223,13 @@ class IcebergLogSink(LogTable):
 # ---------------------------------------------------------------------------
 
 
+def _lower_half(sink: LogTable) -> set[int]:
+    """The lower half of the table's PERSISTED buckets, at least one:
+    the MOR drills' compact_mor set, which must fold something at any
+    creation width (half of one bucket is none)."""
+    return set(range(max(1, sink._transform()[1] // 2)))
+
+
 def _register_iceberg_fold() -> None:
     """Deferred import so the module stays importable without the
     registry side effects it feeds (registry imports THIS module)."""
@@ -1302,7 +1308,7 @@ FROM (
                 cl.where((F.col("seq_no") > c1) & (F.col("seq_no") <= c2))
             )
             sink.append(cl.where(F.col("seq_no") > c2))
-            sink.compact_mor(set(range(sink.n_buckets // 2)))
+            sink.compact_mor(_lower_half(sink))
             sink.compact(reorder_horizon_seq=int(max_seq) + 1)
             # grace 0 is safe here: this builder is the table's only writer
             sink.expire_versions(keep_last=2, sweep_orphans=True, orphan_grace_s=0.0)
@@ -1359,7 +1365,7 @@ FROM (
                 narrow.where((F.col("seq_no") > c1) & (F.col("seq_no") <= c2))
             )
             sink.append(cl.where(F.col("seq_no") > c2))  # evolves, MOR lane
-            sink.compact_mor(set(range(sink.n_buckets // 2)))
+            sink.compact_mor(_lower_half(sink))
             # grace 0 is safe here: this builder is the table's only writer
             sink.expire_versions(keep_last=2, sweep_orphans=True, orphan_grace_s=0.0)
             result = tracked_persist(

@@ -252,6 +252,17 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
 
+def _replay_cuts(cl: DataFrame) -> tuple[float, float, float]:
+    """The three-batch replay drills' seq cuts: the restore point and
+    the starts of batches 2 and 3, at 0.5, 0.6667 and 0.8333 of the
+    changelog's seq_no range. One min/max aggregate (driver-side
+    scalars — orchestration, not a data path): seq_no is the fixture's
+    dense event_id (0..n-1), so ``min + q·(max − min)`` is exactly
+    ``percentile(seq_no, q)``, which costs two jobs."""
+    lo, hi = cl.agg(F.min("seq_no"), F.max("seq_no")).first()
+    return tuple(lo + q * (hi - lo) for q in (0.5, 0.6667, 0.8333))
+
+
 @register(
     "q_stream_foreachbatch_cdc",
     oracle=with_changelog(
@@ -273,17 +284,13 @@ def q_stream_foreachbatch_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot (cdc_stream.run_cdc_apply). Must equal — and is
     oracle-checked against — the batch flagship q_cdc_snapshot_rebuild."""
     cl = changelog(spark, sf_dir)
-    row = cl.agg(
-        F.expr("percentile(seq_no, 0.5)").alias("med"),
-        F.expr("percentile(seq_no, 0.6667)").alias("p1"),
-        F.expr("percentile(seq_no, 0.8333)").alias("p2"),
-    ).first()
-    snapshot = fold_changelog(cl.where(F.col("seq_no") < row.med))
-    second = cl.where(F.col("seq_no") >= row.med)
+    med, p1, p2 = _replay_cuts(cl)
+    snapshot = fold_changelog(cl.where(F.col("seq_no") < med))
+    second = cl.where(F.col("seq_no") >= med)
 
     s = F.col("seq_no")
     with Drill(spark, "fb") as drill:
-        src = drill.splits(second, [s < row.p1, (s >= row.p1) & (s < row.p2), s >= row.p2])
+        src = drill.splits(second, [s < p1, (s >= p1) & (s < p2), s >= p2])
         with pinned_shuffle_width(spark):
             table = run_cdc_apply(spark, src, snapshot, drill.dir("work"))
             result = tracked_persist(
@@ -478,22 +485,18 @@ def q_cdc_bucketed_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     core). Three contiguous-seq batches; result must equal the one-shot
     rebuild — same oracle as q_cdc_snapshot_rebuild."""
     cl = changelog(spark, sf_dir)
-    row = cl.agg(
-        F.expr("percentile(seq_no, 0.5)").alias("med"),
-        F.expr("percentile(seq_no, 0.6667)").alias("p1"),
-        F.expr("percentile(seq_no, 0.8333)").alias("p2"),
-    ).first()
-    snapshot = fold_changelog(cl.where(F.col("seq_no") < row.med))
+    med, p1, p2 = _replay_cuts(cl)
+    snapshot = fold_changelog(cl.where(F.col("seq_no") < med))
 
     s = F.col("seq_no")
-    second = cl.select("seq_no", "op", "key", "payload_value").where(s >= row.med)
+    second = cl.select("seq_no", "op", "key", "payload_value").where(s >= med)
     with Drill(spark, "bsink") as drill:
         sink = DeltaLogSink(spark, drill.dir("sink"), n_buckets=16)
         # NO width pin: the MERGE commits are the log-fold drills' work
         # (sf0.1 same-session A/B, median of 5, pinned vs session width:
         # local[8] 4.35 s vs 4.33 s; at local[4] the two widths are equal)
         sink.init(snapshot)
-        for pred in [s < row.p1, (s >= row.p1) & (s < row.p2), s >= row.p2]:
+        for pred in [s < p1, (s >= p1) & (s < p2), s >= p2]:
             sink.apply_batch(second.where(pred))
         result = tracked_persist(
             sink.visible().select("key", "last_seq", "payload_value")
@@ -526,28 +529,24 @@ def q_cdc_sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     the compact actually removed tombstones — an inert pass would make
     this query vacuous."""
     cl = changelog(spark, sf_dir)
-    row = cl.agg(
-        F.expr("percentile(seq_no, 0.5)").alias("med"),
-        F.expr("percentile(seq_no, 0.6667)").alias("p1"),
-        F.expr("percentile(seq_no, 0.8333)").alias("p2"),
-    ).first()
-    snapshot = fold_changelog(cl.where(F.col("seq_no") < row.med))
+    med, p1, p2 = _replay_cuts(cl)
+    snapshot = fold_changelog(cl.where(F.col("seq_no") < med))
 
     s = F.col("seq_no")
-    second = cl.select("seq_no", "op", "key", "payload_value").where(s >= row.med)
+    second = cl.select("seq_no", "op", "key", "payload_value").where(s >= med)
     is_tomb = F.col("op") == "REMOVE"
     with Drill(spark, "csink") as drill:
         sink = DeltaLogSink(spark, drill.dir("sink"), n_buckets=16)
         # NO width pin (q_cdc_bucketed_sink; A/B at local[8]: pinned
         # 5.16 s vs session width 4.94 s)
         sink.init(snapshot)
-        sink.apply_batch(second.where(s < row.p1))
-        sink.apply_batch(second.where((s >= row.p1) & (s < row.p2)))
+        sink.apply_batch(second.where(s < p1))
+        sink.apply_batch(second.where((s >= p1) & (s < p2)))
         tombs_before = sink.snapshot().where(is_tomb).count()  # orchestration scalar
-        sink.compact(reorder_horizon_seq=int(row.p2))
+        sink.compact(reorder_horizon_seq=int(p2))
         tombs_after = sink.snapshot().where(is_tomb).count()
         assert tombs_after < tombs_before, "compact removed no tombstones — vacuous run"
-        sink.apply_batch(second.where(s >= row.p2))
+        sink.apply_batch(second.where(s >= p2))
         result = tracked_persist(
             sink.visible().select("key", "last_seq", "payload_value")
         )

@@ -473,7 +473,7 @@ def test_fresh_handle_follows_persisted_transform(spark, tmp_path):
     # bucket its batch, miss the existing base file, and duplicate keys
     s = DeltaLogSink(spark, str(tmp_path / "t"), n_buckets=8, transform="mod")
     s.init(_snapshot(spark, [(k, 0, float(k)) for k in range(16)]))
-    fresh = DeltaLogSink(spark, str(tmp_path / "t"))  # defaults: bucket[32]
+    fresh = DeltaLogSink(spark, str(tmp_path / "t"))  # defaults: bucket[session width]
     fresh.apply_batch(_batch(spark, [(9, 10, "MODIFY", 9.5)]))
     rows = fresh.visible().collect()
     keys = [r.key for r in rows]

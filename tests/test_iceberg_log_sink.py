@@ -698,7 +698,7 @@ def test_fresh_handle_follows_persisted_transform(spark, tmp_path):
     s.init(_snapshot(spark, [(k, 0, float(k)) for k in range(16)]))
     meta = s._current_meta()
     assert meta["partition-spec"][0]["transform"] == "mod[8]"
-    fresh = IcebergLogSink(spark, str(tmp_path / "t"))  # defaults: bucket[32]
+    fresh = IcebergLogSink(spark, str(tmp_path / "t"))  # defaults: bucket[session width]
     fresh.apply_batch(_batch(spark, [(9, 10, "MODIFY", 9.5)]))
     rows = fresh.visible().collect()
     keys = [r.key for r in rows]

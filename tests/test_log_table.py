@@ -1,5 +1,5 @@
 """The shared commit core (streaming/log_table.py) under both formats:
-its error contract and its empty-batch rules.
+its error contract, its empty-batch rules and its default width.
 
 The first two groups need no Spark: every path they drive fails at
 its pin, before any data is touched, so the sinks run with
@@ -15,6 +15,7 @@ from dynamodb_pitr_restore_cdc_spark.streaming.delta_log_sink import DeltaLogSin
 from dynamodb_pitr_restore_cdc_spark.streaming.iceberg_log_sink import (
     IcebergLogSink,
 )
+from dynamodb_pitr_restore_cdc_spark.streaming.util import pinned_shuffle_width
 
 FORMATS = {"delta": DeltaLogSink, "iceberg": IcebergLogSink}
 SCHEMA = json.dumps(
@@ -193,3 +194,51 @@ def test_epoch_txn_commits_each_epoch_once(spark, tmp_path, fmt):
     assert sorted((r.key, r.payload_value) for r in sink.visible().collect()) == [
         (0, 0.5), (1, 1.5), (2, 2.5), (3, 3.5),
     ]
+
+
+def _keys(spark, n):
+    return spark.createDataFrame(
+        [(k, 0, float(k)) for k in range(n)],
+        schema="key long, last_seq long, payload_value double",
+    )
+
+
+def _live_buckets(sink) -> list[int]:
+    """The bucket of each live data file, one entry per file."""
+    return sorted(f.bucket for f in sink._pin().files)
+
+
+@pytest.mark.parametrize("fmt", sorted(FORMATS))
+def test_default_width_is_the_creating_sessions_write_width(spark, tmp_path, fmt):
+    path = str(tmp_path / "t")
+    with pinned_shuffle_width(spark, 3):
+        sink = FORMATS[fmt](spark, path)
+        sink.init(_keys(spark, 64))
+        assert sink._pin().transform == "bucket[3]"
+        assert sink.n_buckets == 3
+        assert _live_buckets(sink) == [0, 1, 2]
+        # a batch touching every key rewrites every bucket: one file each
+        sink.apply_batch(
+            _batch(spark, [(k, 1, "MODIFY", k + 0.5) for k in range(64)])
+        )
+        assert _live_buckets(sink) == [0, 1, 2]
+
+    # a fresh handle in a session of another width follows the
+    # persisted width: its MERGE replaces the bucket files it touches
+    # instead of adding keys under a second layout
+    with pinned_shuffle_width(spark, 5):
+        fresh = FORMATS[fmt](spark, path)
+        fresh.apply_batch(_batch(spark, [(k, 2, "MODIFY", -1.0) for k in (7, 70)]))
+        assert fresh._transform() == ("bucket", 3)
+        assert _live_buckets(fresh) == [0, 1, 2]
+        keys = [r.key for r in fresh.visible().collect()]
+    assert len(keys) == len(set(keys)) == 65
+
+
+@pytest.mark.parametrize("fmt", sorted(FORMATS))
+def test_explicit_width_ignores_the_session_width(spark, tmp_path, fmt):
+    with pinned_shuffle_width(spark, 3):
+        sink = FORMATS[fmt](spark, str(tmp_path / "t"), n_buckets=6)
+        sink.init(_keys(spark, 64))
+    assert sink._pin().transform == "bucket[6]"
+    assert _live_buckets(sink) == list(range(6))

@@ -4,7 +4,9 @@ All inputs are Parquet — the columnar scan path. Catalyst pushes
 predicates and prunes columns into these scans (verified by
 tests/test_plans.py); at 100 TB the same `spark.read.parquet` call
 reads a partitioned directory tree and partition pruning applies on
-top. No schema inference is involved: Parquet footers carry types.
+top. The types come from the Parquet footers, but reading them is work:
+`table()` passes no schema, so every call runs a one-task
+footer-inference job before the query's own jobs.
 """
 
 from __future__ import annotations

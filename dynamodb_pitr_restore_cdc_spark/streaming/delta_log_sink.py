@@ -28,11 +28,13 @@ time travel, changefeed) are the shared commit core in
   key/last_seq/op) and, on merge-on-read files, a ``mor`` tag and a
   ``numRemoves`` stat — everything pruning and maintenance read,
   with zero data reads (Delta's data-skipping contract).
-- **Checkpoint + _last_checkpoint**: retention (`expire_versions`)
-  first writes ``<v>.checkpoint.json`` capturing the full action
-  state at the horizon and points ``_last_checkpoint`` at it, then
-  deletes older commits and vacuums data files referenced by no
-  retained version. Replay cost is bounded by the checkpoint cadence,
+- **Checkpoint + _last_checkpoint**: retention's truncation hook
+  (`_truncate`, under the shared `LogTable.expire_versions`) first
+  writes ``<v>.checkpoint.json`` capturing the full action state at
+  the horizon and points ``_last_checkpoint`` at it, then deletes
+  older commits; the shared core then vacuums data files referenced
+  by no retained version, dead ones by their remove actions'
+  deletionTimestamp. Replay cost is bounded by the checkpoint cadence,
   and time travel below the horizon fails loudly — Delta's
   VACUUM / logRetentionDuration semantics.
 
@@ -54,11 +56,12 @@ import json
 import os
 import time
 import uuid
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .log_table import FileFacts, LogTable, NoTable, Pin
+from .log_table import FileFacts, LogTable, NoTable, Pin, Retained
 from .table_files import write_bucketed_files
 
 
@@ -71,13 +74,36 @@ def _now_ms() -> int:
 
 
 LOG_DIR = "_delta_log"
-# Orphan sweep ignores files younger than this (VACUUM's retention
-# grace): an in-flight commit attempt writes its data files BEFORE the
-# log-link CAS, so without an age floor a concurrent vacuum would
-# delete them and the attempt, on winning, would publish add actions
-# referencing deleted files (round-9 review — the Iceberg sink's
-# round-8 fix, mirrored)
-ORPHAN_GRACE_DEFAULT_S = 300.0
+
+
+class _Replay:
+    """Table state as a replay of log actions: the schemaString, the
+    metaData configuration, {path: add action}, {appId: newest txn
+    action} and {path: newest remove deletionTimestamp}."""
+
+    def __init__(self) -> None:
+        self.schema: str | None = None
+        self.config: dict = {}
+        self.active: dict[str, dict] = {}
+        self.txns: dict[str, dict] = {}
+        self.removed_ms: dict[str, int] = {}
+
+    def read(self, path: str) -> None:
+        with open(path) as fh:
+            for line in fh:
+                a = json.loads(line)
+                if "metaData" in a:
+                    self.schema = a["metaData"]["schemaString"]
+                    self.config = a["metaData"].get("configuration", {})
+                elif "add" in a:
+                    self.active[a["add"]["path"]] = a["add"]
+                elif "remove" in a:
+                    self.active.pop(a["remove"]["path"], None)
+                    self.removed_ms[a["remove"]["path"]] = a["remove"].get(
+                        "deletionTimestamp", 0
+                    )  # legacy actions without the stamp: aged
+                elif "txn" in a:
+                    self.txns[a["txn"]["appId"]] = a["txn"]
 
 
 class DeltaLogSink(LogTable):
@@ -85,6 +111,7 @@ class DeltaLogSink(LogTable):
     transaction log. See module docstring for the protocol."""
 
     META_DIR = LOG_DIR
+    DATA_DIR = "files"
 
     # -- log plumbing ----------------------------------------------------
 
@@ -148,6 +175,29 @@ class DeltaLogSink(LogTable):
         cks = [c for c in cks if c <= v]
         return cks[-1] if cks else None
 
+    def _replay(self, seed: int, upto: int) -> Iterator[tuple[int, _Replay]]:
+        """Incremental replay: the newest checkpoint ≤ `seed`, then the
+        commits after it through `upto`, yielding (version, state)
+        after the checkpoint and after each commit. The state is ONE
+        mutable object, so each log file is read exactly once whatever
+        the caller snapshots at the version boundaries."""
+        st = _Replay()
+        start = 1
+        ck = self._newest_checkpoint_at_most(seed)
+        if ck is not None:
+            st.read(self._ckpt_path(ck))
+            start = ck + 1
+            yield ck, st
+        for i in range(start, upto + 1):
+            p = self._log_path(i)
+            if not os.path.exists(p):
+                raise ValueError(
+                    f"version {i} expired (vacuumed below the retention "
+                    f"horizon); no checkpoint covers it"
+                )
+            st.read(p)
+            yield i, st
+
     def _state(
         self, version: int | None = None
     ) -> tuple[str, dict, dict[str, dict], dict[str, int]]:
@@ -160,41 +210,10 @@ class DeltaLogSink(LogTable):
         v = latest if version is None else version
         if v > latest or v < 1:
             raise ValueError(f"version {v} out of range (latest {latest})")
-        schema, config, active, txns = None, {}, {}, {}
-        start = 1
-        ck = self._newest_checkpoint_at_most(v)
-        if ck is not None:
-            with open(self._ckpt_path(ck)) as fh:
-                for line in fh:
-                    a = json.loads(line)
-                    if "metaData" in a:
-                        schema = a["metaData"]["schemaString"]
-                        config = a["metaData"].get("configuration", {})
-                    elif "add" in a:
-                        active[a["add"]["path"]] = a["add"]
-                    elif "txn" in a:
-                        txns[a["txn"]["appId"]] = a["txn"]["version"]
-            start = ck + 1
-        for i in range(start, v + 1):
-            p = self._log_path(i)
-            if not os.path.exists(p):
-                raise ValueError(
-                    f"version {i} expired (vacuumed below the retention "
-                    f"horizon); no checkpoint covers it"
-                )
-            with open(p) as fh:
-                for line in fh:
-                    a = json.loads(line)
-                    if "metaData" in a:
-                        schema = a["metaData"]["schemaString"]
-                        config = a["metaData"].get("configuration", {})
-                    elif "add" in a:
-                        active[a["add"]["path"]] = a["add"]
-                    elif "remove" in a:
-                        active.pop(a["remove"]["path"], None)
-                    elif "txn" in a:
-                        txns[a["txn"]["appId"]] = a["txn"]["version"]
-        return schema, config, active, txns
+        for _, st in self._replay(v, v):
+            pass
+        txns = {app: t["version"] for app, t in st.txns.items()}
+        return st.schema, st.config, st.active, txns
 
     # -- commit-core adapter ---------------------------------------------
 
@@ -357,116 +376,46 @@ class DeltaLogSink(LogTable):
             ],
         )
 
-    def expire_versions(
-        self,
-        keep_last: int,
-        sweep_orphans: bool = False,
-        orphan_grace_s: float = ORPHAN_GRACE_DEFAULT_S,
-    ) -> list[int]:
-        """Retention: checkpoint the horizon version (so replay never
-        needs the expired commits), point _last_checkpoint at it, drop
-        the expired commit files, and vacuum data files referenced by
-        no retained version. Returns the versions expired this call.
-
-        ``orphan_grace_s`` is VACUUM's retention, applied on two axes:
-        (a) UNREFERENCED files (orphan sweep) are reclaimed only when
-        their mtime is older than it — a racing writer's pre-CAS
-        attempt files look exactly like crash debris until its commit
-        lands; (b) files referenced ONLY by expired versions are
-        reclaimed only when their remove action's deletionTimestamp is
-        older than it — a long-running reader that pinned a
-        recently-superseded version may still be scanning them
-        (round-9 review). Files spared by (b) become orphans for a
-        later sweep's (a). Pass 0 only when no reader or writer can be
-        concurrent (tests, single-writer drills)."""
+    def _truncate(self, keep_last: int) -> Retained:
+        """Retention's truncation: checkpoint the horizon version (so
+        replay never needs the expired commits), point _last_checkpoint
+        at it, then drop the superseded checkpoints and the expired
+        commit files. Dead files die at their remove action's
+        deletionTimestamp."""
         latest = self.latest_version()
         horizon = max(1, latest - keep_last + 1)
         on_disk = self._versions_on_disk()
         expired = [v for v in on_disk if v < horizon]
         if not expired:
-            return []
+            return Retained([], set(), {})
         # referenced-file accounting BEFORE anything is deleted: ONE
-        # incremental replay (each commit file read exactly once) seeds
-        # from the newest checkpoint covering the oldest surviving
-        # commit, applies commits in order, and snapshots the active
-        # set at every version boundary at or past the horizon
-        keep_files: set[str] = set()
-        all_refs: set[str] = set()
-        removed_ms: dict[str, int] = {}  # path -> newest deletionTimestamp
-        schema_at_horizon = None
-        config_at_horizon: dict = {}
-        active_at_horizon: dict[str, dict] = {}
-        txns_at_horizon: dict[str, dict] = {}
-        schema: str | None = None
-        config: dict = {}
-        active: dict[str, dict] = {}
-        txns: dict[str, dict] = {}  # appId -> newest txn action
-        start = 1
-        ck0 = self._newest_checkpoint_at_most(on_disk[0])
-        if ck0 is not None:
-            with open(self._ckpt_path(ck0)) as fh:
-                for line in fh:
-                    a = json.loads(line)
-                    if "metaData" in a:
-                        schema = a["metaData"]["schemaString"]
-                        config = a["metaData"].get("configuration", {})
-                    elif "add" in a:
-                        active[a["add"]["path"]] = a["add"]
-                    elif "txn" in a:
-                        txns[a["txn"]["appId"]] = a["txn"]
-            start = ck0 + 1
-            all_refs.update(active)
-            # ck0 < horizon always holds here: ck0 is the previous
-            # horizon, and a wider keep_last would have early-returned
-        for v in range(start, latest + 1):
-            with open(self._log_path(v)) as fh:
-                for line in fh:
-                    a = json.loads(line)
-                    if "metaData" in a:
-                        schema = a["metaData"]["schemaString"]
-                        config = a["metaData"].get("configuration", {})
-                    elif "add" in a:
-                        active[a["add"]["path"]] = a["add"]
-                        all_refs.add(a["add"]["path"])
-                    elif "remove" in a:
-                        active.pop(a["remove"]["path"], None)
-                        removed_ms[a["remove"]["path"]] = a["remove"].get(
-                            "deletionTimestamp", 0
-                        )  # legacy actions without the stamp: aged
-                    elif "txn" in a:
-                        txns[a["txn"]["appId"]] = a["txn"]
+        # incremental replay seeded from the newest checkpoint covering
+        # the oldest surviving commit, snapshotting the active set at
+        # every version boundary at or past the horizon. The seed
+        # checkpoint is always below the horizon: it is the previous
+        # horizon, and a wider keep_last would have returned above.
+        keep: set[str] = set()
+        for v, st in self._replay(on_disk[0], latest):
             if v == horizon:
-                schema_at_horizon = schema
-                config_at_horizon = dict(config)
-                active_at_horizon = dict(active)
-                txns_at_horizon = dict(txns)
+                ckpt = [
+                    # mergeKey must survive log truncation or
+                    # post-expiry reads fold on the wrong key
+                    {"metaData": {"schemaString": st.schema,
+                                  "configuration": dict(st.config)}},
+                    # an exactly-once writer's last epoch must survive
+                    # log truncation, or a replayed epoch re-commits
+                    *({"txn": t} for t in st.txns.values()),
+                    *({"add": a} for a in st.active.values()),
+                ]
             if v >= horizon:
-                keep_files.update(active)
+                keep.update(st.active)
         ck = self._ckpt_path(horizon)
         # attempt-scoped tmp names (same rule as every other staging
         # path): two concurrent expiries sharing a tmp would race the
         # final os.replace and the loser crashes on its consumed tmp
         ck_tmp = ck + f".tmp-{uuid.uuid4().hex[:8]}"
         with open(ck_tmp, "w") as fh:
-            fh.write(
-                json.dumps(
-                    {
-                        "metaData": {
-                            "schemaString": schema_at_horizon,
-                            # mergeKey must survive log truncation or
-                            # post-expiry reads fold on the wrong key
-                            "configuration": config_at_horizon,
-                        }
-                    }
-                )
-                + "\n"
-            )
-            # an exactly-once writer's last epoch must survive log
-            # truncation, or a replayed epoch re-commits after expiry
-            for t in txns_at_horizon.values():
-                fh.write(json.dumps({"txn": t}) + "\n")
-            for a in active_at_horizon.values():
-                fh.write(json.dumps({"add": a}) + "\n")
+            fh.writelines(json.dumps(a) + "\n" for a in ckpt)
             fh.flush()
             os.fsync(fh.fileno())  # an empty checkpoint after the
             # expired commits are gone replays to an EMPTY active set
@@ -488,61 +437,7 @@ class DeltaLogSink(LogTable):
                 os.remove(os.path.join(self._log_dir(), f))
         for v in expired:
             os.remove(self._log_path(v))
-        # VACUUM retention (Delta's deletedFileRetentionDuration): a
-        # dead file is reclaimable only once its remove action is older
-        # than the grace — mtime is useless here (the file was WRITTEN
-        # long ago; what must age is its TOMBSTONING). A spared file's
-        # deletionTimestamp dies with the expired commit this same call
-        # removes, so sparing also TOUCHES the file: the later orphan
-        # sweep's mtime grace then restarts from the sparing moment
-        # (>= the tombstoning) instead of the long-past write.
-        retention_cutoff_ms = (time.time() - orphan_grace_s) * 1000
-        for rel in sorted(all_refs - keep_files):
-            full = os.path.join(self.path, rel)
-            if removed_ms.get(rel, 0) > retention_cutoff_ms:
-                try:
-                    os.utime(full)
-                except FileNotFoundError:
-                    pass  # vanished: nothing to spare
-                # any other failure propagates: silently keeping the
-                # ancient write-mtime would arm the NEXT sweep to
-                # reclaim this file inside its tombstone grace
-                continue
-            if os.path.exists(full):
-                os.remove(full)
-        if sweep_orphans:
-            cutoff = time.time() - orphan_grace_s
-
-            def aged_out(full: str) -> bool:
-                try:
-                    return os.path.getmtime(full) <= cutoff
-                except OSError:
-                    return False  # vanished mid-sweep: nothing to do
-
-            data_root = os.path.join(self.path, "files")
-            for dirpath, _dirs, files in os.walk(data_root):
-                for fn in files:
-                    full = os.path.join(dirpath, fn)
-                    rel = os.path.relpath(full, self.path)
-                    if (
-                        fn.endswith(".parquet")
-                        and rel not in keep_files
-                        and aged_out(full)
-                    ):
-                        os.remove(full)
-            # attempt-scoped staging debris in _delta_log (crashed
-            # commit .tmp-<uuid>, checkpoint/_last_checkpoint
-            # *.tmp-<uuid>) is never consumed by a later attempt — each
-            # retry stages under a fresh name — so without this sweep it
-            # accumulates forever (the Iceberg sink reclaims its hint
-            # tmps the same way). Real log objects never contain
-            # ".tmp-"; the age floor spares in-flight attempts about to
-            # be linked/replaced.
-            for fn in os.listdir(self._log_dir()):
-                full = os.path.join(self._log_dir(), fn)
-                if ".tmp-" in fn and aged_out(full):
-                    os.remove(full)
-        return expired
+        return Retained(expired, keep, st.removed_ms)
 
 
 # ---------------------------------------------------------------------------

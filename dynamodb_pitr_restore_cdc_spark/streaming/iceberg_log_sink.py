@@ -41,10 +41,12 @@ holds the metadata-tree mechanics:
   this engine supports out-of-order delivery (a stale entry below an
   already-merged row must LOSE, which file-level sequencing cannot
   express).
-- **Snapshot lifecycle**: ``expireSnapshots`` (here
-  ``expire_versions``) publishes a new metadata file with the expired
-  snapshots dropped from the list, then garbage-collects manifest
-  lists, manifests and data files referenced by no retained snapshot.
+- **Snapshot lifecycle**: ``expireSnapshots`` (here the truncation
+  hook `_truncate`, under the shared `LogTable.expire_versions`)
+  publishes a new metadata file with the expired snapshots dropped
+  from the list; the shared core then garbage-collects manifest
+  lists, manifests and data files referenced by no retained snapshot,
+  dead ones by the superseding snapshot's timestamp.
   ``rewrite_manifests`` repacks manifests, and ``optimize_plan``
   prices that repack in a table-scoped REPACK row.
 
@@ -76,17 +78,10 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .log_table import FileFacts, LogTable, NoTable, Pin
+from .log_table import FileFacts, LogTable, NoTable, Pin, Retained
 from .table_files import write_bucketed_files
 
 META_DIR = "metadata"
-# Orphan sweep ignores files younger than this (Iceberg's
-# remove-orphan-files olderThan, default 3 days there): an in-flight
-# commit attempt writes its data/manifest files BEFORE the metadata
-# CAS, so without an age floor a concurrent expiry would delete them
-# and the attempt, on winning, would publish metadata referencing
-# deleted files (round-8 review finding).
-ORPHAN_GRACE_DEFAULT_S = 300.0
 # expired metadata files retained for racing writers (Iceberg's
 # write.metadata.previous-versions-max): a writer that pinned its
 # target number just before an expiry commit must still be able to
@@ -374,6 +369,12 @@ class IcebergLogSink(LogTable):
     metadata tree. See module docstring for the protocol."""
 
     META_DIR = META_DIR
+    DATA_DIR = "data"
+    # manifest/manifest-list debris from crashed or race-losing commit
+    # attempts (written before the metadata CAS, referenced by no
+    # snapshot) is the metadata twin of orphaned data files: the sweep
+    # reclaims it the same way (round-7 review finding)
+    META_OBJECTS = ("manifest-", "snap-")
 
     # -- metadata-tree plumbing -------------------------------------------
 
@@ -397,14 +398,7 @@ class IcebergLogSink(LogTable):
             with open(self._hint_path()) as fh:
                 start = int(fh.read().strip())
         except (OSError, ValueError):
-            nums = [
-                int(m.group(1))
-                for f in os.listdir(self._meta_dir())
-                if (m := re.fullmatch(r"v(\d+)\.metadata\.json", f))
-            ]
-            if not nums:
-                raise NoTable(f"no table metadata in {self.path}") from None
-            start = max(nums)
+            pass  # missing or torn hint: use the listing
         if start < 1 or not os.path.exists(self._meta_path(start)):
             # a PARSABLE hint can still be stale-and-deleted (expiry GC
             # raced the read): the listing is the recovery path there
@@ -1024,39 +1018,23 @@ class IcebergLogSink(LogTable):
             f"at {self.path}"
         )
 
-    def expire_versions(
-        self,
-        keep_last: int,
-        sweep_orphans: bool = False,
-        orphan_grace_s: float = ORPHAN_GRACE_DEFAULT_S,
-        older_than_ms: int | None = None,
-    ) -> list[int]:
-        """expireSnapshots analog: publish a new metadata file with the
-        expired snapshots dropped from the list (same put-if-absent
-        commit as any writer — concurrent MERGEs race it safely), then
-        garbage-collect manifest lists, manifests and data files
-        referenced by no retained snapshot. Returns the sequence
-        numbers expired this call. ``older_than_ms`` adds the spec's
-        time axis (expireSnapshots' olderThan): snapshots newer than it
-        are retained even beyond ``keep_last`` — the retention knob
-        that bounds how far back a pinned reader can be without racing
-        GC.
+    def _truncate(
+        self, keep_last: int, older_than_ms: int | None = None
+    ) -> Retained:
+        """expireSnapshots: publish a new metadata file with the expired
+        snapshots dropped from the list (same put-if-absent commit as
+        any writer — concurrent MERGEs race it safely, and a lost race
+        recomputes the horizon). ``older_than_ms`` adds the spec's time
+        axis (expireSnapshots' olderThan): snapshots newer than it are
+        retained even beyond ``keep_last`` — the retention knob that
+        bounds how far back a pinned reader can be without racing GC.
+        A dead object dies at the timestamp of the first snapshot that
+        no longer references it."""
 
-        Orphan sweep only reclaims UNREFERENCED files older than
-        ``orphan_grace_s`` (mtime): a racing writer's pre-CAS attempt
-        files look exactly like crash debris until its commit lands, so
-        age is the only safe discriminator. Files referenced by an
-        EXPIRED snapshot were committed and need no grace. Pass 0 only
-        when no writer can be concurrent (tests, single-writer jobs)."""
-        for _ in range(5):
-            meta_num = self._latest_meta_num() + 1
-            try:
-                meta = self._load_meta(meta_num - 1)
-            except FileNotFoundError:
-                continue  # another expiry GC'd our base: re-pin and retry
+        def attempt(pin: Pin) -> Retained:
+            meta_num, meta, _snap, _list = pin.base
             snaps = meta["snapshots"]
-            latest = snaps[-1]["sequence-number"]
-            horizon = max(1, latest - keep_last + 1)
+            horizon = max(1, snaps[-1]["sequence-number"] - keep_last + 1)
             # expireSnapshots(olderThan, retainLast): both constraints
             # RETAIN — a snapshot expires only when it is outside the
             # trailing keep_last window AND (when olderThan is given)
@@ -1079,86 +1057,44 @@ class IcebergLogSink(LogTable):
                     break
                 expired.append(s)
             if not expired:
-                return []
+                return Retained([], set(), {})
             retained = snaps[len(expired):]
-            new_meta = dict(meta)
-            new_meta["snapshots"] = retained
-            try:
-                self._commit_meta(meta_num, new_meta)
-            except FileExistsError:
-                continue  # a writer landed: recompute the horizon
-            # GC against the RETAINED tree only, after the commit is
-            # visible (Iceberg's remove-then-delete order): collect
-            # every referenced metadata object and data file. Manifests
-            # are REUSED across snapshots — memoize so each is read
-            # exactly once per expiry call, across the keep loop AND
-            # the death-time walk below.
+            self._commit_meta(meta_num, {**meta, "snapshots": retained})
+            # GC accounting against the RETAINED tree only, after the
+            # commit is visible (Iceberg's remove-then-delete order).
+            # Manifests are REUSED across snapshots — memoize so each
+            # is read exactly once per expiry call, across the keep
+            # loop AND the death-time walk below.
             manifest_memo: dict[str, list[str]] = {}
-
-            def manifest_files(mp: str) -> list[str]:
-                if mp not in manifest_memo:
-                    manifest_memo[mp] = [
-                        e["data_file"]["file_path"]
-                        for e in self._read_ndjson(mp)
-                    ]
-                return manifest_memo[mp]
-
-            keep_manifests: set[str] = set()
-            keep_files: set[str] = set()
-            for s in retained:
-                keep_manifests.add(s["manifest-list"])
-                for m in self._manifest_list(s):
-                    keep_manifests.add(m["manifest_path"])
-                    keep_files.update(manifest_files(m["manifest_path"]))
-            # GC retention: a file or manifest referenced by a RECENT
-            # snapshot may still be under a pinned reader's scan —
-            # reclaim only objects whose DEATH (the first snapshot that
-            # no longer references them) aged past the grace. An
-            # object's death time is the SUPERSEDING snapshot's
-            # timestamp-ms, NOT the dead snapshot's own creation time
-            # (an idle table's old snapshot can be superseded seconds
-            # ago) and not the file's mtime (it was WRITTEN long ago;
-            # what must age is its tombstoning). Spared objects become
-            # orphans for a later sweep — touched below so the sweep's
-            # mtime grace restarts from the sparing, not the write.
-            # (round-9 review, two passes)
-            retention_cutoff_ms = (time.time() - orphan_grace_s) * 1000
 
             def refs(s: dict) -> set[str]:
                 out = {s["manifest-list"]}
-                for m in self._read_ndjson(s["manifest-list"]):
-                    out.add(m["manifest_path"])
-                    out.update(manifest_files(m["manifest_path"]))
+                for m in self._manifest_list(s):
+                    mp = m["manifest_path"]
+                    if mp not in manifest_memo:
+                        manifest_memo[mp] = [
+                            e["data_file"]["file_path"]
+                            for e in self._read_ndjson(mp)
+                        ]
+                    out.add(mp)
+                    out.update(manifest_memo[mp])
                 return out
 
+            keep: set[str] = set()
+            for s in retained:
+                keep |= refs(s)
+            # each dead object's last reference is in some expired
+            # snapshot; its death is the NEXT snapshot in the chain.
+            # Walk backwards so each snapshot's refs are computed once.
             death_ms: dict[str, int] = {}
-            chain = expired + retained[:1]  # each dead object's last
-            # reference is in some expired snapshot; its death is the
-            # NEXT snapshot in the chain
-            next_refs = refs(chain[-1]) if chain else set()
-            # walk backwards so each snapshot's refs are computed once
+            chain = expired + retained[:1]
+            next_refs = refs(chain[-1])
             for i in range(len(chain) - 2, -1, -1):
                 cur_refs = refs(chain[i])
-                nxt = chain[i + 1]
-                ts = nxt.get("timestamp-ms", 0)  # legacy: aged
+                ts = chain[i + 1].get("timestamp-ms", 0)  # legacy: aged
                 for rel in cur_refs - next_refs:
                     death_ms[rel] = ts
                 next_refs = cur_refs
-            for rel in sorted(set(death_ms) - keep_manifests - keep_files):
-                full = os.path.join(self.path, rel)
-                if death_ms[rel] > retention_cutoff_ms:
-                    try:
-                        os.utime(full)  # restart the orphan-sweep clock:
-                        # the stamp dies with this metadata, so mtime
-                        # must carry the tombstone age forward
-                    except FileNotFoundError:
-                        pass  # vanished: nothing to spare
-                    # any other failure propagates: silently keeping the
-                    # ancient write-mtime would arm the NEXT sweep to
-                    # reclaim this file inside its tombstone grace
-                    continue
-                if os.path.exists(full):
-                    os.remove(full)
             # old metadata files: keep the trailing PREVIOUS_METADATA_KEPT
             # (Iceberg's write.metadata.previous-versions-max) so a writer
             # that pinned its base metadata just before this expiry can
@@ -1169,53 +1105,9 @@ class IcebergLogSink(LogTable):
                 p = self._meta_path(n)
                 if os.path.exists(p):
                     os.remove(p)
-            if sweep_orphans:
-                cutoff = time.time() - orphan_grace_s
+            return Retained([s["sequence-number"] for s in expired], keep, death_ms)
 
-                def aged_out(full: str) -> bool:
-                    try:
-                        return os.path.getmtime(full) <= cutoff
-                    except OSError:
-                        return False  # vanished mid-sweep: nothing to do
-
-                data_root = os.path.join(self.path, "data")
-                for dirpath, _dirs, files in os.walk(data_root):
-                    for fn in files:
-                        full = os.path.join(dirpath, fn)
-                        rel = os.path.relpath(full, self.path)
-                        if (
-                            fn.endswith(".parquet")
-                            and rel not in keep_files
-                            and aged_out(full)
-                        ):
-                            os.remove(full)
-                # manifest/manifest-list debris from crashed or
-                # race-losing commit attempts (written before the
-                # metadata CAS, referenced by no snapshot) is the
-                # metadata twin of orphaned data files — reclaim it the
-                # same way (round-7 review finding), behind the same
-                # age floor (an in-flight attempt's manifests are
-                # indistinguishable from debris until its CAS lands)
-                for fn in os.listdir(self._meta_dir()):
-                    rel = os.path.join(META_DIR, fn)
-                    full = os.path.join(self.path, rel)
-                    if (
-                        fn.startswith(("manifest-", "snap-"))
-                        and rel not in keep_manifests
-                        and aged_out(full)
-                    ) or (
-                        # crashed hint moves leave attempt-scoped tmp
-                        # debris; same age floor (an in-flight commit's
-                        # hint tmp is about to be consumed)
-                        fn.startswith("version-hint.text.tmp")
-                        and aged_out(full)
-                    ):
-                        os.remove(full)
-            return [s["sequence-number"] for s in expired]
-        raise RuntimeError(
-            f"expireSnapshots lost the commit race 5 times at {self.path}"
-        )
-
+        return self._optimistic("expireSnapshots", attempt, buckets=set())
 
 
 # ---------------------------------------------------------------------------

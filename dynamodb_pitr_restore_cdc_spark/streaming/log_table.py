@@ -14,6 +14,8 @@ DOES with that state is format-independent and lives here, once:
   (settled-tombstone OPTIMIZE), `append` (blind merge-on-read ingest)
   and `compact_mor` (fold pending files into base files);
 - the read paths: `snapshot`, `visible`, `changes_between`;
+- retention (`expire_versions`): the two-axis grace, spare-or-reclaim
+  of dead objects and the orphan sweep, written once for both formats;
 - the partition transform (`_transform`, `_bucket`), the pending-file
   fold (`_fold`) and the per-bucket counters of `optimize_plan`.
 
@@ -33,11 +35,17 @@ A format subclass supplies only its mechanics:
   itself, and the pin reports the last recorded epoch per app;
 - `_table_decisions(pin)`: table-scoped optimize_plan rows (none by
   default);
-- `init`, `latest_version` and `expire_versions`.
+- `_truncate(keep_last, ...)` → `Retained`: retention's durable
+  truncation (Delta: checkpoint, then drop expired commits; Iceberg: a
+  metadata commit without the expired snapshots), reporting every path
+  a retained version references and each dead object's death time;
+- `DATA_DIR` and `META_OBJECTS`: where its data files live and which
+  metadata objects only a retained version keeps alive;
+- `init` and `latest_version`.
 
 Data files are immutable and every attempt writes under a fresh
 attempt-scoped directory, so the put-if-absent publish is the one
-arbiter: a race-losing attempt's files are orphans that the format's
+arbiter: a race-losing attempt's files are orphans that
 ``expire_versions(sweep_orphans=True)`` reclaims.
 """
 
@@ -45,6 +53,7 @@ from __future__ import annotations
 
 import os
 import re
+import time
 from dataclasses import dataclass
 from typing import Any, Callable, NamedTuple
 
@@ -55,13 +64,22 @@ from ..operators.cdc import cdc_merge_tombstone, visible
 from .table_files import (
     align_to_payloads,
     bucket_counters,
+    diff_states,
     empty_frame,
     evolve_schema_json,
     optimize_decisions,
     payload_cols_of,
     read_with_schema,
 )
-from .versioned_sink import diff_states
+
+
+# Orphan sweep ignores files younger than this (VACUUM's retention,
+# Iceberg's remove-orphan-files olderThan, 3 days there): an in-flight
+# commit attempt writes its data and manifest files BEFORE the
+# publishing CAS, so without an age floor a concurrent expiry would
+# delete them and the attempt, on winning, would publish references to
+# deleted files (round-8 and round-9 reviews)
+ORPHAN_GRACE_DEFAULT_S = 300.0
 
 
 class NoTable(ValueError):
@@ -96,6 +114,14 @@ class Pin:
     txns: dict[str, int]  # app id -> last epoch recorded by apply_batch
 
 
+class Retained(NamedTuple):
+    """What a format's `_truncate` leaves for the retention core."""
+
+    expired: list[int]  # versions expired by this call, oldest first
+    keep: set[str]  # every path a retained version references
+    dead: dict[str, int]  # dead object -> death time, ms (0 = aged)
+
+
 def _the_pin(pin: Pin) -> Pin:
     return pin
 
@@ -105,6 +131,10 @@ class LogTable:
     table; see the module docstring for the split with the formats."""
 
     META_DIR: str  # the format's metadata directory under the table root
+    DATA_DIR: str  # the format's data directory under the table root
+    # prefixes of META_DIR objects that live only while a retained
+    # version references them (Iceberg's manifests and manifest lists)
+    META_OBJECTS: tuple[str, ...] = ()
 
     def __init__(
         self,
@@ -157,6 +187,9 @@ class LogTable:
 
     def _table_decisions(self, pin: Pin) -> list[dict]:
         return []
+
+    def _truncate(self, keep_last: int) -> Retained:
+        raise NotImplementedError
 
     # -- the commit protocol -----------------------------------------------
 
@@ -576,6 +609,85 @@ class LogTable:
             payload_cols=payload_cols_of(schema, key),
             key=key,
         )
+
+    # -- retention -----------------------------------------------------------
+
+    def expire_versions(
+        self,
+        keep_last: int,
+        sweep_orphans: bool = False,
+        orphan_grace_s: float = ORPHAN_GRACE_DEFAULT_S,
+        **horizon: Any,
+    ) -> list[int]:
+        """VACUUM / expireSnapshots: the format truncates its history
+        to the last ``keep_last`` versions (``horizon`` carries a
+        format's extra retention axis, Iceberg's ``older_than_ms``) and
+        makes that durable; then objects referenced by no retained
+        version are reclaimed. Returns the versions expired this call.
+
+        ``orphan_grace_s`` is the retention grace, on two axes:
+        (a) a DEAD object (referenced only by expired versions) is
+        reclaimed only once its death — Delta's remove-action
+        deletionTimestamp, the superseding Iceberg snapshot's
+        timestamp-ms — is older than the grace: a long-running reader
+        that pinned a recently superseded version may still be scanning
+        it. mtime is useless there (the file was WRITTEN long ago; what
+        must age is its tombstoning), and so is the dead version's own
+        creation time (an idle table's old version can be superseded
+        seconds ago). (b) UNREFERENCED files (the orphan sweep) are
+        reclaimed only once their mtime is older than the grace. Pass 0
+        only when no reader or writer can be concurrent (tests,
+        single-writer drills). (round-9 review, two passes)"""
+        r = self._truncate(keep_last, **horizon)
+        if not r.expired:
+            return []
+        cutoff = time.time() - orphan_grace_s
+        for rel in sorted(set(r.dead) - r.keep):
+            full = os.path.join(self.path, rel)
+            if r.dead[rel] > cutoff * 1000:
+                # a spared object's death stamp dies with the history
+                # truncated above, so sparing TOUCHES it: a later
+                # sweep's mtime grace then restarts from the sparing
+                # (>= the death) instead of the long-past write
+                try:
+                    os.utime(full)
+                except FileNotFoundError:
+                    pass  # vanished: nothing to spare
+                # any other failure propagates: silently keeping the
+                # ancient write-mtime would arm the NEXT sweep to
+                # reclaim this object inside its tombstone grace
+                continue
+            if os.path.exists(full):
+                os.remove(full)
+        if not sweep_orphans:
+            return r.expired
+
+        def aged_out(full: str) -> bool:
+            try:
+                return os.path.getmtime(full) <= cutoff
+            except OSError:
+                return False  # vanished mid-sweep: nothing to do
+
+        # the sweep: unreferenced data files (crashed or race-losing
+        # attempts), their metadata twins (META_OBJECTS no retained
+        # version references) and attempt-scoped staging debris (any
+        # ``.tmp-`` name: a crashed commit, checkpoint or pointer move
+        # — each retry stages under a fresh name, so no later attempt
+        # consumes it). Real table objects never contain ``.tmp-``.
+        for dirpath, _dirs, files in os.walk(os.path.join(self.path, self.DATA_DIR)):
+            for fn in files:
+                full = os.path.join(dirpath, fn)
+                rel = os.path.relpath(full, self.path)
+                if fn.endswith(".parquet") and rel not in r.keep and aged_out(full):
+                    os.remove(full)
+        for fn in os.listdir(os.path.join(self.path, self.META_DIR)):
+            rel = os.path.join(self.META_DIR, fn)
+            full = os.path.join(self.path, rel)
+            if (
+                ".tmp-" in fn or (fn.startswith(self.META_OBJECTS) and rel not in r.keep)
+            ) and aged_out(full):
+                os.remove(full)
+        return r.expired
 
 
 # ---------------------------------------------------------------------------

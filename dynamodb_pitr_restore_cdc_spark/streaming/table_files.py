@@ -6,7 +6,9 @@ bucket-partitioned parquet under an attempt-scoped directory, with
 per-file column bounds peeked from parquet footers — and differ only
 in the METADATA shape those facts are recorded in (add actions vs
 manifest entries). This module holds the common physics; each sink
-maps the neutral per-file records into its own protocol."""
+maps the neutral per-file records into its own protocol. It also holds
+the changefeed classification (`diff_states`) every versioned format
+shares."""
 
 from __future__ import annotations
 
@@ -261,3 +263,43 @@ def align_to_payloads(df: DataFrame, schema_json: str, key: str) -> DataFrame:
         if f.name not in have and f.name != key and f.name not in PROTOCOL_COLS
     ]
     return df.select("*", *missing) if missing else df
+
+
+def diff_states(
+    a_vis: DataFrame,
+    b_vis: DataFrame,
+    payload_cols: tuple[str, ...] = ("payload_value",),
+    key: str = "key",
+) -> DataFrame:
+    """Classified per-key diff of two VISIBLE states: the engine-side
+    half of the changefeed, shared by every versioned sink format
+    (VersionedCdcSink, the log formats' changes_between) so the
+    classification semantics cannot silently diverge. The pre-image
+    columns are what an incremental consumer needs to retract.
+    `payload_cols` comes from the TO-side schema on evolved tables
+    (both inputs aligned by the caller) so the feed carries every
+    payload column — a consumer mirroring the table through the feed
+    must converge to visible(), new columns included (round-10
+    review)."""
+    j = a_vis.alias("a").join(b_vis.alias("b"), on=key, how="full_outer")
+    return (
+        j.select(
+            F.col(key),
+            F.when(F.col("a.last_seq").isNull(), F.lit("INSERT"))
+            .when(F.col("b.last_seq").isNull(), F.lit("DELETE"))
+            .otherwise(F.lit("UPDATE"))
+            .alias("change_type"),
+            F.coalesce(F.col("b.last_seq"), F.col("a.last_seq")).alias("last_seq"),
+            # NULL for DELETE
+            *[F.col(f"b.{c}").alias(c) for c in payload_cols],
+            # pre-image: what the row was at v_from (NULL for INSERT) —
+            # exactly what an incremental consumer needs to retract
+            *[F.col(f"a.{c}").alias(f"{c}_old") for c in payload_cols],
+        )
+        # an unchanged key living in a changed bucket is not a change
+        .where(
+            F.col("a.last_seq").isNull()
+            | F.col("b.last_seq").isNull()
+            | (F.col("a.last_seq") != F.col("b.last_seq"))
+        )
+    )

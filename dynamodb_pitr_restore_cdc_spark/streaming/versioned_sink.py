@@ -73,7 +73,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.cdc import cdc_merge_tombstone, visible
-from .table_files import repartition_by_bucket
+from .table_files import diff_states, repartition_by_bucket
 
 N_BUCKETS_DEFAULT = 32
 SHARD_SIZE_DEFAULT = 1024  # buckets per manifest shard file
@@ -1135,46 +1135,6 @@ def _changes_between(sink: VersionedCdcSink, v_from: int, v_to: int) -> DataFram
     a = visible(sink._read_buckets(m_from, only=changed))
     b = visible(sink._read_buckets(m_to, only=changed))
     return diff_states(a, b)
-
-
-def diff_states(
-    a_vis: DataFrame,
-    b_vis: DataFrame,
-    payload_cols: tuple[str, ...] = ("payload_value",),
-    key: str = "key",
-) -> DataFrame:
-    """Classified per-key diff of two VISIBLE states: the engine-side
-    half of the changefeed, shared by every versioned sink format
-    (VersionedCdcSink above, DeltaLogSink's CDF read) so the
-    classification semantics cannot silently diverge. The pre-image
-    columns are what an incremental consumer needs to retract.
-    `payload_cols` comes from the TO-side schema on evolved tables
-    (both inputs aligned by the caller) so the feed carries every
-    payload column — a consumer mirroring the table through the feed
-    must converge to visible(), new columns included (round-10
-    review)."""
-    j = a_vis.alias("a").join(b_vis.alias("b"), on=key, how="full_outer")
-    return (
-        j.select(
-            F.col(key),
-            F.when(F.col("a.last_seq").isNull(), F.lit("INSERT"))
-            .when(F.col("b.last_seq").isNull(), F.lit("DELETE"))
-            .otherwise(F.lit("UPDATE"))
-            .alias("change_type"),
-            F.coalesce(F.col("b.last_seq"), F.col("a.last_seq")).alias("last_seq"),
-            # NULL for DELETE
-            *[F.col(f"b.{c}").alias(c) for c in payload_cols],
-            # pre-image: what the row was at v_from (NULL for INSERT) —
-            # exactly what an incremental consumer needs to retract
-            *[F.col(f"a.{c}").alias(f"{c}_old") for c in payload_cols],
-        )
-        # an unchanged key living in a changed bucket is not a change
-        .where(
-            F.col("a.last_seq").isNull()
-            | F.col("b.last_seq").isNull()
-            | (F.col("a.last_seq") != F.col("b.last_seq"))
-        )
-    )
 
 
 # Changefeed CTEs continuing with_changelog()'s open WITH list (must

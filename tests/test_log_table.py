@@ -1,12 +1,16 @@
 """The shared commit core (streaming/log_table.py) under both formats:
-its error contract, its empty-batch rules and its default width.
+its error contract, its empty-batch rules, its default width and its
+one retention path (expire_versions over each format's _truncate).
 
 The first two groups need no Spark: every path they drive fails at
 its pin, before any data is touched, so the sinks run with
 ``spark=None`` on hand-written metadata."""
 
+import ast
 import json
 import os
+import pathlib
+import time
 
 import pandas as pd
 import pytest
@@ -15,6 +19,7 @@ from dynamodb_pitr_restore_cdc_spark.streaming.delta_log_sink import DeltaLogSin
 from dynamodb_pitr_restore_cdc_spark.streaming.iceberg_log_sink import (
     IcebergLogSink,
 )
+from dynamodb_pitr_restore_cdc_spark.streaming import log_table
 from dynamodb_pitr_restore_cdc_spark.streaming.util import pinned_shuffle_width
 
 FORMATS = {"delta": DeltaLogSink, "iceberg": IcebergLogSink}
@@ -242,3 +247,109 @@ def test_explicit_width_ignores_the_session_width(spark, tmp_path, fmt):
         sink.init(_keys(spark, 64))
     assert sink._pin().transform == "bucket[6]"
     assert _live_buckets(sink) == list(range(6))
+
+
+def test_delta_rejects_the_iceberg_time_axis(tmp_path):
+    # older_than_ms is Iceberg's expireSnapshots(olderThan): Delta's
+    # truncation has no time axis and must refuse it, not ignore it
+    sink = DeltaLogSink(None, str(tmp_path / "t"), n_buckets=4)
+    with pytest.raises(TypeError, match="older_than_ms"):
+        sink.expire_versions(keep_last=1, older_than_ms=0)
+
+
+def _table(spark, tmp_path, fmt):
+    sink = FORMATS[fmt](spark, str(tmp_path / "t"), n_buckets=4)
+    sink.init(_keys(spark, 8))
+    return sink
+
+
+@pytest.mark.parametrize("fmt", sorted(FORMATS))
+def test_orphan_sweep_reclaims_aged_staging_tmps(spark, tmp_path, fmt):
+    # a process killed between a staged write and its link/rename
+    # leaves an attempt-scoped .tmp- file that no later attempt
+    # consumes: the sweep must reclaim it once aged, and spare a fresh
+    # one (an in-flight commit is about to consume it)
+    sink = _table(spark, tmp_path, fmt)
+    meta = os.path.join(sink.path, sink.META_DIR)
+    aged = os.path.join(meta, ".tmp-deadbeef0001")
+    fresh = os.path.join(meta, ".tmp-fresh0001")
+    for p in (aged, fresh):
+        with open(p, "w") as fh:
+            fh.write("{}")
+    ancient = time.time() - 3600
+    os.utime(aged, (ancient, ancient))
+    sink.apply_batch(_batch(spark, [(1, 10, "MODIFY", 1.5)]))
+    sink.apply_batch(_batch(spark, [(2, 11, "MODIFY", 2.5)]))
+    sink.expire_versions(keep_last=1, sweep_orphans=True)
+    assert not os.path.exists(aged), "aged staging debris survived"
+    assert os.path.exists(fresh), "swept an in-flight attempt's tmp"
+    rows = {r.key: r.payload_value for r in sink.visible().collect()}
+    assert rows[1] == 1.5 and rows[2] == 2.5
+
+
+@pytest.mark.parametrize("fmt", sorted(FORMATS))
+def test_spared_dead_file_gets_its_sweep_clock_restarted(spark, tmp_path, fmt):
+    # a spared file's death stamp dies with the truncated history, so
+    # sparing must TOUCH the file: otherwise the same call's
+    # mtime-gated sweep reclaims it inside its tombstone grace.
+    # Ancient write-mtime + fresh death = the hazard shape.
+    sink = _table(spark, tmp_path, fmt)
+    before = {f.path for f in sink._pin(version=1).files}
+    sink.apply_batch(_batch(spark, [(3, 10, "MODIFY", 3.5)]))
+    replaced = sorted(before - {f.path for f in sink._pin().files})
+    assert replaced
+    ancient = time.time() - 10_000
+    for p in replaced:
+        os.utime(os.path.join(sink.path, p), (ancient, ancient))
+    sink.expire_versions(keep_last=1, sweep_orphans=True)  # default grace
+    for p in replaced:
+        full = os.path.join(sink.path, p)
+        assert os.path.exists(full), "swept inside the tombstone grace"
+        assert os.path.getmtime(full) > ancient + 1, "sweep clock not restarted"
+
+
+def _retention_offences(path: pathlib.Path) -> list[str]:
+    """What would make a format module a second retention path."""
+    tree = ast.parse(path.read_text())
+    found = []
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id == "os"
+            and node.func.attr in ("walk", "utime")
+        ):
+            found.append(f"{node.lineno}: os.{node.func.attr}")
+        elif (
+            isinstance(node, ast.Name)
+            and node.id == "ORPHAN_GRACE_DEFAULT_S"
+            and isinstance(node.ctx, ast.Store)
+        ):
+            found.append(f"{node.lineno}: defines ORPHAN_GRACE_DEFAULT_S")
+    classes = [
+        n for n in tree.body
+        if isinstance(n, ast.ClassDef)
+        and any(isinstance(b, ast.Name) and b.id == "LogTable" for b in n.bases)
+    ]
+    if not classes:
+        found.append("no LogTable format class")
+    for cls in classes:
+        methods = {n.name for n in cls.body if isinstance(n, ast.FunctionDef)}
+        if "_truncate" not in methods:
+            found.append(f"{cls.name} supplies no _truncate")
+        if "expire_versions" in methods:
+            found.append(f"{cls.lineno}: {cls.name} defines expire_versions")
+    return found
+
+
+def test_retention_is_written_once_in_the_core():
+    # the grace, spare-and-utime and orphan sweep live only in
+    # LogTable.expire_versions; a format supplies only its truncation
+    sinks = pathlib.Path(log_table.__file__).parent
+    offenders = [
+        f"{name}:{o}"
+        for name in ("delta_log_sink.py", "iceberg_log_sink.py")
+        for o in _retention_offences(sinks / name)
+    ]
+    assert not offenders, "second retention path: " + ", ".join(offenders)

@@ -191,8 +191,10 @@ class DeltaLogSink(LogTable):
         for i in range(start, upto + 1):
             p = self._log_path(i)
             if not os.path.exists(p):
+                # below the seed, name the version the caller asked to
+                # rebuild, not the first missing commit under it
                 raise ValueError(
-                    f"version {i} expired (vacuumed below the retention "
+                    f"version {max(i, seed)} expired (vacuumed below the retention "
                     f"horizon); no checkpoint covers it"
                 )
             st.read(p)

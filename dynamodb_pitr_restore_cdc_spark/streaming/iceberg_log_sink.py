@@ -526,9 +526,7 @@ class IcebergLogSink(LogTable):
         self, snap: dict, buckets: set[int] | None = None
     ) -> list[dict]:
         """Live data-file entries of one snapshot, two-level pruned
-        (see _prune); an empty bucket set reads nothing."""
-        if buckets is not None and not buckets:
-            return []  # empty batch / no changed buckets: nothing to read
+        (see _prune)."""
         return self._prune(self._manifest_list(snap), buckets)
 
     def _prune(
@@ -537,7 +535,11 @@ class IcebergLogSink(LogTable):
         """Entries of a manifest list, two-level pruned: manifest-list
         partition summaries (bucket bounds) first — a manifest outside
         the bucket range is never opened — then per-entry partition
-        values. Bounds math on driver-side ints, zero data reads."""
+        values. Bounds math on driver-side ints, zero data reads. An
+        empty bucket set (empty batch, no changed buckets) opens no
+        manifest."""
+        if buckets is not None and not buckets:
+            return []
         out: list[dict] = []
         for m in manifest_list:
             if buckets is not None and (
@@ -587,16 +589,15 @@ class IcebergLogSink(LogTable):
         """The next metadata number, then that base metadata file and
         its snapshot's manifest tree (pin BEFORE read: a commit
         landing after the pin claims our number and forces EEXIST).
-        The manifest list is read once per pin: entries are pruned
-        from it and the REPACK pricing reads its summaries. `base` is
-        (metadata number to claim, base metadata, snapshot, list)."""
+        The manifest list is read once per pin, whatever the bucket
+        set: entries are pruned from it, the REPACK pricing and
+        rewrite_manifests read its summaries, and a list that vanished
+        under an expiry fails HERE, where the core retries it. `base`
+        is (metadata number to claim, base metadata, snapshot, list)."""
         meta_num = self._latest_meta_num() + 1
         meta = self._load_meta(meta_num - 1)
         snap = self._snapshot_record(meta, version)
-        manifest_list = (
-            [] if buckets is not None and not buckets
-            else self._manifest_list(snap)
-        )
+        manifest_list = self._manifest_list(snap)
         return Pin(
             version=snap["sequence-number"] + 1,
             # the schema in effect AT the snapshot: time travel below an
@@ -955,20 +956,16 @@ class IcebergLogSink(LogTable):
 
         Returns the number of manifests after the rewrite (0 = empty
         table, nothing committed). Same pin-before-read loser-retry as
-        every other commit; a no-op (aged subset already packed)
-        publishes nothing.
+        every other commit (`_optimistic`, pinning the manifest list
+        without opening a manifest); a no-op (aged subset already
+        packed) publishes nothing.
         """
         if target_entries is not None and target_entries < 1:
             raise ValueError(f"target_entries must be >= 1, got {target_entries}")
-        for _ in range(max_attempts):
-            meta_num = self._latest_meta_num() + 1
-            try:
-                meta = self._load_meta(meta_num - 1)
-                prev = self._snapshot_record(meta, None)
-                old_list = self._manifest_list(prev)
-                n_live = _entry_count(old_list)
-            except FileNotFoundError:
-                continue  # expiry GC'd our base metadata: re-pin and retry
+
+        def attempt(pin: Pin) -> int:
+            meta_num, meta, prev, old_list = pin.base
+            n_live = _entry_count(old_list)
             if not n_live:
                 return 0
             target = (
@@ -1008,14 +1005,11 @@ class IcebergLogSink(LogTable):
             # hysteresis pricing uses to count commits since the last
             # repack (_repack_history)
             snap_rec["summary"]["manifests-replaced"] = str(len(cold))
-            try:
-                self._commit_snapshot(meta_num, meta, snap_rec)
-                return len(manifest_list)
-            except FileExistsError:
-                continue  # lost the race: repack the winner's tree
-        raise RuntimeError(
-            f"rewriteManifests lost the commit race {max_attempts} times "
-            f"at {self.path}"
+            self._commit_snapshot(meta_num, meta, snap_rec)
+            return len(manifest_list)
+
+        return self._optimistic(
+            "rewriteManifests", attempt, max_attempts, buckets=set()
         )
 
     def _truncate(

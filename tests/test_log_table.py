@@ -353,3 +353,34 @@ def test_retention_is_written_once_in_the_core():
         for o in _retention_offences(sinks / name)
     ]
     assert not offenders, "second retention path: " + ", ".join(offenders)
+
+
+def _caught(handler: ast.ExceptHandler) -> set[str]:
+    types = handler.type.elts if isinstance(handler.type, ast.Tuple) else [handler.type]
+    return {t.id for t in types if isinstance(t, ast.Name)}
+
+
+def test_commit_retry_is_written_once_in_the_core():
+    # a lost put-if-absent race (FileExistsError) is retried only by
+    # LogTable._optimistic; a format catching it runs a second loop
+    sinks = pathlib.Path(log_table.__file__).parent
+    offenders = [
+        f"{name}:{node.lineno}"
+        for name in ("delta_log_sink.py", "iceberg_log_sink.py")
+        for node in ast.walk(ast.parse((sinks / name).read_text()))
+        if isinstance(node, ast.ExceptHandler)
+        and node.type is not None
+        and "FileExistsError" in _caught(node)
+    ]
+    assert not offenders, "second commit loop: " + ", ".join(offenders)
+
+
+@pytest.mark.parametrize("fmt", sorted(FORMATS))
+def test_expired_version_error_names_the_asked_version(spark, tmp_path, fmt):
+    sink = _table(spark, tmp_path, fmt)
+    for seq in (10, 11, 12):
+        sink.apply_batch(_batch(spark, [(seq % 8, seq, "MODIFY", seq + 0.5)]))
+    assert sink.expire_versions(keep_last=1) == [1, 2, 3]
+    for v in (1, 2, 3):
+        with pytest.raises(ValueError, match=f"version {v} expired"):
+            sink.snapshot(v)
